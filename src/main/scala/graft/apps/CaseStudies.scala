@@ -89,22 +89,6 @@ object CaseStudies {
       .select(col("window.start").cast("long").as("windowStart"), col("uv"))
   }
 
-  /** NetworkFlow Top-N URLs (reference NetworkFlow.scala:57-59,98-146):
-    * GET filter → 10min/5s sliding count per URL → top-N per window end.
-    * The reference's MapState+two-timer late-update machinery maps to
-    * update-mode re-emission (amended windows overwrite downstream).
-    */
-  def topUrls(logs: Dataset[ApacheLogEvent], topN: Int = 5,
-      size: String = "10 minutes", slide: String = "5 seconds"): DataFrame = {
-    val counts = logs.filter(col("method") === "GET")
-      .groupBy(window(col("ts"), size, slide), col("url"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.end").cast("long").as("windowEnd"), col("url"), col("cnt"))
-    counts.withColumn("rank", row_number().over(
-        Window.partitionBy(col("windowEnd")).orderBy(col("cnt").desc, col("url"))))
-      .filter(col("rank") <= topN)
-  }
-
   /** Login-fail detection (reference LoginFail.scala:57-104 /
     * LoginFailWithCep.scala:38-54): n consecutive fails within the window.
     */

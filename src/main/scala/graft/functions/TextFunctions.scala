@@ -106,10 +106,6 @@ object TextFunctions {
       .otherwise(lit(0.0))
   }
 
-  /** Punctuation character count. */
-  def punctCount(text: Column): Column =
-    length(regexp_replace(text, "[^.!?,;:]", ""))
-
   /** Content fingerprint: min md5 over sliding char n-grams (a
     * winnowing-style document signature; oracle-reproducible).
     */

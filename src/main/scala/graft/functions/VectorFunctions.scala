@@ -24,10 +24,6 @@ object VectorFunctions {
   /** Cosine similarity. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
 
-  /** Cosine rounded for cross-engine comparison. */
-  def cosineRounded(a: Column, b: Column, scale: Int = 4): Column =
-    round(cosine(a, b), scale)
-
   /** Signed random-hyperplane LSH signature for cosine similarity: `planes`
     * pseudo-random Rademacher (+1/-1) hyperplanes derived from xxhash64 of
     * (plane, dim) — deterministic, no stored model. Returns a bit array

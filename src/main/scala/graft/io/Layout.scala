@@ -136,18 +136,6 @@ object Layout {
     terms.reduce(_.bitwiseOR(_))
   }
 
-  /** Clamp an arbitrary numeric column into the [0, 2^bits) bucket space
-    * by linear min-max scaling (bounds supplied by the caller — at 100 TB
-    * they come from table stats, not a scan). Equal-width buckets keep
-    * the mapping order-preserving and engine-reproducible.
-    */
-  def zBucket(c: Column, lo: Long, hi: Long, bits: Int): Column = {
-    require(hi > lo, s"need hi > lo, got [$lo, $hi]")
-    val buckets = 1L << bits
-    least(lit(buckets - 1), greatest(lit(0L),
-      ((c.cast("double") - lo) / (hi - lo + 1) * buckets).cast("long")))
-  }
-
   /** Rewrite `df` z-ordered on the given pre-bucketed dimension columns
     * (repartitionByRange on the z-value, then in-partition sort): row
     * groups become multi-dimensionally clustered so min/max stats prune

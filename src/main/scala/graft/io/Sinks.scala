@@ -128,16 +128,6 @@ object Sinks {
       encode: Row => String = _.mkString(",")): DataStreamWriter[Row] =
     df.writeStream.foreach(socketWriter(host, port, encode))
 
-  /** JDBC append per micro-batch (reference day10/_12_SQL_MySQL.java:28-36);
-    * true upserts route through [[upsert]] with a JDBC-backed client.
-    */
-  def jdbcAppend(df: DataFrame, url: String, table: String,
-      props: java.util.Properties): DataStreamWriter[Row] =
-    df.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      batch.write.mode("append").jdbc(url, table, props)
-      ()
-    }
-
   /** Run one micro-batch exactly once: a committed-batch marker under
     * `ledgerDir` makes a checkpoint-replayed batchId a no-op. The marker
     * is written only AFTER `write` succeeds, so a crash between write and

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Source surface (reference §2.1): sockets, files (bounded + streamed
+/** Source surface (reference §2.1): files (bounded + streamed
   * directories), rate generators, Kafka, in-memory collections.
   *
   * Offsets/recovery: the reference hand-rolls at-least-once replay with
@@ -13,15 +13,6 @@ import org.apache.spark.sql.types.StructType
   * writer, nothing to build.
   */
 object Sources {
-
-  /** Line stream from a TCP socket (reference SocketSourceDemo.java:20). */
-  def socketLines(spark: SparkSession, host: String, port: Int): DataFrame =
-    spark.readStream.format("socket")
-      .option("host", host).option("port", port).load()
-
-  /** Bounded text read (reference FileSourceDemo.java:58). */
-  def textFile(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
 
   /** Streaming directory of CSV files with explicit schema (reference
     * filesystem+Csv table connector, cn/ngt/day10/_03_Source_File.java:30-39).
@@ -34,10 +25,6 @@ object Sources {
   def csv(spark: SparkSession, path: String, schema: StructType,
       header: Boolean = false): DataFrame =
     spark.read.schema(schema).option("header", header.toString).csv(path)
-
-  /** Streaming parquet directory. */
-  def parquetStream(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(path)
 
   /** Batch JSON-lines read with explicit schema (schema inference costs
     * a full extra pass — never at 100 TB).

@@ -748,10 +748,6 @@ object Dedup {
     agg.select(col(idCol), sig.as("simhash"))
   }
 
-  /** 32-bit md5 SimHash (kept as the compact oracle-checkable form). */
-  def simhash32Md5(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    simhashMd5(df, idCol, textCol, 32)
-
   /** Oracle-reproducible near-dup pairs over [[simhashMd5]]. */
   def simhashNearDupsMd5(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 4, prefixBits: Int = 8, bits: Int = 32): DataFrame = {

@@ -1,7 +1,7 @@
 package graft.sql
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Text-SQL surface (reference cn/ngt/day10/_09_SQL_Test.java:33,
   * _10_SQL_TestAgg.java:32, _11_SQL_KafkaToKafka.java:18-36): the
@@ -17,13 +17,6 @@ object SqlSurface {
     Tables.names.foreach { n =>
       Tables(spark, dir, n).createOrReplaceTempView(n)
     }
-
-  /** Register a streaming DataFrame as a queryable view (the reference's
-    * Kafka DDL shape): `sql` text can then select from it and the result
-    * is started with writeStream.
-    */
-  def registerStream(spark: SparkSession, name: String, df: DataFrame): Unit =
-    df.createOrReplaceTempView(name)
 
   /** Pure-DDL registration (reference day10/_11_SQL_KafkaToKafka.java:18-33
     * CREATE TABLE ... WITH (...)): every table becomes a temp view via SQL

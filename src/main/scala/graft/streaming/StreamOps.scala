@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming building blocks mapping the reference's DataStream surface
   * onto Structured Streaming:
@@ -327,14 +327,5 @@ object StreamOps {
   def setMultipleWatermarkPolicy(spark: SparkSession, policy: String): Unit = {
     require(policy == "min" || policy == "max", s"policy must be min|max: $policy")
     spark.conf.set("spark.sql.streaming.multipleWatermarkPolicy", policy)
-  }
-
-  /** Start a memory-sink query (test/dev), process everything, return it. */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode = OutputMode.Append)
-      : StreamingQuery = {
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable()
-    q
   }
 }

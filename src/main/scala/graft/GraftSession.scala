@@ -55,6 +55,18 @@ object GraftSession {
     *     it only takes effect on a session built before that point.
     *   - Another size: set the key on the builder AFTER tune() (builder
     *     configs are last-write-wins, so a value set before is replaced).
+    *
+    * Non-blocking cleanup: `spark.cleaner.referenceTracking.blocking` is
+    * false, as Spark's own default already is for shuffles. After a
+    * collection finds a finished query's plans unreachable, Spark's
+    * ContextCleaner removes their RDDs, accumulators and broadcasts one
+    * at a time; blocking, it waits on a round trip for each, and what
+    * the removals release (broadcast hash relations hold their rows in
+    * Tungsten pages) stays live until it reaches them. Measured after a
+    * pass of the eleven text-kernel queries (`local[4]`, 2 GB heap): a
+    * collection 100 ms after the first still found 17-63 MB of that pass
+    * live in 8 of 20 runs blocking and in none of 6 non-blocking; the
+    * next such pair of collections found none in either.
     */
   def tune(b: SparkSession.Builder,
       broadcastFuse: String = broadcastTimeout): SparkSession.Builder = b
@@ -67,6 +79,7 @@ object GraftSession {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.broadcastTimeout", broadcastFuse)
     .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
+    .config("spark.cleaner.referenceTracking.blocking", "false")
 
   /** Generated-class cache entries tune() sets (sizing: see [[tune]]). */
   val codegenCacheEntries: Int = 1000

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.TextFunctions
+import graft.functions.RepetitionImpl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -10,116 +10,56 @@ import org.apache.spark.sql.functions._
   * plus intra-document line dedup (keep first occurrence).
   *
   * Every per-document statistic here is computed WITHOUT a shuffle: the
-  * n-gram histogramming is a sorted-run-length fold over the document's own
-  * shingle array (a higher-order `aggregate`; NOTE: HOFs are
-  * CodegenFallback — interpreted, ~0.9 ms/doc/order — which is fine for
-  * the oracle-gated report but is why the hot-path FILTER uses the typed
-  * twin below), so at 100 TB the
-  * whole metrics pass is a map-only projection pipelined into the scan —
-  * no exploded token table ever materializes, nothing keys on doc_id.
-  * Contrast the corpus-level twins (Boilerplate document frequency, BM25
-  * postings), which genuinely need the shuffle because their unit of
-  * aggregation spans documents; a document's repetition score does not.
+  * report, the filter and the line statistics all run one typed row
+  * kernel, [[graft.functions.RepetitionImpl]]'s sort and run-length scan
+  * over the document's own units, inside a map-only projection pipelined
+  * into the scan — no exploded token table ever materializes, nothing
+  * keys on doc_id. Contrast the corpus-level twins (Boilerplate document
+  * frequency, BM25 postings), which genuinely need the shuffle because
+  * their unit of aggregation spans documents; a document's repetition
+  * score does not.
   *
   * Determinism: all emitted statistics are exact integers (counts and
-  * character tallies); tie-breaks on the modal n-gram go to the
-  * lexicographically smallest (the fold walks the sorted array and only a
-  * STRICTLY longer run displaces the incumbent). Fractions for filtering
-  * are derived, not emitted, so the gate surface stays hash-exact.
+  * code-point character tallies); the modal n-gram's ties go to the
+  * smallest in UTF-8 byte order (Spark's string order). Fractions for
+  * filtering are derived, not emitted, so the gate surface stays
+  * hash-exact.
   */
 object Repetition {
-
-  /** Accumulator/result field names for the run-length fold. */
-  private def runFold(sorted: Column): Column = {
-    val zero = struct(
-      lit("").as("prev"), lit(0L).as("run"),
-      lit(0L).as("nd"),        // distinct grams seen (finalized runs)
-      lit(0L).as("dup_occ"),   // occurrences beyond the first, over dup grams
-      lit(0L).as("dup_chars"), // chars covered by grams occurring > once
-      lit(0L).as("top_cnt"), lit("").as("top_gram"))
-    // Finalize the open run in `a`, then start a new run at `x`
-    // (x = null finalizes only). A run of length r for gram g contributes:
-    //   nd += 1; if r > 1: dup_occ += r-1, dup_chars += r*len(g);
-    //   top := (r, g) iff r > top_cnt  (strict: first max in sorted order
-    //   wins = lexicographically smallest argmax).
-    def step(a: Column, x: Column): Column = {
-      val closed = struct(
-        coalesce(x, lit("")).as("prev"),
-        when(x.isNull, lit(0L)).otherwise(lit(1L)).as("run"),
-        (a("nd") + when(a("run") > 0, 1L).otherwise(0L)).as("nd"),
-        (a("dup_occ") + when(a("run") > 1, a("run") - 1L).otherwise(0L))
-          .as("dup_occ"),
-        (a("dup_chars") +
-          when(a("run") > 1, a("run") * length(a("prev"))).otherwise(0L))
-          .as("dup_chars"),
-        when(a("run") > a("top_cnt"), a("run")).otherwise(a("top_cnt"))
-          .as("top_cnt"),
-        when(a("run") > a("top_cnt"), a("prev")).otherwise(a("top_gram"))
-          .as("top_gram"))
-      when(x.isNotNull && x === a("prev"),
-        struct(a("prev").as("prev"), (a("run") + 1L).as("run"),
-          a("nd").as("nd"), a("dup_occ").as("dup_occ"),
-          a("dup_chars").as("dup_chars"), a("top_cnt").as("top_cnt"),
-          a("top_gram").as("top_gram")))
-        .otherwise(closed)
-    }
-    val folded = aggregate(sorted, zero, step, a => step(a, lit(null)))
-    struct(
-      size(sorted).cast("long").as("total"),
-      folded("nd").as("distinct"),
-      folded("dup_occ").as("dup_occ"),
-      folded("dup_chars").as("dup_chars"),
-      folded("top_cnt").as("top_cnt"),
-      folded("top_gram").as("top_gram"))
-  }
-
-  /** Run-length statistics over one document's n-gram bag: struct
-    * (total, distinct, dup_occ, dup_chars, top_cnt, top_gram). Zero
-    * shuffle — a single `aggregate` over the sorted shingle array.
-    */
-  def ngramRunStats(text: Column, n: Int): Column =
-    runFold(array_sort(TextFunctions.wordShinglesAll(text, n)))
 
   /** Per-document repetition report for n-gram orders `ns`: for each n,
     * columns `n{n}_total, n{n}_distinct, n{n}_dup_occ, n{n}_dup_chars,
     * n{n}_top_cnt, n{n}_top_chars` (all BIGINT) plus `n1_top_gram` when
-    * 1 ∈ ns. Map-only at any corpus size.
+    * 1 ∈ ns. Map-only at any corpus size: one kernel call per document
+    * tokenizes once and scans every order
+    * ([[graft.functions.RepetitionImpl.report]]).
     */
   def ngramStats(df: DataFrame, idCol: String, textCol: String,
       ns: Seq[Int] = Seq(1, 2, 3)): DataFrame = {
-    val withS = ns.foldLeft(df) { (d, n) =>
-      d.withColumn(s"_rs$n", ngramRunStats(col(textCol), n))
-    }
-    val cols: Seq[Column] = col(idCol) +: ns.flatMap { n =>
-      val s = col(s"_rs$n")
+    val orders = ns.toArray
+    val kernel = udf((t: String) => RepetitionImpl.report(t, orders))
+    val cols: Seq[Column] = col(idCol) +: ns.zipWithIndex.flatMap { case (n, k) =>
+      val s = col("_rs")(k)
       val base = Seq(
         s("total").as(s"n${n}_total"),
         s("distinct").as(s"n${n}_distinct"),
-        s("dup_occ").as(s"n${n}_dup_occ"),
-        s("dup_chars").as(s"n${n}_dup_chars"),
-        s("top_cnt").as(s"n${n}_top_cnt"),
-        (s("top_cnt") * length(s("top_gram"))).as(s"n${n}_top_chars"))
-      if (n == 1) base :+ s("top_gram").as("n1_top_gram") else base
+        s("dupOcc").as(s"n${n}_dup_occ"),
+        s("dupChars").as(s"n${n}_dup_chars"),
+        s("topCnt").as(s"n${n}_top_cnt"),
+        s("topChars").as(s"n${n}_top_chars"))
+      if (n == 1) base :+ s("topGram").as("n1_top_gram") else base
     }
-    withS.select(cols: _*)
+    df.select(col(idCol), kernel(col(textCol)).as("_rs")).select(cols: _*)
   }
 
   /** Gopher-style repetition filter: keep documents whose
     *   duplicate-word fraction   (1 - distinct/total words)   <= maxDupWordFrac,
     *   top-bigram char fraction  (top2_chars / text chars)    <= maxTopBigramCharFrac,
     *   dup-trigram char fraction (dup3_chars / text chars)    <= maxDupTrigramCharFrac.
-    * Fractions are derived per row (doubles never aggregated). Map-only.
-    *
-    * Implemented as a TYPED row predicate
-    * ([[graft.functions.RepetitionImpl.keep]], same tokenizer and
-    * run-length rules as [[ngramRunStats]]): the column-fold form cost
-    * ~2.5 ms/doc — the interpreted HOF fold is ~0.9 ms per pass and a
-    * Filter gets no subexpression elimination, so every struct-field
-    * reference re-ran the fold — vs ~tens of µs/doc typed (the q134
-    * typed-flatMap precedent; RepetitionSpec pins decision parity with
-    * the fold-derived thresholds). Short-circuits per condition, so
-    * most rejects never compute the trigram pass. Null text drops, as
-    * the column condition's NULL did.
+    * Fractions are derived per row (doubles never aggregated). Map-only:
+    * a typed row predicate ([[graft.functions.RepetitionImpl.keep]]) over
+    * the same kernel as [[ngramStats]], so its decisions equal those
+    * thresholds applied to the report. Null text drops.
     */
   def filterByRepetition(df: DataFrame, idCol: String, textCol: String,
       maxDupWordFrac: Double = 0.6,
@@ -127,7 +67,7 @@ object Repetition {
       maxDupTrigramCharFrac: Double = 0.4): DataFrame = {
     val ti = df.schema.fieldIndex(textCol)
     df.filter { (r: org.apache.spark.sql.Row) =>
-      graft.functions.RepetitionImpl.keep(
+      RepetitionImpl.keep(
         if (r.isNullAt(ti)) null else r.getString(ti),
         maxDupWordFrac, maxTopBigramCharFrac, maxDupTrigramCharFrac)
     }
@@ -135,17 +75,17 @@ object Repetition {
 
   /** Split `text` into lines and report duplicate-line statistics:
     * (id, n_lines, n_distinct_lines, dup_line_chars, total_line_chars).
-    * Same zero-shuffle fold, unit = delimiter-separated segment.
+    * Same kernel, unit = delimiter-separated segment; null text gives
+    * null statistics.
     */
   def lineStats(df: DataFrame, idCol: String, textCol: String,
       delim: String = "\n"): DataFrame = {
-    val lines = split(col(textCol), java.util.regex.Pattern.quote(delim))
-    val s = runFold(array_sort(lines))
-    df.select(col(idCol), s("total").as("n_lines"),
-      s("distinct").as("n_distinct_lines"),
-      s("dup_chars").as("dup_line_chars"),
-      aggregate(lines, lit(0L), (a, x) => a + length(x))
-        .as("total_line_chars"))
+    val kernel = udf((t: String) => RepetitionImpl.lineStats(t, delim))
+    df.select(col(idCol), kernel(col(textCol)).as("_ls"))
+      .select(col(idCol), col("_ls.nLines").as("n_lines"),
+        col("_ls.nDistinct").as("n_distinct_lines"),
+        col("_ls.dupChars").as("dup_line_chars"),
+        col("_ls.totalChars").as("total_line_chars"))
   }
 
   /** Intra-document line dedup, keep FIRST occurrence, order preserved —

@@ -34,9 +34,8 @@ object SignalQueries extends QueryModule {
     // Gopher/MassiveText repetition report (Rae et al. 2021 A1.1) at
     // n = 1/2/3: totals, distincts, duplicate occurrences, duplicate-
     // covered characters, and the modal n-gram — ALL exact integers,
-    // computed per document by a sorted-run-length fold (higher-order
-    // aggregate) with ZERO shuffles; the only exchange is the output
-    // sort. The filter thresholds derive from these columns row-locally.
+    // computed per document by one typed sort-and-run-length row kernel
+    // with ZERO shuffles; the only exchange is the output sort. The filter thresholds derive from these columns row-locally.
     "q131_repetition" -> ((s, dir) => {
       import s.implicits._
       Repetition.ngramStats(Tables.documents(s, dir), "doc_id", "text",
@@ -166,10 +165,10 @@ object SignalQueries extends QueryModule {
         |    / CAST(n_tokens AS DOUBLE) / 1e6 AS ent_norm
         |FROM d ORDER BY doc_id""".stripMargin,
 
-    // Replays the run-length fold as explode + GROUP BY: per (doc, gram)
+    // Replays the run-length kernel as explode + GROUP BY: per (doc, gram)
     // counts, then per-doc integer aggregates; the modal gram is the
     // row_number()=1 row ordered (cnt DESC, gram ASC) — exactly the
-    // strict-displacement tie-break of the sorted fold.
+    // kernel's tie-break (smallest gram in byte order).
     "q131_repetition" ->
       """WITH words AS (
         |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w

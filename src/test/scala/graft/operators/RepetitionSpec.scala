@@ -1,6 +1,11 @@
 package graft.operators
 
-import graft.SparkSpec
+import java.io.File
+
+import graft.{SparkEntry, SparkSpec}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class RepetitionSpec extends SparkSpec {
@@ -59,26 +64,101 @@ class RepetitionSpec extends SparkSpec {
     assert(kept == Set(1L))
   }
 
+  /** Independent reference for [[Repetition.ngramStats]], in the SQL
+    * oracle's shape: explode each document's n-grams, count per
+    * (doc, gram), aggregate per doc, and take the modal gram as the
+    * `row_number() = 1` row ordered by (cnt DESC, gram). Documents
+    * without grams report zeros and an empty modal gram.
+    */
+  private def referenceStats(docs: DataFrame, ns: Seq[Int]): DataFrame = {
+    val words = docs.select($"doc_id", split(trim($"text"), "\\s+").as("w"))
+    ns.map { n =>
+      val p = s"n${n}_"
+      val grams = words.filter(size($"w") >= n)
+        .select($"doc_id", $"w",
+          explode(sequence(lit(1), size($"w") - (n - 1))).as("i"))
+        .select($"doc_id", concat_ws(" ",
+          (0 until n).map(j => element_at($"w", $"i" + j)): _*).as("g"))
+      val counts = grams.groupBy($"doc_id", $"g").agg(count(lit(1)).as("cnt"))
+      val totals = counts.groupBy($"doc_id").agg(
+        sum($"cnt").as(p + "total"),
+        count(lit(1)).as(p + "distinct"),
+        sum(when($"cnt" > 1, $"cnt" - 1).otherwise(0L)).as(p + "dup_occ"),
+        sum(when($"cnt" > 1, $"cnt" * length($"g")).otherwise(0L))
+          .as(p + "dup_chars"))
+      val top = counts
+        .withColumn("rn", row_number().over(
+          Window.partitionBy($"doc_id").orderBy($"cnt".desc, $"g")))
+        .filter($"rn" === 1)
+        .select($"doc_id", $"cnt".as(p + "top_cnt"),
+          ($"cnt" * length($"g")).as(p + "top_chars"), $"g".as(p + "top_gram"))
+      val longs = Seq("total", "distinct", "dup_occ", "dup_chars",
+        "top_cnt", "top_chars").map(p + _)
+      docs.select($"doc_id")
+        .join(totals, Seq("doc_id"), "left")
+        .join(top, Seq("doc_id"), "left")
+        .select(($"doc_id" +: longs.map(c =>
+            coalesce(col(c).cast("long"), lit(0L)).as(c))) :+
+          coalesce(col(p + "top_gram"), lit("")).as(p + "top_gram"): _*)
+    }.reduce(_.join(_, Seq("doc_id")))
+  }
+
+  /** The sf0.001 fixture documents plus edge rows: null, empty and
+    * whitespace-only text, a leading tab, fewer than n tokens, count ties
+    * and non-BMP text.
+    */
+  private lazy val paritySet: DataFrame = {
+    val fixtures = new File("../testdata/sf0.001/documents.parquet")
+    assert(fixtures.exists, s"fixtures not found at ${fixtures.getCanonicalPath}")
+    val emoji = "\uD83D\uDE00"
+    spark.read.parquet(fixtures.getCanonicalPath)
+      .select($"doc_id", $"text")
+      .union(Seq(
+        (999990L, null: String),
+        (999991L, ""),
+        (999992L, "   "),
+        (999993L, " \t \t "),
+        (999994L, "\tfoo bar foo\tbar"),
+        (999995L, "one"),
+        (999996L, "only two"),
+        (999997L, "b a b a c c"),
+        // U+1F600 and U+FF01 tie at 3: one character each, and U+FF01 is
+        // the smaller as UTF-8 (EF BC 81 < F0 9F 98 80), not as UTF-16
+        (999998L, s"$emoji \uFF01 $emoji \uFF01 x $emoji \uFF01"),
+        (999999L, emoji * 15 + " a b c a b c")
+      ).toDF("doc_id", "text"))
+  }
+
+  test("ngramStats matches the explode + group-by reference, every column") {
+    val ns = Seq(1, 2, 3)
+    val got = Repetition.ngramStats(paritySet, "doc_id", "text", ns)
+    val want = referenceStats(paritySet, ns).select(got.columns.map(col): _*)
+    assert(got.schema.map(_.dataType) == want.schema.map(_.dataType))
+    val g = got.orderBy($"doc_id").collect().toSeq
+    val w = want.orderBy($"doc_id").collect().toSeq
+    assert(g.length == w.length && g.length > 500)
+    g.zip(w).foreach { case (a, b) => assert(a == b) }
+  }
+
   test("typed filterByRepetition decisions match the fold-derived thresholds") {
     // the typed predicate (RepetitionImpl.keep) must agree row for row
-    // with the same thresholds computed from the oracle-gated column
-    // fold's report on the fixture corpus — plus a null-text row, which
-    // both forms drop
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select($"doc_id", $"text")
-      .union(Seq((999999L, null: String)).toDF("doc_id", "text"))
-    val typed = Repetition.filterByRepetition(docs, "doc_id", "text")
+    // with the same thresholds computed from the reference report (an
+    // explode + group-by fold over the n-grams); the null-text row drops
+    // in both (its character count is NULL), and the 15-emoji row is
+    // rejected only when characters are code points
+    val typed = Repetition.filterByRepetition(paritySet, "doc_id", "text")
       .select($"doc_id").as[Long].collect().toSet
-    val rep = Repetition.ngramStats(docs, "doc_id", "text", Seq(1, 2, 3))
-      .join(docs.select($"doc_id", length($"text").cast("double").as("ch")),
+    val rep = referenceStats(paritySet, Seq(1, 2, 3))
+      .join(paritySet.select($"doc_id", length($"text").cast("double").as("ch")),
         Seq("doc_id"))
-    val fold = rep.filter(
+    val fromReference = rep.filter(
         ($"n1_total" === 0 ||
           lit(1.0) - $"n1_distinct" / $"n1_total" <= 0.6) &&
         ($"ch" === 0 || $"n2_top_chars" / $"ch" <= 0.18) &&
         ($"ch" === 0 || $"n3_dup_chars" / $"ch" <= 0.4))
       .select($"doc_id").as[Long].collect().toSet
-    assert(typed == fold)
+    assert(typed == fromReference)
+    assert(!typed.contains(999990L))
     assert(!typed.contains(999999L))
   }
 
@@ -116,5 +196,22 @@ class RepetitionSpec extends SparkSpec {
     val plan2 = Repetition.dedupLinesWithinDoc(df, "doc_id", "text")
       .queryExecution.executedPlan.toString
     assert(!plan2.contains("Exchange"), s"unexpected shuffle:\n$plan2")
+  }
+
+  test("q131 and q135 plan no higher-order function over the text") {
+    // the report runs as a typed kernel; an interpreted aggregate() or
+    // transform() fold over the documents' text in either plan is the
+    // cost this pins out. q131 plans none at all; q135's only ones are
+    // the URL canonicalizer's query-parameter filter(), which reads the
+    // url, not the text.
+    val dir = new File("../testdata/sf0.001").getCanonicalPath
+    def hofs(q: String): Seq[HigherOrderFunction] =
+      SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
+        .collectWithSubqueries { case p => p }
+        .flatMap(_.expressions.flatMap(_.collect { case h: HigherOrderFunction => h }))
+    val q131 = hofs("q131_repetition")
+    assert(q131.isEmpty, s"q131 plans higher-order functions: ${q131.mkString("; ")}")
+    val q135 = hofs("q135_host_signals").filter(_.references.exists(_.name == "text"))
+    assert(q135.isEmpty, s"q135 folds over the text: ${q135.mkString("; ")}")
   }
 }

@@ -31,8 +31,9 @@ object Tables {
     * at corpus scale re-listing a many-thousand-file table per query is
     * exactly the repeated-listing cost guide §6 warns about (Spark's
     * own catalog tables persist their FileIndex for the same reason).
-    * Keyed by applicationId via [[graft.queries.SharedFrames]] (the
-    * Shared* discipline); the static test tables never change under a
+    * Keyed by session via [[graft.queries.SharedFrames]] (the Shared*
+    * discipline): a sibling session from `newSession()` resolves its own
+    * plan under its own conf. The static test tables never change under a
     * running app, and store-read gates build/read their own per-call
     * tmp paths directly, never through this.
     */

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import Checkpoints.{readStore, replaceStore}
 
 /** Daily-count anomaly detection (q177's operator form + its streaming
   * twin).
@@ -61,24 +62,15 @@ object Anomaly {
     * rollup merged ADDITIVELY into the parquet store (read-merge-
     * overwrite over ≤ |types|·|days| rows — the
     * [[Sketches.mergeBatchIntoStore]] shape with sum in place of HLL
-    * union). Eagerly materialized before the overwrite, since Spark
-    * cannot lazily read a path it is replacing.
+    * union), rewritten through [[Checkpoints.replaceStore]].
     */
   def mergeCountsIntoStore(batch: DataFrame, typeCol: String,
       tsCol: String, storePath: String): Unit = {
-    val spark = batch.sparkSession
     val newCounts = dailyCounts(batch, typeCol, tsCol)
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (fs.exists(p))
-        spark.read.parquet(storePath).unionByName(newCounts)
-          .groupBy(col("event_type"), col("day_num"))
-          .agg(sum(col("n")).as("n"))
-      else newCounts
-    val pinned = merged.localCheckpoint(true)
-    pinned.write.mode("overwrite").parquet(storePath)
-    Checkpoints.free(pinned)
+    replaceStore(readStore(batch.sparkSession, storePath).fold(newCounts)(
+      _.unionByName(newCounts)
+        .groupBy(col("event_type"), col("day_num"))
+        .agg(sum(col("n")).as("n"))), storePath)()
   }
 
   /** Streaming maintenance of the daily-count store under the

@@ -78,7 +78,7 @@ object Bpe {
     val merges = Seq.newBuilder[(String, String, Long)]
     var done = false
     var round = 0
-    while (round < nMerges && !done) {
+    try while (round < nMerges && !done) {
       val best = pairCounts(words)
         .orderBy(col("cnt").desc, col("a"), col("b"))
         .limit(1).collect()
@@ -90,11 +90,10 @@ object Bpe {
         val old = words
         words = words.withColumn("syms", applyMerge(col("syms"), a, b))
           .localCheckpoint(true)
-        old.unpersist()
+        Checkpoints.free(old)
       }
       round += 1
-    }
-    words.unpersist()
+    } finally Checkpoints.free(words)
     merges.result()
   }
 

@@ -109,7 +109,7 @@ object Clusters {
       // compute the double join twice.
       if (round == 0) {
         val jumped = neighborMinRound(labels, e).localCheckpoint()
-        freeCheckpoint(labels)
+        Checkpoints.free(labels)
         labels = jumped
       } else {
         val lv = relabelLive(e, labels).localCheckpoint()
@@ -128,7 +128,7 @@ object Clusters {
           // jump leaves the sum fixed; DECIMAL(38,0) so 100 TB of long
           // ids can't overflow) detects flatness — computed on entry
           // only, the one place a convergence probe is still needed.
-          freeCheckpoint(lv)
+          Checkpoints.free(lv)
           var sum = checksum(labels)
           var flat = false
           while (!flat) {
@@ -136,7 +136,7 @@ object Clusters {
             val ns = checksum(jumped)
             flat = ns == sum
             sum = ns
-            freeCheckpoint(labels)
+            Checkpoints.free(labels)
             labels = jumped
           }
           converged = true
@@ -168,20 +168,20 @@ object Clusters {
           val fContract = Future(contractLive(lv).localCheckpoint())
           val jumped = Await.result(fJump, Duration.Inf)
           val eNew = Await.result(fContract, Duration.Inf)
-          freeCheckpoint(e)
+          Checkpoints.free(e)
           e = eNew
-          freeCheckpoint(lv)
+          Checkpoints.free(lv)
           // the superseded round's checkpoint blocks are dead the moment
           // `jumped` materializes — free them now instead of waiting for
           // the ContextCleaner's GC-driven cleanup (25 stale |V|-row
           // snapshots is real eviction pressure at corpus scale)
-          freeCheckpoint(labels)
+          Checkpoints.free(labels)
           labels = jumped
         }
       }
       round += 1
     }
-    freeCheckpoint(e)
+    Checkpoints.free(e)
     // a non-converged result is silently WRONG (labels mid-propagation);
     // pointer jumping converges in O(log n) rounds, so hitting the cap
     // means something is broken — fail loudly, never return bad clusters
@@ -263,9 +263,6 @@ object Clusters {
   private def checksum(labels: DataFrame): java.math.BigDecimal =
     labels.agg(sum(col("label").cast("decimal(38,0)")).as("s"))
       .head().getDecimal(0)
-
-  /** See [[Checkpoints.free]] — the shared deterministic-release hook. */
-  private def freeCheckpoint(df: DataFrame): Unit = Checkpoints.free(df)
 
   /** Cluster-level dedup: resolve `pairs` into components and keep, per
     * component, only the row of `df` with the minimum id (rows in no pair

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import Checkpoints.{readStore, replaceStore}
 
 /** A/B experiment reporting (q176's operator form + its streaming
   * twin).
@@ -114,24 +115,16 @@ object Experiment {
 
   /** One micro-batch of assignment/conversion-store maintenance: the
     * batch's own per-user aggregates merged into the parquet store
-    * (read-merge-overwrite over ≤ |users| rows, eagerly materialized
-    * before the overwrite).
+    * (read-merge-overwrite over ≤ |users| rows, through
+    * [[Checkpoints.replaceStore]]).
     */
   def mergeAggregatesIntoStore(batch: DataFrame, userCol: String,
       typeCol: String, tsCol: String, idCol: String, propsCol: String,
       storePath: String): Unit = {
-    val spark = batch.sparkSession
     val newAgg = userAggregates(batch, userCol, typeCol, tsCol, idCol,
       propsCol)
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (fs.exists(p))
-        mergeUserAggregates(spark.read.parquet(storePath), newAgg)
-      else newAgg
-    val pinned = merged.localCheckpoint(true)
-    pinned.write.mode("overwrite").parquet(storePath)
-    Checkpoints.free(pinned)
+    replaceStore(readStore(batch.sparkSession, storePath)
+      .fold(newAgg)(mergeUserAggregates(_, newAgg)), storePath)()
   }
 
   /** Streaming maintenance of the per-user experiment store under the

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Checkpoints.{readStore, replaceStore}
 
 /** Mergeable heavy-hitter (frequent-item) summaries — Misra-Gries — and
   * the two-pass EXACT top-k they make affordable at corpus scale.
@@ -218,8 +219,8 @@ object Freq {
     * the bound — and prune to GUARANTEED hitters (est > n_total/(cap+1)
     * − est is the undercount certificate) without consulting anything
     * else. Tracking n_total costs one extra COUNT pass over the batch
-    * (batch-sized, never store-sized). The merged frame is eagerly
-    * materialized BEFORE the overwrite; exposed separately from
+    * (batch-sized, never store-sized). The store is rewritten through
+    * [[Checkpoints.replaceStore]]; exposed separately from
     * [[maintainTopHitters]] so restart/replay semantics are directly
     * testable.
     */
@@ -228,15 +229,13 @@ object Freq {
     val spark = batch.sparkSession
     val batchN = batch.filter(col(itemCol).isNotNull).count()
     val newSk = mgCandidates(batch, itemCol, capacity)
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (merged, total) =
-      if (fs.exists(p)) {
-        val stored = spark.read.parquet(storePath)
+    val (merged, total) = readStore(spark, storePath) match {
+      case Some(stored) =>
         val prevN = stored.agg(coalesce(max(col("n_total")), lit(0L)))
           .head().getLong(0)
         (mergeMg(stored, newSk, capacity), prevN + batchN)
-      } else (newSk, batchN)
+      case None => (newSk, batchN)
+    }
     // An adversarial batch can decrement a summary to ZERO rows (cap=1
     // over alternating items); n_total rides on rows, so an empty store
     // would silently reset the error bound — carry a null-item marker
@@ -246,14 +245,15 @@ object Freq {
     // isEmpty on the raw plan would execute the whole merge a second
     // time ahead of the localCheckpoint.
     import spark.implicits._
-    val pinned = merged.withColumn("n_total", lit(total))
-      .localCheckpoint(true)
-    val out =
-      if (total > 0L && pinned.isEmpty)
-        Seq((Option.empty[String], 0L, total)).toDF("item", "est", "n_total")
-      else pinned
-    out.write.mode("overwrite").parquet(storePath)
-    Checkpoints.free(pinned)
+    replaceStore(merged.withColumn("n_total", lit(total)), storePath) {
+      pinned =>
+        val out =
+          if (total > 0L && pinned.isEmpty)
+            Seq((Option.empty[String], 0L, total))
+              .toDF("item", "est", "n_total")
+          else pinned
+        out.write.mode("overwrite").parquet(storePath)
+    }
   }
 
   /** The certified read of a hitter store ([[mergeBatchIntoHitterStore]]
@@ -307,25 +307,21 @@ object Freq {
       .agg(count(lit(1)).as("n_total"))
     val newSk = mgCandidatesByGroup(batch, groupCol, itemCol, capacity,
       maxGroupsPerPartition)
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (merged, totals) =
-      if (fs.exists(p)) {
-        val stored = spark.read.parquet(storePath)
+    val (merged, totals) = readStore(spark, storePath) match {
+      case Some(stored) =>
         val prevTotals = stored.select(col("group"), col("n_total"))
           .distinct()
         val summed = prevTotals.unionByName(batchTotals)
           .groupBy(col("group")).agg(sum(col("n_total")).as("n_total"))
         (mergeMgByGroup(stored.filter(col("item").isNotNull), newSk,
           capacity), summed)
-      } else (newSk, batchTotals)
-    val pinned = merged
+      case None => (newSk, batchTotals)
+    }
+    replaceStore(merged
       .join(totals, Seq("group"), "right_outer")
       .withColumn("est", coalesce(col("est"), lit(0L)))
-      .select(col("group"), col("item"), col("est"), col("n_total"))
-      .localCheckpoint(true)
-    pinned.write.mode("overwrite").parquet(storePath)
-    Checkpoints.free(pinned)
+      .select(col("group"), col("item"), col("est"), col("n_total")),
+      storePath)()
   }
 
   /** Certified read of a grouped hitter store: items whose estimate

@@ -77,7 +77,7 @@ object Graphs {
         .select(col("id"), col("rank"))
       if (i % checkpointEvery == checkpointEvery - 1 && i != iters - 1) {
         rank = rank.localCheckpoint(true)
-        if (lastCp != null) lastCp.unpersist()
+        if (lastCp != null) Checkpoints.free(lastCp)
         lastCp = rank
       }
       i += 1

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Checkpoints.{readStore, replaceStore}
 
 /** Slowly-changing-dimension (type 2) versioning — the
   * dimension-maintenance half of a corpus pipeline: document metadata,
@@ -75,12 +76,11 @@ object Scd {
   }
 
   /** One micro-batch of version-store maintenance ([[applyBatch]] +
-    * read-merge-overwrite; the merged frame is eagerly materialized
-    * BEFORE the overwrite). Exposed separately from [[maintainScd2]] so
-    * restart/replay semantics are directly testable — a replayed batch
-    * is ALREADY a no-op by the dedup identity (its changes are in the
-    * store, dropDuplicates absorbs them), but the ledger still skips
-    * the wasted rewrite.
+    * read-merge-overwrite through [[Checkpoints.replaceStore]]). Exposed
+    * separately from [[maintainScd2]] so restart/replay semantics are
+    * directly testable — a replayed batch is ALREADY a no-op by the
+    * dedup identity (its changes are in the store, dropDuplicates
+    * absorbs them), but the ledger still skips the wasted rewrite.
     *
     * I/O caveat: the COMPUTE is proportional to the changed keys, but
     * this plain-parquet maintenance path rewrites the WHOLE store file
@@ -91,18 +91,10 @@ object Scd {
     * to affected buckets.
     */
   def mergeBatchIntoScdStore(batch: DataFrame, keyCols: Seq[String],
-      tsCol: String, tieCol: String, storePath: String): Unit = {
-    val spark = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (fs.exists(p))
-        applyBatch(spark.read.parquet(storePath), batch, keyCols, tsCol, tieCol)
-      else fromHistory(batch, keyCols, tsCol, tieCol)
-    val pinned = merged.localCheckpoint(true)
-    pinned.write.mode("overwrite").parquet(storePath)
-    Checkpoints.free(pinned)
-  }
+      tsCol: String, tieCol: String, storePath: String): Unit =
+    replaceStore(readStore(batch.sparkSession, storePath)
+      .fold(fromHistory(batch, keyCols, tsCol, tieCol))(
+        applyBatch(_, batch, keyCols, tsCol, tieCol)), storePath)()
 
   /** Streaming SCD2 maintenance: every micro-batch of change records is
     * applied to the parquet version store under the exactly-once batch
@@ -362,12 +354,10 @@ object Scd {
         val merged = applyBatch(slice, clean, keyCols, tsCol, tieCol)
           .withColumn(BucketCol, bucketOf(keyCols, nBuckets))
           .repartition(col(BucketCol)) // bounded files per bucket (see create path)
-        val pinned = merged.localCheckpoint(true)
-        pinned.write.mode("overwrite")
+        replaceStore(merged, storePath)(_.write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .option("maxRecordsPerFile", MaxRecordsPerStoreFile)
-          .partitionBy(BucketCol).parquet(storePath)
-        Checkpoints.free(pinned)
+          .partitionBy(BucketCol).parquet(storePath))
       }
     }
   }

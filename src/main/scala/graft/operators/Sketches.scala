@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import Checkpoints.{readStore, replaceStore}
 
 /** Mergeable distinct-count sketches (DataSketches HLL via the Spark
   * builtins) — the incremental-statistics discipline for a corpus that
@@ -109,25 +110,16 @@ object Sketches {
   /** One micro-batch of streaming sketch maintenance: build the batch's
     * own per-group sketches and merge them into the parquet store at
     * `storePath` (read-merge-overwrite; the store is G KB-sized rows,
-    * so the rewrite is metadata-cheap at any corpus size). The merged
-    * frame is eagerly materialized BEFORE the overwrite — Spark cannot
-    * lazily read a path it is replacing. Exposed separately from
+    * so the rewrite is metadata-cheap at any corpus size) through
+    * [[Checkpoints.replaceStore]]. Exposed separately from
     * [[maintainDistinctSketches]] so restart/replay semantics are
     * directly testable.
     */
   def mergeBatchIntoStore(batch: DataFrame, groupCol: String,
       keyCol: String, storePath: String, lgK: Int = 12): Unit = {
-    val spark = batch.sparkSession
     val newSk = distinctSketch(batch, groupCol, keyCol, lgK)
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (fs.exists(new org.apache.hadoop.fs.Path(storePath)))
-        mergeSketches(spark.read.parquet(storePath), newSk, groupCol)
-      else newSk
-    val pinned = merged.localCheckpoint(true)
-    pinned.write.mode("overwrite").parquet(storePath)
-    Checkpoints.free(pinned)
+    replaceStore(readStore(batch.sparkSession, storePath)
+      .fold(newSk)(mergeSketches(_, newSk, groupCol)), storePath)()
   }
 
   /** Streaming sketch maintenance — the incremental-monitoring
@@ -153,24 +145,15 @@ object Sketches {
     * merge(batch cubes) == cube(union) even with users overlapping
     * across batches). History is never rescanned: cost is the batch's
     * cube build plus a cells-sized merge, whatever the stored corpus
-    * size. The merged frame is eagerly materialized BEFORE the
-    * overwrite — Spark cannot lazily read a path it is replacing.
+    * size; the store is rewritten through [[Checkpoints.replaceStore]].
     * Exposed separately from [[maintainDistinctRollup]] so
     * restart/replay semantics are directly testable.
     */
   def mergeRollupIntoStore(batch: DataFrame, dims: Seq[String],
       keyCol: String, storePath: String, lgK: Int = 12): Unit = {
-    val spark = batch.sparkSession
     val newCube = distinctRollup(batch, dims, keyCol, lgK)
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (fs.exists(p))
-        mergeDistinctRollups(spark.read.parquet(storePath), newCube, dims)
-      else newCube
-    val pinned = merged.localCheckpoint(true)
-    pinned.write.mode("overwrite").parquet(storePath)
-    Checkpoints.free(pinned)
+    replaceStore(readStore(batch.sparkSession, storePath)
+      .fold(newCube)(mergeDistinctRollups(_, newCube, dims)), storePath)()
   }
 
   /** Streaming ROLLUP-cube maintenance — the live form of the
@@ -407,25 +390,16 @@ object Sketches {
     * domain-known grid). Unlike HLL registers, ADDITION IS NOT
     * IDEMPOTENT: a replayed batch would double every count, which is
     * exactly why the streaming form runs under the batch ledger. The
-    * merged frame is eagerly materialized BEFORE the overwrite — Spark
-    * cannot lazily read a path it is replacing. Exposed separately from
-    * [[maintainHistograms]] so restart/replay semantics are directly
-    * testable.
+    * store is rewritten through [[Checkpoints.replaceStore]]. Exposed
+    * separately from [[maintainHistograms]] so restart/replay semantics
+    * are directly testable.
     */
   def mergeHistogramsIntoStore(batch: DataFrame, groupCol: String,
       valueCol: String, grid: Grid, storePath: String): Unit = {
-    val spark = batch.sparkSession
     val newSk = histogramSketch(batch, groupCol, valueCol,
       grid.lo.toDouble, grid.hi.toDouble, grid.nBuckets)
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (fs.exists(p))
-        mergeHistograms(spark.read.parquet(storePath), newSk, groupCol)
-      else newSk
-    val pinned = merged.localCheckpoint(true)
-    pinned.write.mode("overwrite").parquet(storePath)
-    Checkpoints.free(pinned)
+    replaceStore(readStore(batch.sparkSession, storePath)
+      .fold(newSk)(mergeHistograms(_, newSk, groupCol)), storePath)()
   }
 
   /** Streaming histogram maintenance — the quantile-tier counterpart of

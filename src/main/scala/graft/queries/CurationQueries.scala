@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{Boilerplate, Bpe, Retrieval, Sampling, Similarity, Urls}
+import graft.operators.{Boilerplate, Bpe, Checkpoints, Retrieval, Sampling,
+  Similarity, Urls}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,10 +31,8 @@ object CurationQueries extends QueryModule {
     */
   private def sharedBmIndex(s: SparkSession, dir: String): Retrieval.TextIndex =
     SharedFrames.cached(s, "bm25", dir)(
-      Retrieval.buildIndex(Tables.documents(s, dir), "doc_id", "text")) { ix =>
-      Seq(ix.postings, ix.terms, ix.stats)
-        .foreach(df => scala.util.Try(df.unpersist(false)))
-    }
+      Retrieval.buildIndex(Tables.documents(s, dir), "doc_id", "text"))(
+      ix => Checkpoints.free(ix.postings))
 
   /** Deterministic messy URL derived from doc_id/source — shared by
     * q121 and q128 so the two gates can't drift apart; the matching

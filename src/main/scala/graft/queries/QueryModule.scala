@@ -23,8 +23,8 @@ trait QueryModule {
   * the family's bench cost (q141 additionally consumed the chain twice —
   * threshold construction + scored plan). The scored frame is
   * `localCheckpoint`ed so every consumer reads materialized partitions.
-  * Keyed by applicationId so a stopped session's dead checkpoint blocks
-  * are never reused.
+  * Keyed by session ([[SharedFrames]]), so a stopped session's dead
+  * checkpoint blocks are never reused.
   */
 object SharedLm {
   /** (doc_id, n_bigrams, lp_micro, avg_lp) — `Quality.bigramLogprob`
@@ -75,23 +75,29 @@ object SharedFrames {
   // no pinned blocks, eviction is reference-drop either way.
   private val maxEntries = 64
   private final case class Entry(value: Any)
-  private val cache = new java.util.LinkedHashMap[String, Entry](
+  // SparkSession has reference equality, so sibling sessions from
+  // newSession() (one SparkContext, different confs) get their own keys
+  private final case class Key(session: SparkSession, tag: String,
+      dir: String)
+  private val cache = new java.util.LinkedHashMap[Key, Entry](
     32, 0.75f, /*accessOrder=*/ true) {
     override def removeEldestEntry(
-        e: java.util.Map.Entry[String, Entry]): Boolean = size() > maxEntries
+        e: java.util.Map.Entry[Key, Entry]): Boolean = size() > maxEntries
   }
 
   /** The cached value for (this session, tag, dir), built from `mk` on
-    * first request. Keyed by applicationId so a stopped session's dead
-    * blocks are never reused. The build runs OUTSIDE the lock (it
-    * launches Spark jobs and must not serialize unrelated families); a
-    * lost build race is settled by releasing the LOSER (safe — it was
-    * never handed to any caller) and returning the winner. Eviction, by
-    * contrast, never releases — see the class doc.
+    * first request. Keyed by the session object: a frame is bound to
+    * the session that built it (its conf and its SparkContext, which
+    * never changes), so no other session — and no session built after
+    * a stop — is handed its frames or their dead blocks. The build runs
+    * OUTSIDE the lock (it launches Spark jobs and must not serialize
+    * unrelated families); a lost build race is settled by releasing the
+    * LOSER (safe — it was never handed to any caller) and returning the
+    * winner. Eviction, by contrast, never releases — see the class doc.
     */
   def cached[V](s: SparkSession, tag: String, dir: String)(
       mk: => V)(release: V => Unit): V = {
-    val key = s"${s.sparkContext.applicationId}:$tag:$dir"
+    val key = Key(s, tag, dir)
     val hit = cache.synchronized(Option(cache.get(key)))
     hit.map(_.value.asInstanceOf[V]).getOrElse {
       val built = mk
@@ -109,7 +115,7 @@ object SharedFrames {
   /** localCheckpoint'd-DataFrame convenience form of [[cached]]. */
   def get(s: SparkSession, tag: String, dir: String)(
       mk: => DataFrame): DataFrame =
-    cached(s, tag, dir)(mk.localCheckpoint())(df => { df.unpersist(false); () })
+    cached(s, tag, dir)(mk.localCheckpoint())(graft.operators.Checkpoints.free)
 }
 
 /** One corpus-wide exact-substring span dedup per (session, sf dir) —

@@ -16,4 +16,16 @@ class SessionSpec extends SparkSpec {
     assert(GraftSession.broadcastTimeout == "300" ||
       sys.env.contains("GRAFT_BROADCAST_TIMEOUT"))
   }
+
+  test("the Tables memo is per session: a newSession() sibling gets its own frame") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables").toString
+    spark.range(3).toDF("doc_id").write.parquet(s"$dir/documents.parquet")
+    val mine = Tables.documents(spark, dir)
+    assert(Tables.documents(spark, dir) eq mine)
+    val sibling = spark.newSession()
+    val theirs = Tables.documents(sibling, dir)
+    assert(!(theirs eq mine), "a sibling session was handed this session's frame")
+    assert(theirs.sparkSession eq sibling)
+    assert(Tables.documents(sibling, dir) eq theirs)
+  }
 }

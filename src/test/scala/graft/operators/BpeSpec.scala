@@ -62,6 +62,13 @@ class BpeSpec extends SparkSpec {
     assert(got == want, s"\ngot:  $got\nwant: $want")
   }
 
+  test("train releases every word table it pins") {
+    val docs = Seq("low lower lowest low low", "newer newest new low news")
+      .toDF("text")
+    val leaked = pinnedBy(Bpe.train(docs, "text", nMerges = 6))
+    assert(leaked.isEmpty, s"RDDs still pinned: $leaked")
+  }
+
   test("train matches the reference on real documents (8 merges)") {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")

@@ -173,4 +173,16 @@ class GraphsSpec extends SparkSpec {
     assert(sc.getPersistentRDDs.size <= before,
       s"cached RDDs leaked: ${sc.getPersistentRDDs.size - before}")
   }
+
+  test("pageRank frees each superseded rank checkpoint: free(result) leaves none") {
+    val edges = (1L to 300L).map(i => (i, (i * 7) % 300 + 1)).toDF("src", "dst")
+    // checkpoints at rounds 2 and 5: round 5's supersedes round 2's, and
+    // the edge, node and round-5 tables are the ones the result reads
+    val leaked = pinnedBy {
+      val result = Graphs.pageRank(edges, iters = 7, checkpointEvery = 3)
+      result.count()
+      Checkpoints.free(result)
+    }
+    assert(leaked.isEmpty, s"RDDs still pinned: $leaked")
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.{ForklessLocalFileSystem, ForklessLocalFs}
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with the engine's scale-oriented defaults.
@@ -15,6 +16,8 @@ import org.apache.spark.sql.SparkSession
   *     on a real cluster this would be executors*cores*2-3.
   *   - Spark's generated-class cache sized to graft's working set
   *     ([[codegenCacheEntries]]), so repeated queries reuse compiled code.
+  *   - A `file:` filesystem that gives Hadoop's answers without forking
+  *     `chmod` and `readlink` ([[io.ForklessRawLocalFileSystem]]).
   */
 object GraftSession {
 
@@ -67,6 +70,36 @@ object GraftSession {
     * collection 100 ms after the first still found 17-63 MB of that pass
     * live in 8 of 20 runs blocking and in none of 6 non-blocking; the
     * next such pair of collections found none in either.
+    *
+    * Local filesystem: `spark.hadoop.fs.file.impl` is
+    * [[io.ForklessLocalFileSystem]] and
+    * `spark.hadoop.fs.AbstractFileSystem.file.impl` is [[io.ForklessLocalFs]],
+    * the `FileSystem` and `FileContext` bindings of `file:` paths.
+    *   - Why: without libhadoop (not shipped with Spark's jars), Hadoop's
+    *     `RawLocalFileSystem` forks `chmod` for every file and directory
+    *     it creates and `readlink` for every `getFileLinkStatus`, which
+    *     `FileContext` calls around every rename. Spark's default
+    *     checkpoint manager renames every offset, commit and state-store
+    *     file through `FileContext`, so one `stream_apps` run of the
+    *     benchmark forked about 5k `readlink` and 1.4k `chmod`
+    *     processes. The `readlink` runs on `file:/...`, a string that
+    *     never resolves, so each of those forks answered "not a link".
+    *   - Same answers: the graft classes override only those two methods,
+    *     take the stock path wherever nio cannot give the stock answer
+    *     (sticky and set-id bits, symbolic links), and LocalFsSpec checks
+    *     them against stock Hadoop; only the forks go away.
+    *   - Untouched: Spark's checkpoint manager (still `FileContext`, with
+    *     its atomic overwriting rename), every other scheme, HDFS.
+    *   - JVM-wide cache: Hadoop caches `FileSystem` instances per scheme
+    *     and user, not per configuration. A `file:` filesystem created
+    *     before the first tuned session (say, by a plain `new
+    *     Configuration()` and `FileSystem.get`) stays the stock class for
+    *     the life of the JVM: still correct, just forking.
+    *   - Opt out: set the two keys back to Hadoop's classes
+    *     (`org.apache.hadoop.fs.LocalFileSystem` and
+    *     `org.apache.hadoop.fs.local.LocalFs`) on the builder AFTER
+    *     tune(), as for the codegen key. By the cache above, this holds
+    *     for `FileSystem` only in a JVM whose first tuned session opts out.
     */
   def tune(b: SparkSession.Builder,
       broadcastFuse: String = broadcastTimeout): SparkSession.Builder = b
@@ -80,6 +113,8 @@ object GraftSession {
     .config("spark.sql.broadcastTimeout", broadcastFuse)
     .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
     .config("spark.cleaner.referenceTracking.blocking", "false")
+    .config("spark.hadoop.fs.file.impl", classOf[ForklessLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForklessLocalFs].getName)
 
   /** Generated-class cache entries tune() sets (sizing: see [[tune]]). */
   val codegenCacheEntries: Int = 1000

@@ -18,6 +18,9 @@ import org.apache.spark.sql.SparkSession
   *     ([[codegenCacheEntries]]), so repeated queries reuse compiled code.
   *   - A `file:` filesystem that gives Hadoop's answers without forking
   *     `chmod` and `readlink` ([[io.ForklessRawLocalFileSystem]]).
+  *   - One executor class loader for every session, streams included,
+  *     so a new stream reuses the classes earlier queries compiled
+  *     (artifact isolation off; see [[tune]]).
   */
 object GraftSession {
 
@@ -49,11 +52,17 @@ object GraftSession {
     * already compiled (about 30% of the CPU time of the benchmark's
     * `text_kernels` pass of the same queries). At 1000 a repeated pass
     * compiles 4-12 (CodegenReuseSpec pins this).
-    *   - Bounded, not unlimited: every streaming query runs in a cloned
-    *     session whose new class loader changes the cache key, so streams
-    *     compile new classes every micro-batch for as long as they live
-    *     and an unbounded cache would grow with them. A retained class
-    *     costs about 8 KB of heap, so a full cache holds about 8 MB.
+    *   - Bounded, not unlimited: a plan whose generated source differs
+    *     from run to run (the few repeat compiles above) adds entries for
+    *     as long as the JVM lives, and so does a running stream. A new
+    *     stream no longer recompiles what earlier queries compiled (see
+    *     Artifact isolation below), but one 10 s open loop of the
+    *     benchmark's `stream_apps` workload (seed 401, `local[4]`) still
+    *     compiled 106 classes, against 126 with a class loader per
+    *     session: its micro-batches keep generating source the cache has
+    *     not seen. An unbounded cache would grow with a long-lived
+    *     stream. A retained class costs about 8 KB of heap, so a full
+    *     cache holds about 8 MB.
     *   - Static conf: Spark reads it once, at the JVM's first codegen, so
     *     it only takes effect on a session built before that point.
     *   - Another size: set the key on the builder AFTER tune() (builder
@@ -100,6 +109,37 @@ object GraftSession {
     *     `org.apache.hadoop.fs.local.LocalFs`) on the builder AFTER
     *     tune(), as for the codegen key. By the cache above, this holds
     *     for `FileSystem` only in a JVM whose first tuned session opts out.
+    *
+    * Artifact isolation: `spark.sql.artifact.isolation.enabled` is false,
+    * so every graft session runs its tasks under the executor's one
+    * default class loader.
+    *   - Why: Spark 4 turns the key on by default. Each session then tags
+    *     its jobs with its own artifact state, keyed by its session UUID,
+    *     and the executor builds a new class loader for each new UUID.
+    *     The codegen cache above is keyed by class loader, so every
+    *     session's tasks compile again each generated class they use,
+    *     and the JIT compiles it again. Every `writeStream.start()` runs
+    *     in a clone of the session with a new UUID, so every stream
+    *     start paid this. Measured with the same
+    *     checkpointed `StreamOps.windowedAgg` started three times, three
+    *     feeds each (`local[4]`): 26, 18 and 18 compiles with the key on,
+    *     26, 0 and 0 with it off (StreamCodegenReuseSpec pins this).
+    *   - Safe while graft adds no artifacts: the key isolates only the
+    *     jars, files, archives and class directories a session adds
+    *     (`addArtifact`, `addJar`, `addFile`, `addArchive`, `ADD JAR`).
+    *     Off, an artifact one session adds is visible to every session
+    *     with the key off. graft adds none, and ArtifactGuardSpec fails if
+    *     a source under `src/main` starts to. There is no narrower key:
+    *     `spark.sql.artifact.isolation.alwaysApplyClassloader` governs
+    *     only the driver's loader, while the executor's follows the job's
+    *     artifact state, which only this key removes.
+    *   - Read once: a session's artifact manager reads the key once and
+    *     keeps the value, so it belongs on the builder (Spark documents
+    *     that a change on a running session has no effect). A clone, and so
+    *     every stream, inherits its parent's value, and a `newSession()`
+    *     sibling takes it from the builder's options like any other key.
+    *   - Opt out: set the key back to `true` on the builder AFTER tune(),
+    *     as for the codegen key.
     */
   def tune(b: SparkSession.Builder,
       broadcastFuse: String = broadcastTimeout): SparkSession.Builder = b
@@ -115,6 +155,7 @@ object GraftSession {
     .config("spark.cleaner.referenceTracking.blocking", "false")
     .config("spark.hadoop.fs.file.impl", classOf[ForklessLocalFileSystem].getName)
     .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForklessLocalFs].getName)
+    .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** Generated-class cache entries tune() sets (sizing: see [[tune]]). */
   val codegenCacheEntries: Int = 1000

@@ -258,6 +258,11 @@ object CorpusQueries extends QueryModule {
       // re-derives its rows as a doc_id semi-join against the base scan
       // — still two corpus scans, per the house rule (guide §5 bounded
       // intermediates).
+      // Precondition: doc_id is unique in documents. The semi-join
+      // re-derives rows by id alone, so a duplicated doc_id would bring
+      // back the copy exact dedup dropped and change the per-lang counts
+      // (the oracle gate would catch it). It is not checked at run time:
+      // a check costs a Spark job on every run of the query.
       val survivorIds = d2.select($"doc_id").localCheckpoint(true)
       val d2r = docs.join(survivorIds, Seq("doc_id"), "left_semi")
       val heavy = Dedup.dupSpanCoverage(d2r, "doc_id", "text", n = 5)

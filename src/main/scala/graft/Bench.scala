@@ -241,9 +241,9 @@ object Bench {
         // isolate queries: drop cached plans and let the ContextCleaner free
         // dead localCheckpoint/persist blocks BEFORE the clock starts, so a
         // block-leaving operator (pairJaccard, the CC loop) taxes neither its
-        // successors nor its own second run. Same fix as ScaleSmoke's phase
-        // isolation, which measured the effect at up to 6x (CC 148 s inside
-        // a polluted run vs 28 s cold).
+        // successors nor its own second run. Measured at up to 6x on the CC
+        // loop at 80x corpus scale (148 s inside a polluted run vs 28 s
+        // cold).
         spark.catalog.clearCache()
         System.gc()
         val t0 = System.nanoTime()

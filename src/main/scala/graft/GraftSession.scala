@@ -28,7 +28,7 @@ object GraftSession {
     *
     * Broadcast fuse: the Spark default (300 s) unless the caller passes
     * `broadcastFuse` explicitly. Our own entry points (Bench/Verify/
-    * ScaleSmoke/StreamBench/local) pass [[longFuse]] — this box has
+    * local) pass [[longFuse]] — this box has
     * intermittent multi-x degradation windows (SCALE.md round-11b) under
     * which a broadcast build can blow 300 s and abort a whole run
     * spuriously; their broadcast sides are all bounded by design,
@@ -161,7 +161,7 @@ object GraftSession {
   val codegenCacheEntries: Int = 1000
 
   /** Seconds before an unfinished broadcast build aborts the query.
-    * `longFuse` is what Bench/Verify/ScaleSmoke/StreamBench and the test
+    * `longFuse` is what Bench/Verify and the test
     * JVMs pass as tune()'s `broadcastFuse` argument. */
   def broadcastTimeout: String =
     sys.env.getOrElse("GRAFT_BROADCAST_TIMEOUT", "300")

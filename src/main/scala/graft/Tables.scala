@@ -43,7 +43,7 @@ object Tables {
 
   /** Normalize a `ts` column (either stored encoding — see class doc) to
     * TimestampType. Public so streaming readers over the same parquet
-    * (ParitySpec's file-stream replay, StreamBench) share one rule.
+    * (ParitySpec's file-stream replay) share one rule.
     */
   def normalizeTs(df: DataFrame): DataFrame =
     df.schema.fields.foldLeft(df) { (acc, f) =>

@@ -223,8 +223,9 @@ object Clusters {
     * (one |V|-bounded shuffle after map-side combine); (b) pointer
     * jump: label := label(label) — every label value is a node id
     * present in `labels`, so the lookup always hits. Factored out so
-    * ScaleSmoke can plan-gate the shapes that repeat every round (the
-    * loop's checkpoints hide them from the final plan).
+    * ClustersSpec's "CC loop rounds" test can plan-gate the shapes that
+    * repeat every round (the loop's checkpoints hide them from the final
+    * plan).
     */
   private[graft] def liveRound(labels: DataFrame, live: DataFrame): DataFrame = {
     val via = live.select(col("d").as("id"), col("ls").as("cand"))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * (`scala/src/main/scala/com/ngt/wc/StreamWordCount.scala:15-20` —
   * flatMap-split, key, running count)
   * generalized from unigrams to windowed pairs; the streaming twin in
-  * StreamBench runs it in update mode exactly like that demo.
+  * StreamingAppsSpec runs it in update mode exactly like that demo.
   *
   * For every token position and
   * every offset d ∈ [1, window], the (center, context) pair is counted
@@ -42,8 +42,8 @@ object Cooccurrence {
     */
   /** Per-document pair kernel: every symmetric (center, context,
     * 1000000/d) emission for one text — shared by the batch aggregate
-    * and the streaming update-mode counter (StreamBench's
-    * skipgram_count twin).
+    * and the streaming update-mode counter (StreamingAppsSpec's
+    * skip-gram twin).
     */
   private[graft] def pairIter(text: String,
       window: Int): Iterator[(String, String, Long)] = {

@@ -3,8 +3,7 @@ package graft.plans
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Shared executed-plan traversal for scale-shape assertions (used by
-  * ScaleSmoke and the plan-gating specs — one copy, so the checks can't
-  * drift). `walk` crosses AQE boundaries (AdaptiveSparkPlanExec, query
+  * the plan-gating specs — one copy, so the checks can't drift). `walk` crosses AQE boundaries (AdaptiveSparkPlanExec, query
   * stages, reused subqueries), which plain `children` recursion does
   * not: a materialized shuffle stage is a LEAF whose real subtree hangs
   * off `plan`.
@@ -53,7 +52,7 @@ object PlanWalk {
     * ever; BroadcastNestedLoopJoin only where the operator broadcasts a
     * designed small side (query batch / centroids / 1-row stats);
     * no partitionless window over raw (unaggregated) rows. Shared by
-    * ScaleSmoke and PlanGateSpec so the checks can't drift.
+    * PlanGateSpec and the operator specs so the checks can't drift.
     */
   def assertShapes(op: String, root: SparkPlan,
       allowBroadcastNlj: Boolean): Unit = {

@@ -379,8 +379,8 @@ class StreamingAppsSpec extends SparkSpec {
       .outputMode("append").start()
     try {
       def stateRows: Long = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      // the StreamBench tx_match shape: pays land one batch BEFORE their
-      // receipts, so pending claims are observable at the batch boundary
+      // staggered input: pays land one batch BEFORE their receipts, so
+      // pending claims are observable at the batch boundary
       // (same event time for all — a time spread would let the leading
       // pays' deadlines fall behind the batch-end watermark and expire
       // before the sample)

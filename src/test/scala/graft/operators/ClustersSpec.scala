@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.plans.PlanWalk
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
@@ -10,6 +11,18 @@ class ClustersSpec extends SparkSpec {
 
   private def docs = spark.read
     .parquet("/root/testdata/sf0.001/documents.parquet")
+
+  /** `rep` copies of every doc under disjoint id ranges: replica 1 is
+    * verbatim (an exact dup of every doc) and replicas 2..rep-1 append a
+    * tag (near-dups with Jaccard < 1), so the CC loop sees real dup
+    * clusters that take more than one round to settle.
+    */
+  private def replicateDocs(rep: Int) = docs
+    .select(explode(sequence(lit(0), lit(rep - 1))).as("r"), $"doc_id",
+      $"text")
+    .select(($"r" * 10000000L + $"doc_id").as("doc_id"),
+      when($"r" <= 1, $"text")
+        .otherwise(concat($"text", lit(" zz"), $"r")).as("text"))
 
   private def cc(edges: Seq[(Long, Long)]): Map[Long, Long] =
     Clusters.connectedComponents(edges.toDF("id_a", "id_b"))
@@ -62,6 +75,43 @@ class ClustersSpec extends SparkSpec {
     val got = cc(edges)
     assert(got == Map(0L -> 0L, 9L -> 0L, 8L -> 0L,
       5L -> 0L, 6L -> 0L, 4L -> 0L))
+  }
+
+  test("CC loop rounds: each round's executed plan passes the scale gate at its exchange budget") {
+    // connectedComponents checkpoints every round, so the q80/q85/q144
+    // gates in PlanGateSpec see only the final checkpoint scan. Replay
+    // one round of each kind here, every input checkpointed as the loop
+    // does, so each step's shuffle count is its own per-round cost.
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = { pinned += df.localCheckpoint(); pinned.last }
+    /** Gate one step's executed plan; the exchange count is the measured
+      * one at local[4], so one more (or one fewer) fails.
+      */
+    def gated(op: String, df: DataFrame, exchanges: Int): DataFrame = {
+      df.count()
+      val plan = df.queryExecution.executedPlan
+      PlanWalk.assertShapes(op, plan, allowBroadcastNlj = false)
+      assert(PlanWalk.shuffleExchangeCount(plan) == exchanges,
+        s"$op: ${PlanWalk.shuffleExchangeCount(plan)} shuffle exchanges, " +
+          s"pinned $exchanges:\n$plan")
+      pin(df)
+    }
+    try {
+      val e = pin(Dedup.minhashCandidatesFast(replicateDocs(4), "doc_id",
+          "text", 3, 16, 8)
+        .select($"id_a".cast("long").as("s"), $"id_b".cast("long").as("d")))
+      val labels0 = pin(e.select($"s".as("id")).union(e.select($"d".as("id")))
+        .distinct().withColumn("label", $"id"))
+      // neighbor-min aggregate + the labels side of its join
+      val r0 = gated("cc_round0", Clusters.neighborMinRound(labels0, e), 2)
+      // two shuffle_hash joins, both sides exchanged: |V| never broadcasts
+      val live = gated("cc_relabel", Clusters.relabelLive(e, r0), 4)
+      assert(live.count() > 0, "round 0 settled every edge: no later round to gate")
+      // min-label aggregate + its join + the pointer-jump self-join
+      val r1 = gated("cc_round1", Clusters.liveRound(r0, live), 4)
+      gated("cc_contract", Clusters.contractLive(live), 1)
+      gated("cc_pointer_jump", Clusters.pointerJump(r1), 2)
+    } finally pinned.foreach(Checkpoints.free)
   }
 
   test("dedupByClusters keeps the min-id row per component and all unpaired rows") {

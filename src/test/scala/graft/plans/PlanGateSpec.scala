@@ -1,14 +1,16 @@
 package graft.plans
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{SparkEntry, SparkSpec, Tables}
+import graft.operators.{Dedup, Pca, Quality, Scd, Selection, Similarity}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-/** The 100 TB plan-shape gate over EVERY gate query (not just the corpus
-  * operators ScaleSmoke exercises): each `SparkEntry.queries` entry runs
-  * at sf0.001 and its EXECUTED plan must carry no CartesianProduct, no
+/** The 100 TB plan-shape gate over EVERY gate query, plus the operator
+  * calls no query's returned plan carries (`operatorGate`): each runs at
+  * sf0.001 and its EXECUTED plan must carry no CartesianProduct, no
   * BroadcastNestedLoopJoin outside the designed-broadcast allowlist, and
-  * no partitionless WindowExec over unaggregated rows. This converts the
-  * ScaleSmoke shape contract into a regression test: a future query that
-  * ships a single-task window or an accidental cross join fails
+  * no partitionless WindowExec over unaggregated rows. A future query
+  * that ships a single-task window or an accidental cross join fails
   * `sbt test`, not a 100 TB run.
   */
 class PlanGateSpec extends SparkSpec {
@@ -71,7 +73,7 @@ class PlanGateSpec extends SparkSpec {
     * `repartition`/lost-broadcast fails here. Queries whose operators
     * run their own jobs during CONSTRUCTION (the CC loop) are budgeted
     * on the final returned plan only — the loop's internal shuffles are
-    * gated by ClustersSpec/ScaleSmoke instead.
+    * gated by ClustersSpec's "CC loop rounds" test instead.
     */
   private val exchangeBudget: Map[String, Int] = Map(
     "q01_pricing_summary" -> 2,
@@ -490,6 +492,72 @@ class PlanGateSpec extends SparkSpec {
     // exchange |dims|·|groups|-sized or smaller
     "q201_diversity" -> 5)
 
+  /** Second input to the same gate: operator calls whose plan no gate
+    * query's RETURNED plan carries. The query surface uses a sibling
+    * form (simhashNearDupsMd5, lshTopKMd5, Pca.gramianMicro), consumes
+    * the operator during construction (the CC loop over q144's pairs,
+    * the SharedLm/SharedSpanDedup checkpoints behind q134/q142, the
+    * pairJaccard checkpoint over q44's candidates), or has no query at
+    * all (the stored IVF searches, dsirScores, applyBatch). The flag is
+    * allowBroadcastNlj, set as for allowBnlj: only a designed small side
+    * (query batch, centroids, 1-row stats) may broadcast into a BNLJ.
+    * Each build gets the session and a fresh path for the index or store
+    * it writes.
+    */
+  private val operatorGate: Seq[(String, Boolean, (SparkSession, String) => DataFrame)] = {
+    def docs(s: SparkSession) = Tables.documents(s, dir)
+    def emb(s: SparkSession) = Tables.embeddings(s, dir)
+    def queries(s: SparkSession) = emb(s).filter(col("vec_id") < 50)
+    Seq(
+      ("minhash_candidates", false, (s, _) =>
+        Dedup.minhashCandidatesFast(docs(s), "doc_id", "text", 3, 16, 8)),
+      ("simhash_neardups", false, (s, _) =>
+        Dedup.simhashNearDups(docs(s), "doc_id", "text", maxHamming = 3,
+          prefixBits = 12)),
+      ("exactsubstr_dedup", false, (s, _) =>
+        Dedup.dedupSpansKeepFirst(docs(s), "doc_id", "text", n = 8)),
+      ("bigram_lm", true, (s, _) =>
+        Quality.bigramLogprob(docs(s), "doc_id", "text")),
+      ("dsir_scores", true, (s, _) =>
+        Selection.dsirScores(docs(s).withColumn("is_tgt", col("lang") === "en"),
+          "doc_id", "text", "is_tgt", buckets = 1024)),
+      ("ann_lsh", true, (s, _) =>
+        Similarity.lshTopK(queries(s), emb(s), "vec_id", "embedding", k = 10)),
+      ("ann_ivfpq_rerank", true, (s, _) =>
+        Similarity.ivfPqRerankTopK(queries(s), emb(s), "vec_id", "embedding",
+          k = 10, shortlist = 50)),
+      ("ivf_search_stored", true, (s, tmp) => {
+        Similarity.ivfWriteIndex(emb(s), "vec_id", "embedding", tmp, nlist = 32)
+        Similarity.ivfSearchStored(s, tmp, queries(s), "vec_id", "embedding",
+          k = 10, nProbe = 4)
+      }),
+      ("ivfpq_search_stored", true, (s, tmp) => {
+        Similarity.ivfPqWriteIndex(emb(s), "vec_id", "embedding", tmp, nlist = 32)
+        Similarity.ivfPqSearchStored(s, tmp, queries(s), "vec_id", "embedding",
+          k = 10, nProbe = 4)
+      }),
+      ("sq8_neardup", false, (s, _) =>
+        // ~64 vectors per block over the 500-vector fixture
+        Similarity.blockedNearDupsSq8(emb(s).withColumn("blk",
+            pmod(xxhash64(col("vec_id")), lit(8L))),
+          "vec_id", "embedding", "blk", threshold = 0.2, dim = 64)),
+      ("pca_fit_project", false, (s, _) =>
+        Pca.transform(emb(s), "embedding",
+            Pca.fit(emb(s), "embedding", dim = 64, k = 4))
+          .select(col("vec_id"), col("pc1"), col("pc4"))),
+      ("scd2_apply_batch", false, (s, tmp) => {
+        // the store is a parquet table, as maintainScd2 keeps it
+        val ev = Tables.events(s, dir)
+          .select("user_id", "event_type", "ts", "event_id")
+        val inBatch = pmod(col("user_id"), lit(10)) === 0 &&
+          pmod(col("event_id"), lit(2)) === 0
+        Scd.fromHistory(ev.filter(!inBatch), Seq("user_id"), "ts", "event_id")
+          .write.parquet(s"$tmp/store")
+        Scd.applyBatch(s.read.parquet(s"$tmp/store"), ev.filter(inBatch),
+          Seq("user_id"), "ts", "event_id")
+      }))
+  }
+
   test("README gate count matches the declared query surface") {
     // counts in prose drift (the round-15 README lagged by one); pin
     // the gate count to the code so a hand-bump can't go stale
@@ -524,6 +592,18 @@ class PlanGateSpec extends SparkSpec {
     val n = PlanWalk.shuffleExchangeCount(df.queryExecution.executedPlan)
     assert(n > exchangeBudget(name),
       s"injected repartition invisible: counted $n <= budget ${exchangeBudget(name)}")
+  }
+
+  operatorGate.foreach { case (name, bnlj, build) =>
+    test(s"operator $name executed plan passes the scale-shape gate") {
+      val tmp = java.nio.file.Files.createTempDirectory(s"gate_$name").toFile
+      try {
+        val df = build(spark, s"${tmp.getPath}/out")
+        df.count()
+        PlanWalk.assertShapes(name, df.queryExecution.executedPlan,
+          allowBroadcastNlj = bnlj)
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+    }
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

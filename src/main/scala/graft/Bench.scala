@@ -14,49 +14,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus),
-      GraftSession.longFuse)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup: touch the fact tables + exercise codegen once; also build
-    // the retrieval family's SHARED session BM25 index (q116/q120/q127
-    // — build-once/search-many) OUTSIDE the timed region, so each
-    // family gate prices its own SEARCH instead of whichever query runs
-    // first absorbing the one-time index build (a 5× per-query
-    // accounting swing across otherwise-identical runs, round-16
-    // verdict finding #2; BASELINE.md names the convention)
-    // ...and run q104 itself once: the start-of-run sentinel probe
-    // below must measure the BOX, not q104's one-time codegen/JIT cost
-    // — an unwarmed first probe reads systematically high and the
-    // BASELINE.md reading rule would then adjust first-half queries
-    // against an inflated baseline, masking real first-half moves
-    val sentinelFn = SparkEntry.queries
-      .find(kv => shortKey(kv._1) == "104").map(_._2)
-    // ...and the remaining Shared* session frames (round-17 verdict #1,
-    // extending the same convention): the span-dedup corpus
-    // (q142/q146/q148), the DSIR table (q136/q139) and the bigram-LM
-    // scored frame (q134/q137/q141) are build-once/consume-many session
-    // materializations — pre-building them here makes each family gate
-    // price its own CONSUMPTION instead of whichever query runs first
-    // absorbing the shared build (q146 swung 0.55↔1.92 s between
-    // same-plan runs on that accounting alone). BASELINE.md re-bases
-    // the six family queries.
-    try {
-      Tables.lineitem(spark, sfDir).count()
-      Tables.events(spark, sfDir).count()
-      SparkEntry.queries.get("q01_pricing_summary").foreach(_(spark, sfDir).count())
-      SparkEntry.queries.get("q116_bm25_retrieval").foreach(_(spark, sfDir).count())
-      queries.SharedSpanDedup.deduped(spark, sfDir).count()
-      queries.SharedDsir.table(spark, sfDir).count()
-      queries.SharedLm.scored(spark, sfDir).count()
-    } catch { case _: Throwable => () }
-    // its own try: a transient failure in the earlier warmup steps must
-    // not silently skip the q104 warm and reinstate the cold-probe bias
-    try sentinelFn.foreach(_(spark, sfDir).count())
-    catch { case _: Throwable => () }
+    // SPARK_GRAFT_BENCH_ONLY=q44_minhash_fast,q24_minhash_lsh runs a
+    // subset while iterating; unset (driver contract) runs everything.
+    val onlyVar = "SPARK_GRAFT_BENCH_ONLY"
+    val selected = SparkEntry.selectedBy(onlyVar)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    warmUp(spark, sfDir)
     // best of 2 runs per query: single-run local[32] numbers swing 2-4x
     // on sub-second queries (JIT/GC timing), which reads as a phantom
     // regression round over round; min-of-2 measures the query, not the
@@ -64,19 +27,6 @@ object Bench {
     val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
       .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
       .getOrElse(2).max(1)
-    // SPARK_GRAFT_BENCH_ONLY=q44_minhash_fast,q24_minhash_lsh runs a
-    // subset while iterating; unset (driver contract) runs everything.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names no such query: ${unknown.mkString(", ")}")
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
     // intra-run regime probes: this box has degradation windows that
     // hit shuffle-heavy queries harder than the CPU-bound q104
     // sentinel, and a single per-run sentinel can't distinguish
@@ -89,7 +39,7 @@ object Bench {
     // measurements — single-run by design (best-of-2 would hide the
     // very drift they exist to show); q104's own best-of-2 timing in
     // the per-query map is unchanged.
-    def probeSentinel(): Double = sentinelFn.map { fn =>
+    def probeSentinel(): Double = sentinel.map { fn =>
       spark.catalog.clearCache()
       System.gc()
       val t0 = System.nanoTime()
@@ -120,12 +70,57 @@ object Bench {
     // it (a 4-query iteration artifact in its place reads as 201
     // missing queries and a phantom 10× speedup to the next round's
     // comparison; this bit round 17)
-    if (only.isEmpty)
+    if (!sys.env.contains(onlyVar))
       scala.util.Try(java.nio.file.Files.writeString(
         java.nio.file.Paths.get("BENCH_DETAIL.json"),
         detailJson(results, sfNum, sentinels)))
     println(benchLine(results, sfNum, sentinels))
     spark.stop()
+  }
+
+  /** The q104 query whose single-shot timings are the run's sentinels. */
+  private lazy val sentinel: Option[(SparkSession, String) => DataFrame] =
+    SparkEntry.queries.find(kv => shortKey(kv._1) == "104").map(_._2)
+
+  /** Runs before any timed query, so JVM/codegen/file-cache warmup and
+    * one-time session builds are attributed to no query. Failures are
+    * ignored: the timed runs report them.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    // warmup: touch the fact tables + exercise codegen once; also build
+    // the retrieval family's SHARED session BM25 index (q116/q120/q127
+    // — build-once/search-many) OUTSIDE the timed region, so each
+    // family gate prices its own SEARCH instead of whichever query runs
+    // first absorbing the one-time index build (a 5× per-query
+    // accounting swing across otherwise-identical runs, round-16
+    // verdict finding #2; BASELINE.md names the convention)
+    // ...and the remaining Shared* session frames (round-17 verdict #1,
+    // extending the same convention): the span-dedup corpus
+    // (q142/q146/q148), the DSIR table (q136/q139) and the bigram-LM
+    // scored frame (q134/q137/q141) are build-once/consume-many session
+    // materializations — pre-building them here makes each family gate
+    // price its own CONSUMPTION instead of whichever query runs first
+    // absorbing the shared build (q146 swung 0.55↔1.92 s between
+    // same-plan runs on that accounting alone). BASELINE.md re-bases
+    // the six family queries.
+    try {
+      Tables.lineitem(spark, sfDir).count()
+      Tables.events(spark, sfDir).count()
+      SparkEntry.queries.get("q01_pricing_summary").foreach(_(spark, sfDir).count())
+      SparkEntry.queries.get("q116_bm25_retrieval").foreach(_(spark, sfDir).count())
+      queries.SharedSpanDedup.deduped(spark, sfDir).count()
+      queries.SharedDsir.table(spark, sfDir).count()
+      queries.SharedLm.scored(spark, sfDir).count()
+    } catch { case _: Throwable => () }
+    // ...and run q104 itself once: the start-of-run sentinel probe
+    // must measure the BOX, not q104's one-time codegen/JIT cost — an
+    // unwarmed first probe reads systematically high and the
+    // BASELINE.md reading rule would then adjust first-half queries
+    // against an inflated baseline, masking real first-half moves.
+    // Its own try: a transient failure in the earlier warmup steps must
+    // not silently skip the q104 warm and reinstate the cold-probe bias
+    try sentinel.foreach(_(spark, sfDir).count())
+    catch { case _: Throwable => () }
   }
 
   /** The driver captures only the LAST 2000 chars of stdout and parses the

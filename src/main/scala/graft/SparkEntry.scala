@@ -33,6 +33,22 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.flatMap(_.queries).toMap
 
+  /** The queries `envVar` names (comma-separated, e.g.
+    * `SPARK_GRAFT_BENCH_ONLY=q44_minhash_fast,q24_minhash_lsh`), or every
+    * query when it is unset. A name that is no query fails loudly.
+    */
+  def selectedBy(envVar: String, env: collection.Map[String, String] = sys.env)
+      : Map[String, (SparkSession, String) => DataFrame] =
+    env.get(envVar) match {
+      case None => queries
+      case Some(list) =>
+        val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+        val unknown = names -- queries.keySet
+        require(unknown.isEmpty,
+          s"$envVar names no such query: ${unknown.mkString(", ")}")
+        queries.filter(kv => names(kv._1))
+    }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,32 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus),
-      GraftSession.longFuse)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=q44_minhash_fast,... dumps a subset while
     // iterating; unset (driver contract) dumps everything.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_VERIFY_ONLY names no such query: ${unknown.mkString(", ")}")
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
+    val selected = SparkEntry.selectedBy("SPARK_GRAFT_VERIFY_ONLY")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    new java.io.File(outDir).mkdirs()
     // A thrown query must surface as a red row, not silently vanish from
     // the driver artifact (round-7 lesson: 10 queries disappeared and
     // CORRECTNESS read "all green"). Errors are collected and dumped to

@@ -23,19 +23,8 @@ object StreamingApps {
       wmDelay: String = "0 seconds")(
       sink: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] = {
     val pv = behaviors.filter(col("behavior") === "pv")
-    pv.withWatermark("ts", wmDelay)
-      .groupBy(window(col("ts"), size, slide), col("itemId"))
-      .agg(count(lit(1)).as("cnt"))
-      .writeStream.outputMode("append").foreachBatch {
-        (batch: DataFrame, id: Long) =>
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("window")).orderBy(col("cnt").desc, col("itemId"))
-          sink(batch.withColumn("rank", row_number().over(w))
-            .filter(col("rank") <= topN)
-            .select(col("window.end").cast("long").as("windowEnd"),
-              col("itemId"), col("cnt"), col("rank")), id)
-          ()
-      }
+    StreamOps.closedWindowTopN(pv.withWatermark("ts", wmDelay),
+      window(col("ts"), size, slide), "itemId", topN, sink)
   }
 
   /** UV per window, streaming (reference UniqueVisitor/WithBloom): the

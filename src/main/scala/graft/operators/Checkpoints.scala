@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** The one pin-and-release discipline for `localCheckpoint`'d frames.
   *
@@ -37,14 +38,15 @@ object Checkpoints {
     * (localCheckpoint truncates lineage, so the dead blocks cannot be
     * recomputed: downstream actions throw, they don't silently recompute).
     * Only call it when every consumer of the checkpointed frame — not
-    * just `df` itself — is finished.
+    * just `df` itself — is finished. Only non-fatal errors are
+    * swallowed: an interrupt or an out-of-memory error propagates.
     */
   def free(df: DataFrame): Unit =
     try df.queryExecution.analyzed.foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(blocking = false)
       case _ => ()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
   /** The parquet store at `path`, or `None` before its first write. */
   def readStore(spark: SparkSession, path: String): Option[DataFrame] = {

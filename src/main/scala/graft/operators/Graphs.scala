@@ -101,8 +101,8 @@ object Graphs {
     * half-step is one rank-edge hash join plus one keyed aggregate.
     * Lineage is cut at EVERY half-step's raw aggregate — the max
     * subquery and the rescale join both consume it, so an uncut chain
-    * doubles the plan per half-step (ExchangeAudit measured 157
-    * exchange nodes for 2 iterations vs ~7 with the cut); the
+    * doubles the plan per half-step (157 exchange nodes were measured
+    * for 2 iterations vs ~7 with the cut); the
     * `checkpointEvery` cadence additionally bounds the scores chain on
     * long runs. Overflow bound: `max_degree * scale^2` must fit a
     * long — the default scale 10^6 allows degrees to ~9·10^6.
@@ -207,9 +207,9 @@ object Graphs {
       scores: DataFrame, scoreCol: String, joinSide: String,
       aggSide: String, outCol: String, scale: Long): (DataFrame, DataFrame) = {
     // raw feeds BOTH the max-normalizer and the rescale join; without
-    // a lineage cut here every half-step DOUBLES the plan (the
-    // ExchangeAudit measured 157 exchange nodes in the 2-iteration
-    // final plan vs ~10 with the cut), so the |V|-row materialization
+    // a lineage cut here every half-step DOUBLES the plan (157
+    // exchange nodes were measured in the 2-iteration final plan vs
+    // ~10 with the cut), so the |V|-row materialization
     // is mandatory plan hygiene, not an optimization (wall-clock
     // neutral at sf0.1)
     val raw = scores.withColumnRenamed("id", joinSide)

@@ -46,43 +46,31 @@ object CountWindows {
   /** Streaming tumbling count window: buffers up to size-1 records per key
     * in state, fires a window as soon as the size-th record arrives.
     * Per-record firing order inside a micro-batch follows `orderBy`.
-    * `idleTimeoutMs` > 0 flushes a partial window after the key is idle
-    * that long (processing-time), bounding state for dead keys.
+    * A partial window is never flushed: it waits for the key's next
+    * records, so state is one bucket per key ever seen.
     */
   def tumblingStream[E](ds: Dataset[E])(keyFn: E => String, orderBy: E => Long,
-      size: Int, idleTimeoutMs: Long = 0L): Dataset[CountWindow[E]] = {
+      size: Int): Dataset[CountWindow[E]] = {
     implicit val oe: Encoder[CountWindow[E]] = Encoders.kryo[CountWindow[E]]
     implicit val be: Encoder[Buf[E]] = Encoders.kryo[Buf[E]]
     implicit val se: Encoder[String] = Encoders.STRING
-    val timeoutConf = if (idleTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    ds.groupByKey(keyFn).flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
+    ds.groupByKey(keyFn).flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.NoTimeout) {
       (key: String, it: Iterator[E], state: GroupState[Buf[E]]) =>
-        val buf = state.getOption.getOrElse(Buf[E](0L, Nil))
-        if (!it.hasNext && state.hasTimedOut) {
-          // idle flush: emit the partial window
-          state.remove()
-          if (buf.items.nonEmpty)
-            Iterator(CountWindow(key, buf.seq, buf.items.reverse))
-          else Iterator.empty
-        } else {
-          var cur = buf
-          val fired = List.newBuilder[CountWindow[E]]
-          it.toSeq.sortBy(orderBy).foreach { e =>
-            val items = e :: cur.items
-            if (items.length >= size) {
-              fired += CountWindow(key, cur.seq, items.reverse)
-              cur = Buf(cur.seq + 1, Nil)
-            } else cur = cur.copy(items = items)
-          }
-          // Keep the (possibly empty) buffer: the seq counter must survive a
-          // batch ending exactly on a window boundary, or the next batch
-          // would restart windowSeq at 0 and emit duplicate (key, seq) ids.
-          // State is reclaimed only by the idle-timeout flush.
-          state.update(cur)
-          if (idleTimeoutMs > 0) state.setTimeoutDuration(idleTimeoutMs)
-          fired.result().iterator
+        var cur = state.getOption.getOrElse(Buf[E](0L, Nil))
+        val fired = List.newBuilder[CountWindow[E]]
+        it.toSeq.sortBy(orderBy).foreach { e =>
+          val items = e :: cur.items
+          if (items.length >= size) {
+            fired += CountWindow(key, cur.seq, items.reverse)
+            cur = Buf(cur.seq + 1, Nil)
+          } else cur = cur.copy(items = items)
         }
+        // Keep the (possibly empty) buffer: the seq counter must survive a
+        // batch ending exactly on a window boundary, or the next batch
+        // would restart windowSeq at 0 and emit duplicate (key, seq) ids.
+        state.update(cur)
+        fired.result().iterator
     }
   }
 
@@ -118,38 +106,28 @@ object CountWindows {
     * ≤ size-1 records plus two counters — bounded regardless of stream
     * length. Emissions agree exactly with [[slidingBatch]] on the same
     * input (spec'd), with per-batch arrival order resolved by `orderBy`.
-    * `idleTimeoutMs` > 0 removes state for keys idle that long
-    * (processing time); unlike the tumbling form nothing is flushed — a
-    * sliding window only ever fires on its slide boundary — so the
-    * timeout is purely state GC (the count restarts if the key revives).
+    * State is kept for every key ever seen: nothing times it out.
     */
   def slidingStream[E](ds: Dataset[E])(keyFn: E => String, orderBy: E => Long,
-      size: Int, slide: Int, idleTimeoutMs: Long = 0L): Dataset[CountWindow[E]] = {
+      size: Int, slide: Int): Dataset[CountWindow[E]] = {
     implicit val oe: Encoder[CountWindow[E]] = Encoders.kryo[CountWindow[E]]
     implicit val be: Encoder[SlideBuf[E]] = Encoders.kryo[SlideBuf[E]]
     implicit val se: Encoder[String] = Encoders.STRING
-    val timeoutConf = if (idleTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    ds.groupByKey(keyFn).flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
+    ds.groupByKey(keyFn).flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.NoTimeout) {
       (key: String, it: Iterator[E], state: GroupState[SlideBuf[E]]) =>
-        if (!it.hasNext && state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          var cur = state.getOption.getOrElse(SlideBuf[E](0L, 0L, Nil))
-          val fired = List.newBuilder[CountWindow[E]]
-          it.toSeq.sortBy(orderBy).foreach { e =>
-            val windowItems = (e :: cur.items).take(size) // newest first
-            val cnt = cur.count + 1
-            if (cnt % slide == 0) {
-              fired += CountWindow(key, cur.wseq, windowItems.reverse)
-              cur = SlideBuf(cnt, cur.wseq + 1, windowItems.take(size - 1))
-            } else cur = SlideBuf(cnt, cur.wseq, windowItems.take(size - 1))
-          }
-          state.update(cur)
-          if (idleTimeoutMs > 0) state.setTimeoutDuration(idleTimeoutMs)
-          fired.result().iterator
+        var cur = state.getOption.getOrElse(SlideBuf[E](0L, 0L, Nil))
+        val fired = List.newBuilder[CountWindow[E]]
+        it.toSeq.sortBy(orderBy).foreach { e =>
+          val windowItems = (e :: cur.items).take(size) // newest first
+          val cnt = cur.count + 1
+          if (cnt % slide == 0) {
+            fired += CountWindow(key, cur.wseq, windowItems.reverse)
+            cur = SlideBuf(cnt, cur.wseq + 1, windowItems.take(size - 1))
+          } else cur = SlideBuf(cnt, cur.wseq, windowItems.take(size - 1))
         }
+        state.update(cur)
+        fired.result().iterator
     }
   }
 }

@@ -81,13 +81,16 @@ object StreamOps {
   /** Internal boxed state (kryo needs a public non-primitive class). */
   case class Box[V](v: V)
 
+  /** The timeout is NoTimeout unless a TTL is requested: a processing-time
+    * timeout keeps the engine scheduling no-data batches, so
+    * processAllAvailable() never settles (same hazard as
+    * [[StateV2.runningCountWithTtl]]'s processing-time mode).
+    */
   def runningAggregateWithTtl[E, V](ds: Dataset[E])(keyFn: E => String,
       zero: V, update: (V, E) => V, ttlMs: Long): Dataset[KeyedValue[V]] = {
     implicit val ve: Encoder[Box[V]] = Encoders.kryo[Box[V]]
     implicit val oe: Encoder[KeyedValue[V]] = Encoders.kryo[KeyedValue[V]]
     implicit val se: Encoder[String] = Encoders.STRING
-    // ProcessingTimeTimeout makes the engine run timeout-evaluation batches
-    // continuously — only worth it when a TTL is actually requested.
     val timeoutConf = if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
     ds.groupByKey(keyFn).flatMapGroupsWithState(
@@ -151,49 +154,36 @@ object StreamOps {
     * micro-batch. A control event arriving in a *later* micro-batch than
     * data events it should have gated cannot retroactively open the gate —
     * those data rows were already dropped. Per-key state is bounded: a key
-    * whose gate is closed w.r.t. the events seen keeps no state; with
-    * `gcIdleMs` > 0 an open-gate key idle that long (processing time) is
-    * additionally GC'd — leave it 0 in tests, since ProcessingTimeTimeout
-    * makes the engine run continuous no-data batches and
-    * `processAllAvailable()` never settles (production streams with real
-    * triggers want it on).
+    * whose gate is closed w.r.t. the events seen keeps no state; a key
+    * whose gate is still open keeps its deadline until a later event
+    * passes it, since nothing times idle keys out.
     */
   def gateByControl[E](data: Dataset[E], dataKey: E => String, dataTs: E => Long,
-      controls: Dataset[GateControl], gcIdleMs: Long = 0L): Dataset[E] = {
+      controls: Dataset[GateControl]): Dataset[E] = {
     implicit val ee: Encoder[GateEnv[E]] = Encoders.kryo[GateEnv[E]]
     implicit val oe: Encoder[E] = data.encoder
     implicit val se: Encoder[String] = Encoders.STRING
     implicit val be: Encoder[Box[Long]] = Encoders.kryo[Box[Long]]
     val tagged = data.map(e => GateEnv(dataKey(e), dataTs(e), None, Some(e)))
       .union(controls.map(c => GateEnv[E](c.key, c.tsMs, Some(c), None)))
-    val timeoutConf = if (gcIdleMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     tagged.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append, timeoutConf) {
+      OutputMode.Append, GroupStateTimeout.NoTimeout) {
       (_: String, it: Iterator[GateEnv[E]], state: GroupState[Box[Long]]) =>
-        if (!it.hasNext && state.hasTimedOut) {
-          state.remove() // idle open-gate key: GC
-          Iterator.empty
-        } else {
-          var openUntil = state.getOption.map(_.v).getOrElse(Long.MinValue)
-          var maxTs = Long.MinValue
-          val out = List.newBuilder[E]
-          it.toSeq.sortBy(_.tsMs).foreach { env =>
-            maxTs = math.max(maxTs, env.tsMs)
-            env.control match {
-              case Some(c) => openUntil = math.max(openUntil, c.tsMs + c.openForMs)
-              case None if env.tsMs < openUntil => out ++= env.payload
-              case None => ()
-            }
+        var openUntil = state.getOption.map(_.v).getOrElse(Long.MinValue)
+        var maxTs = Long.MinValue
+        val out = List.newBuilder[E]
+        it.toSeq.sortBy(_.tsMs).foreach { env =>
+          maxTs = math.max(maxTs, env.tsMs)
+          env.control match {
+            case Some(c) => openUntil = math.max(openUntil, c.tsMs + c.openForMs)
+            case None if env.tsMs < openUntil => out ++= env.payload
+            case None => ()
           }
-          if (openUntil > maxTs) {
-            // gate still open beyond what we've seen: keep state, bounded
-            // by the optional idle TTL so abandoned keys don't pile up
-            state.update(Box(openUntil))
-            if (gcIdleMs > 0) state.setTimeoutDuration(gcIdleMs)
-          } else state.remove() // closed gate ≡ no state (default is closed)
-          out.result().iterator
         }
+        // gate still open beyond what we've seen: keep its deadline
+        if (openUntil > maxTs) state.update(Box(openUntil))
+        else state.remove() // closed gate ≡ no state (default is closed)
+        out.result().iterator
     }
   }
 
@@ -211,8 +201,17 @@ object StreamOps {
   def streamingTopN(df: DataFrame, tsCol: String, wmDelay: String,
       windowSize: String, keyCol: String, n: Int,
       sink: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.withWatermark(tsCol, wmDelay)
-      .groupBy(window(col(tsCol), windowSize), col(keyCol))
+    closedWindowTopN(df.withWatermark(tsCol, wmDelay),
+      window(col(tsCol), windowSize), keyCol, n, sink)
+
+  /** The append-mode count and per-batch rank behind [[streamingTopN]]
+    * over a `window(...)` column `win` (tumbling or sliding) of a
+    * watermarked frame; sinks (windowEnd, keyCol, cnt, rank).
+    */
+  private[graft] def closedWindowTopN(watermarked: DataFrame, win: Column,
+      keyCol: String, n: Int,
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
+    watermarked.groupBy(win, col(keyCol))
       .agg(count(lit(1)).as("cnt"))
       .writeStream.outputMode("append").foreachBatch {
         (batch: DataFrame, id: Long) =>

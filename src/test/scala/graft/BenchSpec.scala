@@ -105,4 +105,15 @@ class BenchSpec extends SparkSpec {
     Seq("\"104\":1.23", "\"01\":0.5", "\"02\":2").foreach(k =>
       assert(line.contains(k), s"$k missing"))
   }
+
+  test("selectedBy: unset selects every query, a list exactly its names, an unknown name fails") {
+    val v = "SPARK_GRAFT_BENCH_ONLY"
+    assert(SparkEntry.selectedBy(v, Map.empty).keySet == SparkEntry.queries.keySet)
+    val picked = SparkEntry.selectedBy(v,
+      Map(v -> " q01_pricing_summary, q104_edit_distance_pairs ,"))
+    assert(picked.keySet == Set("q01_pricing_summary", "q104_edit_distance_pairs"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selectedBy(v, Map(v -> "q01_pricing_summary,q999_nope")))
+    assert(e.getMessage.contains(s"$v names no such query: q999_nope"), e.getMessage)
+  }
 }

@@ -1,5 +1,6 @@
 package graft.apps
 
+import graft.functions.TextFunctions.tokens
 import graft.streaming.Cep
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -16,7 +17,7 @@ object CaseStudies {
     * explode+groupBy — streaming: update mode.
     */
   def wordCount(lines: DataFrame, col0: String = "value"): DataFrame =
-    lines.select(explode(split(trim(col(col0)), "\\s+")).as("word"))
+    lines.select(explode(tokens(col(col0))).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("cnt"))
 

@@ -48,7 +48,7 @@ object ClassifierImpl {
     */
   def bucketCounts(text: String, buckets: Int): Array[(Int, Int)] = {
     if (text == null) return Array.empty
-    val toks = MinhashImpl.tokens(text)
+    val toks = TextFunctions.tokens(text)
     if (buckets <= (1 << 16)) {
       val cnt = new Array[Int](buckets)
       var t = 0
@@ -74,7 +74,7 @@ object ClassifierImpl {
     * [[scoreSoftmax]] convention).
     */
   def scoreMicro(text: String, weightsMicro: Array[Long]): (Long, Long) = {
-    val toks = MinhashImpl.tokens(if (text == null) "" else text)
+    val toks = TextFunctions.tokens(if (text == null) "" else text)
     val buckets = weightsMicro.length
     var s = 0L
     var t = 0
@@ -86,7 +86,7 @@ object ClassifierImpl {
     * token buckets, argmax with ties to the LOWEST class index.
     */
   def scoreSoftmax(text: String, weightsMicro: Array[Array[Long]]): (Long, Int, Long) = {
-    val toks = MinhashImpl.tokens(if (text == null) "" else text)
+    val toks = TextFunctions.tokens(if (text == null) "" else text)
     val k = weightsMicro.length
     val sums = new Array[Long](k)
     val buckets = weightsMicro(0).length

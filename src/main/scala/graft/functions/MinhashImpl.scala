@@ -37,29 +37,11 @@ object MinhashImpl {
     new String(out)
   }
 
-  /** EXACT twin of the Column tokenization `split(trim(text), "\s+")`:
-    * SQL `trim` strips SPACES only and SQL `split` keeps empty fields
-    * (limit -1), so `"hello\n"` → `["hello", ""]` and `"\tz"` →
-    * `["", "z"]` in Spark, DuckDB, and here. Java's `.trim.split("\\s+")`
-    * differs on edge tabs/newlines (eats them, drops trailing empties) —
-    * using it silently broke oracle parity on edge-whitespace text.
-    * Null text → no tokens (explode of a null array emits no rows).
-    */
-  def tokens(text: String): Array[String] = {
-    if (text == null) return Array.empty
-    var i = 0
-    var j = text.length
-    while (i < j && text.charAt(i) == ' ') i += 1
-    while (j > i && text.charAt(j - 1) == ' ') j -= 1
-    text.substring(i, j).split("\\s+", -1)
-  }
-
-  /** Distinct n-word shingles (same tokenization as TextFunctions.tokens
-    * — see [[tokens]]). Empty when the doc has fewer than n tokens or a
-    * null text.
+  /** Distinct n-word shingles over [[TextFunctions.tokens]]. Empty when
+    * the doc has fewer than n tokens or a null text.
     */
   def shingles(text: String, n: Int): Array[String] = {
-    val toks = tokens(text)
+    val toks = TextFunctions.tokens(text)
     if (toks.length < n) Array.empty
     else toks.sliding(n).map(_.mkString(" ")).toArray.distinct
   }
@@ -97,14 +79,13 @@ object MinhashImpl {
   */
 object SimhashMd5Impl {
 
-  /** `bits`-wide md5 simhash of whitespace tokens; tokenization matches
-    * TextFunctions.tokens exactly ([[MinhashImpl.tokens]] — duplicates
-    * kept, simhash weighs every occurrence).
+  /** `bits`-wide md5 simhash of [[TextFunctions.tokens]] — duplicates
+    * kept, simhash weighs every occurrence.
     */
   def signature(text: String, bits: Int): Long = {
     val hexChars = bits / 4
     val counters = new Array[Int](bits)
-    val toks = MinhashImpl.tokens(text)
+    val toks = TextFunctions.tokens(text)
     var i = 0
     while (i < toks.length) {
       val h = java.lang.Long.parseLong(

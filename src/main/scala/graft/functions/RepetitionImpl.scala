@@ -11,7 +11,7 @@ package graft.functions
   * counts them, and the modal unit's count ties go to the smallest in
   * UTF-8 byte order, as `array_sort` and `ORDER BY` compare strings
   * (`String.length` and `compareTo` disagree on non-BMP text).
-  * Tokenization is [[MinhashImpl.tokens]] = `split(trim(text), "\\s+")`.
+  * Tokenization is [[TextFunctions.tokens]].
   */
 object RepetitionImpl {
 
@@ -91,7 +91,7 @@ object RepetitionImpl {
     * tokenization. Null text has no tokens, so every order is all zeros.
     */
   def report(text: String, ns: Array[Int]): Array[Stats] = {
-    val toks = MinhashImpl.tokens(text)
+    val toks = TextFunctions.tokens(text)
     ns.map(ngramStats(toks, _))
   }
 
@@ -116,7 +116,7 @@ object RepetitionImpl {
   def keep(text: String, maxDupWordFrac: Double,
       maxTopBigramCharFrac: Double, maxDupTrigramCharFrac: Double): Boolean = {
     if (text == null) return false
-    val toks = MinhashImpl.tokens(text)
+    val toks = TextFunctions.tokens(text)
     val textChars = chars(text).toDouble
     val s1 = ngramStats(toks, 1)
     val keep1 = s1.total == 0 ||

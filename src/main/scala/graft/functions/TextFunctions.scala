@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * Everything here is pure `Column` composition over
   * org.apache.spark.sql.functions — whole-stage-codegen friendly, no UDFs,
   * so Catalyst can pushdown/prune around them and the hot path stays in
-  * generated code at 100 TB.
+  * generated code at 100 TB. The one exception is the typed twin of
+  * [[tokens]], the token rule for typed kernels; it lives here so the
+  * rule has one home.
   *
   * Hash-bearing functions (minhash/fingerprint) use md5 so an external SQL
   * engine (the DuckDB oracle) can reproduce them bit-for-bit; a faster
@@ -17,8 +19,29 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Whitespace tokenization. */
+  /** Whitespace tokenization — graft's one token rule, which every
+    * oracle replays as `string_split_regex(trim(text), '\s+')` (alias
+    * `regexp_split_to_array`). SQL `trim` strips SPACES only, and SQL
+    * `split` keeps empty fields (limit -1): `"hello\n"` gives
+    * `["hello", ""]`, `"\tz"` gives `["", "z"]`, `""` gives `[""]`, and
+    * null text gives null (explode emits no rows). Java's
+    * `text.trim.split("\\s+")` is a different rule: it strips edge tabs
+    * and newlines and drops trailing empty fields. The typed twin below
+    * is this rule for code that runs over strings.
+    */
   def tokens(text: Column): Column = split(trim(text), "\\s+")
+
+  /** [[tokens]] over a string, for typed kernels — element for element
+    * the Column form's array; null text gives no tokens.
+    */
+  def tokens(text: String): Array[String] = {
+    if (text == null) return Array.empty
+    var i = 0
+    var j = text.length
+    while (i < j && text.charAt(i) == ' ') i += 1
+    while (j > i && text.charAt(j - 1) == ' ') j -= 1
+    text.substring(i, j).split("\\s+", -1)
+  }
 
   /** Token count. */
   def tokenCount(text: Column): Column = size(tokens(text))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TextFunctions.tokens
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -42,7 +43,7 @@ object Boilerplate {
   def segmentsByWindow(docs: DataFrame, idCol: String, textCol: String,
       winTokens: Int): DataFrame = {
     require(winTokens > 0, s"winTokens must be positive: $winTokens")
-    val toks = split(trim(col(textCol)), "\\s+")
+    val toks = tokens(col(textCol))
     docs.select(col(idCol),
       posexplode(transform(sequence(lit(1), greatest(size(toks), lit(1)), lit(winTokens)),
         i => concat_ws(" ", slice(toks, i, lit(winTokens))))).as(Seq("pos", "seg")))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TextFunctions.tokens
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -30,7 +31,7 @@ object Bpe {
 
   /** (word, freq) over whitespace tokens — THE corpus-scale pass. */
   def wordFrequencies(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(split(trim(col(textCol)), "\\s+")).as("word"))
+    docs.select(explode(tokens(col(textCol))).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
 
@@ -107,7 +108,7 @@ object Bpe {
     */
   def tokenize(docs: DataFrame, textCol: String,
       merges: Seq[(String, String)]): DataFrame = {
-    val words = split(trim(col(textCol)), "\\s+")
+    val words = tokens(col(textCol))
     val perWord = (w: Column) =>
       merges.foldLeft(charSymbols(w)) { case (s, (a, b)) => applyMerge(s, a, b) }
     docs.withColumn("bpe", flatten(transform(words, perWord)))
@@ -127,7 +128,7 @@ object Bpe {
       .mapPartitions { it =>
         val rank = bMerges.value
         it.map { text =>
-          val toks = text.trim.split("\\s+").filter(_.nonEmpty)
+          val toks = tokens(text).filter(_.nonEmpty)
           val out = Seq.newBuilder[String]
           toks.foreach { w =>
             var syms = w.map(_.toString).toVector

@@ -1,19 +1,23 @@
 package graft.operators
 
+import graft.functions.TextFunctions.tokens
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Overlapping token-window chunking — the document splitter feeding
   * RAG indexing and fixed-context pretraining: chunk i of a doc covers
   * tokens [i*stride, i*stride + size). A doc shorter than `size` yields
-  * exactly one (short) chunk; no empty tail chunks.
+  * exactly one (short) chunk; no empty tail chunks. Null text yields no
+  * chunk rows.
   *
   * Scale shape: one typed flatMap (narrow, no shuffle) — output rows =
   * input tokens x (size / stride) overlap factor. The chunk loop reuses
   * one token array per doc; chunk text is materialized once per chunk
-  * (unavoidable — it IS the output). Tokenization matches
-  * TextFunctions.tokens (trim + split \s+), so DuckDB reproduces chunks
-  * byte-for-byte (q76).
+  * (unavoidable — it IS the output). Tokens are
+  * [[graft.functions.TextFunctions.tokens]], the rule q76's oracle
+  * replays, so edge tabs and newlines give the oracle's empty tokens.
+  * (On null text the oracle SQL emits one `(doc_id, 0, 32, NULL)` row,
+  * because DuckDB's `greatest`/`least` skip NULL; no fixture has one.)
   */
 object Chunking {
 
@@ -34,9 +38,11 @@ object Chunking {
     df.select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
-        val toks = text.trim.split("\\s+")
+        val toks = tokens(text)
         val n = toks.length
-        (0 until numChunks(n, size, stride)).iterator.map { i =>
+        // tokens is empty only for null text: no chunks
+        if (n == 0) Iterator.empty
+        else (0 until numChunks(n, size, stride)).iterator.map { i =>
           val start = i * stride
           val end = math.min(start + size, n)
           (id, i.toLong, (end - start).toLong,

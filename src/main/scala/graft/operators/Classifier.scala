@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TextFunctions.tokens
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -40,11 +41,9 @@ object Classifier {
   def tokenBucket(tok: Column, buckets: Int): Column =
     pmod(conv(substring(md5(tok), 1, 15), 16, 10).cast("long"), lit(buckets.toLong))
 
-  private def tokenArr(text: Column): Column = split(trim(text), "\\s+")
-
   /** Per-occurrence feature buckets for a document's text — map-only. */
   def bucketArr(text: Column, buckets: Int): Column =
-    transform(tokenArr(text), t => tokenBucket(t, buckets))
+    transform(tokens(text), t => tokenBucket(t, buckets))
 
   /** Twice the logistic-loss gradient at w = 0 per feature bucket:
     * grad2(b) = Σ_docs (1 − 2·y) · count_b(doc) — exact BIGINT (at the

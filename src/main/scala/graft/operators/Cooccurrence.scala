@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.functions.TextFunctions.tokens
+import graft.operators.Selection.qln
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,7 +21,7 @@ import org.apache.spark.sql.functions._
   * are bit-identical — no float accumulates anywhere.
   *
   * Tokenization is the house exact Column-twin convention
-  * ([[graft.functions.MinhashImpl.tokens]] — space-trim then split on
+  * ([[graft.functions.TextFunctions.tokens]] — space-trim then split on
   * `\s+`; docs empty after the space trim contribute nothing), matching
   * the `regexp_split_to_array(trim(text), '\s+')` oracle CTE used by
   * the LM family (q134/q139).
@@ -47,7 +49,7 @@ object Cooccurrence {
     */
   private[graft] def pairIter(text: String,
       window: Int): Iterator[(String, String, Long)] = {
-    val tk = graft.functions.MinhashImpl.tokens(text)
+    val tk = tokens(text)
     if (tk.length == 0 || (tk.length == 1 && tk(0).isEmpty))
       Iterator.empty
     else
@@ -93,7 +95,7 @@ object Cooccurrence {
     require(maxVocab >= 1, s"maxVocab must be >= 1: $maxVocab")
     import org.apache.spark.sql.expressions.Window
     val tok = df.filter(length(trim(col(textCol))) > 0)
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("tok"))
+      .select(explode(tokens(col(textCol))).as("tok"))
     val d = col("f").cast("double")
     val top = tok.groupBy(col("tok")).agg(count(lit(1)).as("f"))
       .orderBy(col("f").desc, col("tok")).limit(maxVocab)
@@ -127,8 +129,6 @@ object Cooccurrence {
       minCount: Long = 1L): DataFrame = {
     val pairs = skipgramPairs(df, textCol, window, minCount)
       .localCheckpoint()
-    def qln(c: org.apache.spark.sql.Column) =
-      floor(log(c.cast("double")) * 1e6 + 0.5).cast("long")
     val total = pairs.agg(sum(col("n_pairs")).as("t"))
     val marg = pairs.groupBy(col("center").as("w"))
       .agg(sum(col("n_pairs")).as("n_w"))
@@ -139,7 +139,8 @@ object Cooccurrence {
         Seq("context"))
       .crossJoin(broadcast(total))
       .select(col("center"), col("context"), col("n_pairs"),
-        (qln(col("n_pairs")) + qln(col("t")) - qln(col("n_a")) -
-          qln(col("n_b"))).as("pmi_micro"))
+        (qln(col("n_pairs").cast("double")) + qln(col("t").cast("double")) -
+          qln(col("n_a").cast("double")) - qln(col("n_b").cast("double")))
+          .as("pmi_micro"))
   }
 }

@@ -485,7 +485,7 @@ object Dedup {
     val sh = df.select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .flatMap { case (id, t) =>
-        val toks = graft.functions.MinhashImpl.tokens(t)
+        val toks = tokens(t)
         if (toks.length < n) Iterator.empty
         else toks.sliding(n).zipWithIndex.map { case (w, i) =>
           (id, i + 1, w.mkString(" ")) }
@@ -627,7 +627,7 @@ object Dedup {
     */
   private def spanAnchors(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    val toks = split(trim(col(textCol)), "\\s+")
+    val toks = tokens(col(textCol))
     val anchors = when(size(toks) >= n,
       transform(sequence(lit(1), size(toks) - (n - 1)),
         i => struct(i.as("pos"),
@@ -649,7 +649,7 @@ object Dedup {
     */
   private def rebuildExcised(df: DataFrame, idCol: String, textCol: String,
       losers: DataFrame, n: Int): DataFrame = {
-    val toks = split(trim(col(textCol)), "\\s+")
+    val toks = tokens(col(textCol))
     val dups = losers.groupBy(col(idCol))
       .agg(sort_array(collect_list(col("pos"))).as("__dups"))
     val covered = array_distinct(flatten(transform(col("__dups"),

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
 object Quality {
 
   /** (id, token) rows via the exact Column-twin tokenization
-    * ([[graft.functions.MinhashImpl.tokens]] — SQL trim/split semantics,
+    * ([[graft.functions.TextFunctions.tokens]] — SQL trim/split semantics,
     * null-safe). Docs that are empty after the space-only trim are
     * dropped entirely (the oracle's `len(trim(text)) > 0`); edge
     * tab/newline docs keep their empty-field tokens like both engines.
@@ -38,7 +38,7 @@ object Quality {
     df.select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .flatMap { case (id, t) =>
-        val tk = graft.functions.MinhashImpl.tokens(t)
+        val tk = graft.functions.TextFunctions.tokens(t)
         // tokens == [""] iff the space-trimmed text is empty
         if (tk.length == 0 || (tk.length == 1 && tk(0).isEmpty)) Iterator.empty
         else tk.iterator.map(w => (id, w))
@@ -63,8 +63,7 @@ object Quality {
     val total = freq.agg(sum(col("f")).as("t"))
     val vocab = freq.crossJoin(broadcast(total))
       .withColumn("lpu",
-        floor(log(col("f").cast("double") / col("t").cast("double")) * 1e6 + 0.5)
-          .cast("long"))
+        Selection.qln(col("f").cast("double") / col("t").cast("double")))
       .select(col("tok"), col("lpu"))
     unigramLogprobWith(df, idCol, textCol, vocab)
   }
@@ -113,15 +112,14 @@ object Quality {
     * corpus-global: no vocabulary table, no broadcast.
     */
   def tokenEntropy(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    def qln(c: org.apache.spark.sql.Column) =
-      floor(log(c.cast("double")) * 1e6 + 0.5).cast("long")
-    val ent = col("n_tokens") * qln(col("n_tokens")) - col("s")
+    val ent = col("n_tokens") * Selection.qln(col("n_tokens").cast("double")) -
+      col("s")
     tokenTable(df, idCol, textCol)
       .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("c"))
       .groupBy(col(idCol))
       .agg(sum(col("c")).as("n_tokens"),
         count(lit(1)).as("n_distinct"),
-        sum(col("c") * qln(col("c"))).as("s"))
+        sum(col("c") * Selection.qln(col("c").cast("double"))).as("s"))
       .select(col(idCol), col("n_tokens"), col("n_distinct"),
         ent.as("ent_micro"),
         (ent.cast("double") / col("n_tokens").cast("double") / 1e6)
@@ -136,9 +134,8 @@ object Quality {
     val idf = tf.groupBy(col("tok")).agg(count(lit(1)).as("dfc"))
       .crossJoin(broadcast(nd))
       .withColumn("idfu",
-        floor(log((col("n").cast("double") + 1.0) /
-          (col("dfc").cast("double") + 1.0)) * 1e6 + 0.5).cast("long")
-          + 1000000L)
+        Selection.qln((col("n").cast("double") + 1.0) /
+          (col("dfc").cast("double") + 1.0)) + 1000000L)
       .select(col("tok"), col("idfu"))
     tf.join(idf, Seq("tok"))
       .withColumn("score_u", col("tf") * col("idfu"))
@@ -258,8 +255,8 @@ object Quality {
       .agg(countDistinct(col("tok")).as("nv"))
     val lm = cg.join(ch, Seq("a")).crossJoin(broadcast(v))
       .withColumn("lpu",
-        floor(log((col("f") + 1L).cast("double")
-          / (col("fh") + col("nv")).cast("double")) * 1e6 + 0.5).cast("long"))
+        Selection.qln((col("f") + 1L).cast("double")
+          / (col("fh") + col("nv")).cast("double")))
       .select(col("a"), col("b"), col("lpu"))
     bigramLogprobWith(df, idCol, textCol, lm)
   }
@@ -280,7 +277,7 @@ object Quality {
   /** (idCol, a, b) per bigram occurrence — the [[tokenTable]] typed
     * flatMap extended one token of lookahead (the HOF shingle form
     * `wordShinglesAll(_, 2)` is interpreted, not codegen'd, and measured
-    * ~10x slower per bigram; tokenization is exactly MinhashImpl.tokens
+    * ~10x slower per bigram; tokenization is exactly TextFunctions.tokens
     * both ways). Docs empty after trim contribute nothing.
     */
   private def bigramTable(df: DataFrame, idCol: String, textCol: String): DataFrame = {
@@ -289,7 +286,7 @@ object Quality {
     df.select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .flatMap { case (id, t) =>
-        val tk = graft.functions.MinhashImpl.tokens(t)
+        val tk = graft.functions.TextFunctions.tokens(t)
         if (tk.length < 2 || (tk.length == 1 && tk(0).isEmpty)) Iterator.empty
         else (0 until tk.length - 1).iterator.map(i => (id, tk(i), tk(i + 1)))
       }

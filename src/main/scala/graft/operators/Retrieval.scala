@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TextFunctions.tokens
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,8 +38,6 @@ object Retrieval {
   final case class TextIndex(postings: DataFrame, terms: DataFrame,
       stats: DataFrame)
 
-  private def toks(c: Column): Column = split(trim(c), "\\s+")
-
   /** Build the index: postings (term, doc_id, tf, len), terms (term, df),
     * stats (n, sumlen). One shuffle over the corpus.
     *
@@ -54,7 +53,7 @@ object Retrieval {
   def buildIndex(docs: DataFrame, idCol: String, textCol: String): TextIndex = {
     val p = docs.sparkSession.sparkContext.defaultParallelism
     val src = if (docs.rdd.getNumPartitions < p) docs.repartition(2 * p) else docs
-    val t = toks(col(textCol))
+    val t = tokens(col(textCol))
     val exploded = src.select(col(idCol).as("doc_id"), size(t).as("len"),
       explode(t).as("term"))
     val postings = exploded.groupBy(col("term"), col("doc_id"), col("len"))
@@ -92,7 +91,7 @@ object Retrieval {
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k > 0, s"k must be positive: $k")
     val qt = queries.select(col("query_id"),
-      explode(array_distinct(toks(col("qtext")))).as("term"))
+      explode(array_distinct(tokens(col("qtext")))).as("term"))
     val matched = index.postings
       .join(broadcast(qt), Seq("term"))
       .join(broadcast(index.terms.join(broadcast(qt.select(col("term")).distinct()),
@@ -259,7 +258,7 @@ object Retrieval {
     // bucket ids of the query's terms, computed with Spark's own xxhash64
     // so they bit-match writeIndex's `tb` (bounded: distinct query terms)
     val buckets = queries
-      .select(explode(array_distinct(toks(col("qtext")))).as("term"))
+      .select(explode(array_distinct(tokens(col("qtext")))).as("term"))
       .select(pmod(xxhash64(col("term")), lit(nBuckets.toLong)).as("tb"))
       .distinct().collect().map(_.getLong(0)).toIndexedSeq
     val postings = spark.read.parquet(s"$path/postings")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TextFunctions.tokens
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -410,7 +411,7 @@ object Sampling {
   def subsampleFrequentWords(df: DataFrame, idCol: String, textCol: String,
       thresh: Double = 1e-4): DataFrame = {
     require(thresh > 0, s"thresh must be positive: $thresh")
-    val toksArr = split(trim(col(textCol)), "\\s+")
+    val toksArr = tokens(col(textCol))
     val tok = df.filter(length(trim(col(textCol))) > 0)
       .select(col(idCol), posexplode(toksArr).as(Seq("pos0", "tok")))
       .select(col(idCol), (col("pos0") + 1).as("pos"), col("tok"))

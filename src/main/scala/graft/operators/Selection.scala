@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TextFunctions.{tokenCount, tokens}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,7 +37,7 @@ object Selection {
     * cross-engine hash — see `Classifier.tokenBucket`). Map-only.
     */
   def featureArr(text: Column, buckets: Int): Column = {
-    val toks = split(trim(text), "\\s+")
+    val toks = tokens(text)
     val bigrams = when(size(toks) >= 2,
       transform(sequence(lit(0), size(toks) - 2),
         i => concat_ws(" ", element_at(toks, i + 1), element_at(toks, i + 2))))
@@ -58,8 +59,17 @@ object Selection {
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("cnt"))
 
-  private def qln(num: Column, den: Column): Column =
-    floor(log(num.cast("double") / den.cast("double")) * 1e6 + 0.5).cast("long")
+  /** ln(x) in integer micro-units, `floor(ln(x)·1e6 + 0.5)` as BIGINT,
+    * for a DOUBLE `x` — graft's one quantized log: every ln that feeds an
+    * exact integer sum (DSIR weights, the LM family, token entropy, PMI)
+    * goes through it, so the oracles replay one rounding.
+    */
+  private[operators] def qln(x: Column): Column =
+    floor(log(x) * 1e6 + 0.5).cast("long")
+
+  /** [[qln]] of `num / den` on the driver. */
+  private def qlnD(num: Long, den: Long): Long =
+    math.floor(math.log(num.toDouble / den.toDouble) * 1e6 + 0.5).toLong
 
   /** `(bucket, n_raw, n_target, lw_micro)` from per-bucket counts —
     * the shared tail of [[dsirTable]] / [[dsirTableLabeled]].
@@ -69,8 +79,9 @@ object Selection {
     val tot = j.agg(sum(col("n_raw")).as("rt"), sum(col("n_target")).as("tt"))
     j.crossJoin(broadcast(tot))
       .select(col("bucket"), col("n_raw"), col("n_target"),
-        (qln(col("n_target") + 1L, col("tt") + b) -
-          qln(col("n_raw") + 1L, col("rt") + b)).as("lw_micro"))
+        (qln((col("n_target") + 1L).cast("double") / (col("tt") + b).cast("double")) -
+          qln((col("n_raw") + 1L).cast("double") / (col("rt") + b).cast("double")))
+          .as("lw_micro"))
   }
 
   /** The DSIR importance table: per feature bucket, raw/target counts and
@@ -138,13 +149,11 @@ object Selection {
     val rt = rows.map(_.getLong(2)).sum
     val tt = rows.map(_.getLong(3)).sum
     val b = buckets.toLong
-    def qlnD(num: Long, den: Long): Long =
-      math.floor(math.log(num.toDouble / den.toDouble) * 1e6 + 0.5).toLong
     val unseen = qlnD(1L, tt + b) - qlnD(1L, rt + b)
     val lam = Array.fill(buckets)(unseen)
     rows.foreach(r => lam(r.getInt(0)) = r.getLong(1))
     val lamLit = typedLit(lam.toSeq)
-    val nf = (size(split(trim(col(textCol)), "\\s+")) * 2 - 1).cast("long")
+    val nf = (tokenCount(col(textCol)) * 2 - 1).cast("long")
     respread(df)
       .select(col(idCol), nf.as("n_feats"),
         aggregate(featureArr(col(textCol), buckets), lit(0L),

@@ -4,9 +4,10 @@ import org.apache.spark.sql.execution.SparkPlan
 
 /** Shared executed-plan traversal for scale-shape assertions (used by
   * the plan-gating specs — one copy, so the checks can't drift). `walk` crosses AQE boundaries (AdaptiveSparkPlanExec, query
-  * stages, reused subqueries), which plain `children` recursion does
-  * not: a materialized shuffle stage is a LEAF whose real subtree hangs
-  * off `plan`.
+  * stages, reused exchanges and subqueries), which plain `children`
+  * recursion does not: a materialized shuffle stage is a LEAF whose real
+  * subtree hangs off `plan`, and a reused exchange is a LEAF over the
+  * exchange it reuses.
   */
 object PlanWalk {
   def walk(p: SparkPlan): Seq[SparkPlan] = {
@@ -16,6 +17,7 @@ object PlanWalk {
       case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
         Seq(q.plan)
       case r: org.apache.spark.sql.execution.ReusedSubqueryExec => Seq(r.child)
+      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => Seq(r.child)
       case _ => Seq.empty
     }
     (p +: p.children.flatMap(walk)) ++ p.subqueries.flatMap(walk) ++

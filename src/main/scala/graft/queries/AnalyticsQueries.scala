@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.TextFunctions.tokenCount
 import graft.operators.{Quality, Relational}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,10 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object AnalyticsQueries extends QueryModule {
 
-  /** Whitespace token count, SQL-twin semantics both engines share
-    * (`len(string_split_regex(trim(text), '\s+'))`). */
-  private def nTokens = size(split(trim(col("text")), "\\s+")).cast("long")
-
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Token-accounting cube: doc and token totals by (source, lang) with
@@ -36,7 +33,8 @@ object AnalyticsQueries extends QueryModule {
     "q157_token_cube" -> ((s, dir) => {
       import s.implicits._
       Tables.documents(s, dir)
-        .select($"source", $"lang", nTokens.as("nt"), $"n_chars")
+        .select($"source", $"lang", tokenCount($"text").cast("long").as("nt"),
+          $"n_chars")
         .rollup($"source", $"lang")
         .agg(grouping_id().as("gid"),
           count(lit(1)).as("n_docs"),
@@ -121,7 +119,7 @@ object AnalyticsQueries extends QueryModule {
       import s.implicits._
       Quality.momentSums(
         Tables.documents(s, dir).select($"source",
-          $"n_chars".cast("long").as("x"), nTokens.as("y")),
+          $"n_chars".cast("long").as("x"), tokenCount($"text").cast("long").as("y")),
         "source", "x", "y")
         .orderBy($"source")
     }),

@@ -453,7 +453,7 @@ object CorpusQueries extends QueryModule {
     "q125_distinct_sketch" -> ((s, dir) => {
       import s.implicits._
       val words = Tables.documents(s, dir).select($"source",
-        explode(split(trim($"text"), "\\s+")).as("w"))
+        explode(tokens($"text")).as("w"))
       graft.operators.Sketches.estimate(
           graft.operators.Sketches.distinctSketch(words, "source", "w"))
         .select($"source", $"n_rows", $"distinct_est")

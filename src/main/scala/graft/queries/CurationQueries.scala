@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.TextFunctions.{tokenCount, tokens}
 import graft.operators.{Boilerplate, Bpe, Checkpoints, Retrieval, Sampling,
   Similarity, Urls}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -282,10 +283,10 @@ object CurationQueries extends QueryModule {
       val results = Retrieval.searchBm25(idx, qs, k = 20)
         .select($"query_id", $"doc_id", $"rk")
       val qterms = qs.select($"query_id",
-        explode(array_distinct(split(trim($"qtext"), "\\s+"))).as("term"))
+        explode(array_distinct(tokens($"qtext"))).as("term"))
       val nq = qterms.groupBy($"query_id").agg(count(lit(1)).as("nqt"))
       val dTerms = docs.select($"doc_id",
-        explode(array_distinct(split(trim($"text"), "\\s+"))).as("term"))
+        explode(array_distinct(tokens($"text"))).as("term"))
       val qrels = dTerms.join(broadcast(qterms), Seq("term"))
         .groupBy($"query_id", $"doc_id").agg(count(lit(1)).as("nm"))
         .join(broadcast(nq), Seq("query_id")).filter($"nm" === $"nqt")
@@ -308,10 +309,10 @@ object CurationQueries extends QueryModule {
       val idx = sharedBmIndex(s, dir)
       val qs = bmQueries.toDF("query_id", "qtext")
       val qterms = qs.select($"query_id",
-        explode(array_distinct(split(trim($"qtext"), "\\s+"))).as("term"))
+        explode(array_distinct(tokens($"qtext"))).as("term"))
       val nq = qterms.groupBy($"query_id").agg(count(lit(1)).as("nqt"))
       val dTerms = docs.select($"doc_id",
-        explode(array_distinct(split(trim($"text"), "\\s+"))).as("term"))
+        explode(array_distinct(tokens($"text"))).as("term"))
       val qrels = dTerms.join(broadcast(qterms), Seq("term"))
         .groupBy($"query_id", $"doc_id").agg(count(lit(1)).as("nm"))
         .join(broadcast(nq), Seq("query_id")).filter($"nm" === $"nqt")
@@ -345,7 +346,7 @@ object CurationQueries extends QueryModule {
           sum($"n_segments").as("segs_total"),
           sum($"n_dropped").as("segs_dropped"),
           sum(when(trim($"text") === "", lit(0))
-            .otherwise(size(split(trim($"text"), "\\s+"))))
+            .otherwise(tokenCount($"text")))
             .cast("bigint").as("tokens_kept"))
         .orderBy($"host")
     }),

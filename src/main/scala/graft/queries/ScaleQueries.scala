@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.TextFunctions.tokens
 import graft.operators.{Drift, Freq, Relational, Scd, Sketches}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -120,7 +121,7 @@ object ScaleQueries extends QueryModule {
     "q193_topk_per_group" -> ((s, dir) => {
       import s.implicits._
       val toks = Tables.documents(s, dir)
-        .select($"lang", explode(split(trim($"text"), "\\s+")).as("tok"))
+        .select($"lang", explode(tokens($"text")).as("tok"))
         .filter(length($"tok") > 0)
       Freq.exactTopKPerGroup(toks, "lang", "tok", k = 5, capacity = 4096)
         .orderBy($"lang", $"cnt".desc, $"tok")
@@ -248,7 +249,7 @@ object ScaleQueries extends QueryModule {
     "q200_adaptive_stopwords" -> ((s, dir) => {
       import s.implicits._
       val toks = Tables.documents(s, dir)
-        .select($"doc_id", explode(split(trim($"text"), "\\s+")).as("tok"))
+        .select($"doc_id", explode(tokens($"text")).as("tok"))
         .filter(length($"tok") > 0)
       val stop = Freq.exactTopK(toks, "tok", k = 10, capacity = 4096)
         .select($"tok".as("__stop"))
@@ -455,7 +456,7 @@ object ScaleQueries extends QueryModule {
       import s.implicits._
       val toks = Tables.documents(s, dir)
         .select($"doc_id", $"lang",
-          explode(split(trim($"text"), "\\s+")).as("tok"))
+          explode(tokens($"text")).as("tok"))
         .filter(length($"tok") > 0)
       val cap = 32
       val trickle = $"doc_id" % 101 === 0 // a thin second batch

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.TextFunctions.tokens
 import graft.operators.{Boilerplate, Classifier, Sampling, Selection}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -56,7 +57,7 @@ object SelectionQueries extends QueryModule {
     // threshold strip: ALL occurrences go) and q132 (within-doc only).
     "q138_line_dedup_corpus" -> ((s, dir) => {
       import s.implicits._
-      val t = split(trim($"text"), "\\s+")
+      val t = tokens($"text")
       val lines = transform(
         sequence(lit(0), floor((size(t) - 1) / lineTokens).cast("int")),
         i => concat_ws(" ", slice(t, i * lineTokens + 1, lit(lineTokens))))

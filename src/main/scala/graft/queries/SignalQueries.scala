@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.TextFunctions.tokens
 import graft.operators.{Classifier, Repetition}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -50,7 +51,7 @@ object SignalQueries extends QueryModule {
     // q115's job). Zero shuffles except the output sort.
     "q132_linededup" -> ((s, dir) => {
       import s.implicits._
-      val t = split(trim($"text"), "\\s+")
+      val t = tokens($"text")
       val lines = transform(
         sequence(lit(0), floor((size(t) - 1) / lineTokens).cast("int")),
         i => concat_ws(" ", slice(t, i * lineTokens + 1, lit(lineTokens))))

@@ -14,86 +14,37 @@ import org.apache.spark.sql.functions._
   *
   * Both are built on foreachBatch diffing against the previous snapshot of
   * the aggregate — the snapshot is keyed state the engine already shuffles
-  * by the group key, so the diff join is co-partitioned.
-  *
-  * ENTRY POINT: [[retractStreamPersisted]] is the retract-stream API —
-  * distributed diff, restart-safe snapshot, state off the driver heap.
-  * [[retractStream]] is test scaffolding only (driver-side map; OOMs at
-  * real key cardinality and forgets its snapshot on restart).
+  * by the group key, so the diff join is co-partitioned. The snapshot is
+  * a versioned parquet table (see [[snapshotStep]]), so it survives a
+  * restart from checkpoint and stays off the driver heap.
   */
 object Changelog {
 
-  /** One changelog row: add=true is an insert/new value, add=false a
-    * retraction of the previous value (the reference's Tuple2[Boolean, Row]).
-    */
-  case class Change(add: Boolean, key: String, value: Long, batchId: Long)
-
   /** Attach a retract-pair consumer to an update-mode aggregate stream.
-    * `keyCol`/`valueCol` name the group key and aggregate value; `sink`
-    * receives the full (false,old)/(true,new) sequence per micro-batch.
-    *
-    * Test/dev form ONLY: the snapshot is a driver-side map held in this
-    * closure, so it (a) grows with key cardinality and (b) resets if the
-    * query restarts from checkpoint — a restarted query re-emits inserts
-    * without retractions and re-tags keys "first". Production queries must
-    * use [[retractStreamPersisted]], which keeps the snapshot in a keyed
-    * parquet state table that survives restarts and diffs distributed.
-    */
-  def retractStream(updates: DataFrame, keyCol: String, valueCol: String,
-      sink: Seq[Change] => Unit): org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    val snapshot = scala.collection.mutable.Map[String, Long]()
-    updates.writeStream.outputMode("update").foreachBatch {
-      (batch: DataFrame, id: Long) =>
-        val rows = batch.select(col(keyCol).cast("string"), col(valueCol).cast("long"))
-          .collect().map(r => r.getString(0) -> r.getLong(1))
-        val changes = rows.flatMap { case (k, v) =>
-          val old = snapshot.get(k)
-          snapshot(k) = v
-          old match {
-            case Some(o) if o == v => Nil
-            case Some(o) => Seq(Change(add = false, k, o, id), Change(add = true, k, v, id))
-            case None => Seq(Change(add = true, k, v, id))
-          }
-        }
-        if (changes.nonEmpty) sink(changes.toSeq)
-        ()
-    }
-  }
-
-  /** At-scale retract stream: the previous-aggregate snapshot persists as
-    * a versioned keyed parquet table under `stateDir` (one version per
-    * micro-batch, previous version retained), so it survives query
-    * restarts from checkpoint; a replayed micro-batch diffs against the
-    * same prior snapshot and re-emits identical changes (idempotent). The
-    * diff is a distributed join on the group key — nothing is collected to
-    * the driver, state scales with the cluster, not the driver heap.
+    * `keyCol`/`valueCol` name the group key and aggregate value. The
+    * previous-aggregate snapshot persists under `stateDir`
+    * ([[snapshotStep]]), so it survives query restarts from checkpoint;
+    * a replayed micro-batch diffs against the same prior snapshot and
+    * re-emits identical changes (idempotent). The diff is a distributed
+    * join on the group key — nothing is collected to the driver, state
+    * scales with the cluster, not the driver heap.
     *
     * `sink` receives a changes DataFrame (add BOOLEAN, key STRING,
-    * value BIGINT, batchId BIGINT) per micro-batch.
+    * value BIGINT, batchId BIGINT) per micro-batch: add=true is an
+    * insert/new value, add=false a retraction of the previous value (the
+    * reference's Tuple2[Boolean, Row]).
     */
   def retractStreamPersisted(updates: DataFrame, keyCol: String, valueCol: String,
       stateDir: String, sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
     updates.writeStream.outputMode("update").foreachBatch {
       (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val base = new org.apache.hadoop.fs.Path(stateDir)
-        val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val versions =
-          if (fs.exists(base))
-            fs.listStatus(base).map(_.getPath.getName)
-              .filter(_.matches("v\\d+")).map(_.drop(1).toLong)
-              .filter(_ < id).sorted
-          else Array.empty[Long]
         val cur = batch
           .select(col(keyCol).cast("string").as("k"), col(valueCol).cast("long").as("v"))
           .dropDuplicates("k").persist()
-        try {
-          val prev = versions.lastOption match {
-            case Some(vid) => spark.read.parquet(s"$stateDir/v$vid")
-              .select(col("k"), col("v").as("old"))
-            case None => cur.filter(lit(false)).select(col("k"), col("v").as("old"))
-          }
+        try snapshotStep(batch.sparkSession, stateDir, id) { snapshot =>
+          val prev = snapshot.getOrElse(cur.filter(lit(false)))
+            .select(col("k"), col("v").as("old"))
           val diff = cur.join(prev, Seq("k"), "left_outer")
             .filter(col("old").isNull || col("old") =!= col("v")).persist()
           val changes = diff.filter(col("old").isNotNull)
@@ -101,15 +52,10 @@ object Changelog {
               col("old").as("value"), lit(id).as("batchId"))
             .unionByName(diff.select(lit(true).as("add"), col("k").as("key"),
               col("v").as("value"), lit(id).as("batchId")))
-          sink(changes, id)
+          try sink(changes, id) finally diff.unpersist()
           // upsert: previous snapshot minus updated keys, plus this batch
-          val snap = prev.join(cur, Seq("k"), "left_anti")
+          prev.join(cur, Seq("k"), "left_anti")
             .select(col("k"), col("old").as("v")).unionByName(cur)
-          snap.write.mode("overwrite").parquet(s"$stateDir/v$id")
-          diff.unpersist()
-          // keep only the latest prior version for replay-after-restart
-          versions.dropRight(1).foreach(vid =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v$vid"), true))
         } finally cur.unpersist()
         ()
     }
@@ -117,35 +63,9 @@ object Changelog {
 
   /** Tag each emitted window row "first" or "update" (late re-fires) —
     * the reference's allowedLateness tagging. Works on any update-mode
-    * aggregate whose key is `keyCols`. Same driver-form restriction as
-    * [[retractStream]]: the `seen` set resets on restart-from-checkpoint
-    * and grows with key cardinality on the driver heap — test/dev form
-    * ONLY. Production queries use [[tagEmissionsPersisted]].
-    */
-  case class Tagged(key: String, value: Long, tag: String, batchId: Long)
-
-  def tagEmissions(updates: DataFrame, keyCols: Seq[String], valueCol: String,
-      sink: Seq[Tagged] => Unit): org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
-    val seen = scala.collection.mutable.Set[String]()
-    updates.writeStream.outputMode("update").foreachBatch {
-      (batch: DataFrame, id: Long) =>
-        val keyed = batch.select(
-          concat_ws("|", keyCols.map(c => col(c).cast("string")): _*).as("k"),
-          col(valueCol).cast("long").as("v")).collect()
-        val tagged = keyed.map { r =>
-          val k = r.getString(0)
-          val tag = if (seen.add(k)) "first" else "update"
-          Tagged(k, r.getLong(1), tag, id)
-        }
-        if (tagged.nonEmpty) sink(tagged.toSeq)
-        ()
-    }
-  }
-
-  /** At-scale emission tagging: the seen-keys set persists as a
-    * versioned keyed parquet table under `stateDir` (the
-    * [[retractStreamPersisted]] machinery with value-less state), so a
-    * query restarted from checkpoint keeps tagging previously-seen keys
+    * aggregate whose key is `keyCols`. The seen-keys set persists under
+    * `stateDir` ([[snapshotStep]] with value-less state), so a query
+    * restarted from checkpoint keeps tagging previously-seen keys
     * "update" instead of amnesiac "first", and a replayed micro-batch
     * re-tags against the same prior snapshot (idempotent). The
     * first/update classification is a distributed left-outer join on the
@@ -159,37 +79,44 @@ object Changelog {
       : org.apache.spark.sql.streaming.DataStreamWriter[Row] = {
     updates.writeStream.outputMode("update").foreachBatch {
       (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val base = new org.apache.hadoop.fs.Path(stateDir)
-        val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val versions =
-          if (fs.exists(base))
-            fs.listStatus(base).map(_.getPath.getName)
-              .filter(_.matches("v\\d+")).map(_.drop(1).toLong)
-              .filter(_ < id).sorted
-          else Array.empty[Long]
         val cur = batch.select(
           concat_ws("|", keyCols.map(c => col(c).cast("string")): _*).as("k"),
           col(valueCol).cast("long").as("v"))
           .dropDuplicates("k").persist()
-        try {
-          val prev = versions.lastOption match {
-            case Some(vid) => spark.read.parquet(s"$stateDir/v$vid")
-            case None => cur.filter(lit(false)).select(col("k"))
-          }
+        try snapshotStep(batch.sparkSession, stateDir, id) { snapshot =>
+          val prev = snapshot.getOrElse(cur.filter(lit(false))).select(col("k"))
           val tagged = cur.join(prev.withColumn("__seen", lit(true)),
               Seq("k"), "left_outer")
             .select(col("k").as("key"), col("v").as("value"),
               when(col("__seen").isNotNull, "update").otherwise("first").as("tag"),
               lit(id).as("batchId"))
           sink(tagged, id)
-          prev.select("k").unionByName(cur.select("k")).distinct()
-            .write.mode("overwrite").parquet(s"$stateDir/v$id")
-          versions.dropRight(1).foreach(vid =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v$vid"), true))
+          prev.unionByName(cur.select("k")).distinct()
         } finally cur.unpersist()
         ()
     }
+  }
+
+  /** One micro-batch of a versioned snapshot under `stateDir`: reads the
+    * newest version `v<n>` with n < `id` (None before the first), passes
+    * it to `step`, writes the snapshot `step` returns as `v<id>`, then
+    * deletes every version older than the one read. The one read stays
+    * for a replay of batch `id` after a restart.
+    */
+  private def snapshotStep(spark: SparkSession, stateDir: String, id: Long)(
+      step: Option[DataFrame] => DataFrame): Unit = {
+    val base = new org.apache.hadoop.fs.Path(stateDir)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val versions =
+      if (fs.exists(base))
+        fs.listStatus(base).map(_.getPath.getName)
+          .filter(_.matches("v\\d+")).map(_.drop(1).toLong)
+          .filter(_ < id).sorted
+      else Array.empty[Long]
+    step(versions.lastOption.map(v => spark.read.parquet(s"$stateDir/v$v")))
+      .write.mode("overwrite").parquet(s"$stateDir/v$id")
+    versions.dropRight(1).foreach(v =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v$v"), true))
   }
 
   /** Bounded iteration (reference iterate/closeWith,

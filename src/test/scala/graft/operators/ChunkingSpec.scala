@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.functions.{TextFunctions, TextFunctionsSpec}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -29,7 +30,7 @@ class ChunkingSpec extends SparkSpec {
         .as[(Long, Long, Long, String)].collect()
         .groupBy(_._1).view.mapValues(_.sortBy(_._2)).toMap
       for ((id, text) <- docs) {
-        val toks = text.trim.split("\\s+").toSeq
+        val toks = TextFunctions.tokens(text).toSeq
         val chunks = out(id)
         // chunk count formula
         assert(chunks.length == Chunking.numChunks(toks.length, size, stride))
@@ -46,6 +47,25 @@ class ChunkingSpec extends SparkSpec {
         }.toSet
         assert(covered == toks.indices.toSet, s"id=$id coverage gap")
       }
+    }
+  }
+
+  test("edge whitespace and null text chunk as Spark's TextFunctions.tokens splits them") {
+    val docs = TextFunctionsSpec.edgeRows.toDF("id", "text")
+    val toks = docs.select($"id", TextFunctions.tokens($"text"))
+      .as[(Long, Seq[String])].collect().sortBy(_._1)
+    for ((size, stride) <- Seq((2, 1), (3, 3), (32, 24))) {
+      val got = Chunking.slidingTokenChunks(docs, "id", "text", size, stride)
+        .as[(Long, Long, Long, String)].collect().sortBy(r => (r._1, r._2)).toSeq
+      val want = toks.toSeq.flatMap {
+        case (_, null) => Nil // null text: no chunk rows
+        case (id, t) =>
+          (0 until Chunking.numChunks(t.length, size, stride)).map { i =>
+            val c = t.slice(i * stride, i * stride + size)
+            (id, i.toLong, c.length.toLong, c.mkString(" "))
+          }
+      }
+      assert(got == want, s"size=$size stride=$stride")
     }
   }
 

@@ -36,34 +36,23 @@ class ChangelogSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("dev-only driver-map retractStream mirrors the golden (test scaffolding)") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[KV]
-    val agg = ms.toDF().groupBy($"k").agg(sum($"v").as("total"))
-    val got = scala.collection.mutable.ArrayBuffer[Change]()
-    val q = retractStream(agg, "k", "total", cs => got.synchronized { got ++= cs }).start()
-    try {
-      ms.addData(KV("ws_001", 45)); q.processAllAvailable()
-      ms.addData(KV("ws_001", 45)); q.processAllAvailable()
-      val seq = got.toList.map(c => (c.add, c.key, c.value))
-      assert(seq == List(
-        (true, "ws_001", 45L),
-        (false, "ws_001", 45L), (true, "ws_001", 90L)))
-    } finally q.stop()
-  }
-
   test("emission tagging: first then update on re-fired key") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val stateDir = java.nio.file.Files.createTempDirectory("tag_state")
+      .toString + "/snap"
     val ms = MemoryStream[KV]
     val agg = ms.toDF().groupBy($"k").agg(count(lit(1)).as("n"))
-    val got = scala.collection.mutable.ArrayBuffer[Tagged]()
-    val q = tagEmissions(agg, Seq("k"), "n", ts => got.synchronized { got ++= ts }).start()
+    val got = scala.collection.mutable.ArrayBuffer[(String, String)]()
+    val q = tagEmissionsPersisted(agg, Seq("k"), "n", stateDir,
+      (tagged, _) => got.synchronized {
+        got ++= tagged.collect().map(r => (r.getString(0), r.getString(2)))
+      }).start()
     try {
       ms.addData(KV("a", 1), KV("b", 1)); q.processAllAvailable()
       ms.addData(KV("a", 2)); q.processAllAvailable()
-      val byKey = got.toList.groupBy(_.key)
-      assert(byKey("a").map(_.tag) == List("first", "update"))
-      assert(byKey("b").map(_.tag) == List("first"))
+      val byKey = got.toList.groupBy(_._1)
+      assert(byKey("a").map(_._2) == List("first", "update"))
+      assert(byKey("b").map(_._2) == List("first"))
     } finally q.stop()
   }
 

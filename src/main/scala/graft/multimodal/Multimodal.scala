@@ -137,6 +137,10 @@ object Multimodal {
     def open(): Unit
     def decodeBatch(payloads: Seq[Array[Byte]]): Seq[(Int, Int, Int)]
     def close(): Unit
+    /** `channels` of a null payload, which never reaches [[decodeBatch]]:
+      * NULL unless the codec's channel count is a constant of the codec.
+      */
+    def nullChannels: Option[Int] = None
   }
 
   /** Deterministic fake codec (no image libs in this environment): same
@@ -153,6 +157,7 @@ object Multimodal {
         (math.floorMod(h, 1920) + 32, math.floorMod(h / 7, 1080) + 32, 3)
       }
     def close(): Unit = opened = false
+    override def nullChannels: Option[Int] = Some(3)
   }
 
   /** Oracle-reproducible codec twin of [[StubCodec]]: dimensions from the
@@ -174,12 +179,15 @@ object Multimodal {
         ((u32(0) % 1920L + 32L).toInt, (u32(4) % 1080L + 32L).toInt, 3)
       }
     def close(): Unit = md = null
+    // the oracle's `3 AS channels` is a literal: it holds for NULL text too
+    override def nullChannels: Option[Int] = Some(3)
   }
 
   /** Decode `binCol` partition-by-partition in batches of `batchSize`.
     * Returns (id, width, height, channels) — join back on the id for the
     * full row (keeps the decode exchange-free and the shuffled payload
-    * bytes out of the decode output).
+    * bytes out of the decode output). A null payload skips the codec and
+    * comes out with NULL width and height ([[BatchCodec.nullChannels]]).
     */
   def decodePartitioned(df: DataFrame, idCol: String, binCol: String,
       codecFactory: () => BatchCodec, batchSize: Int = 64): DataFrame = {
@@ -191,19 +199,19 @@ object Multimodal {
         val codec = codecFactory()
         codec.open()
         val batched = it.grouped(batchSize).flatMap { chunk =>
-          val decoded = codec.decodeBatch(chunk.map(_._2))
-          chunk.iterator.zip(decoded.iterator).map { case ((id, _), (w, h, c)) =>
-            (id, w, h, c)
+          val decoded = codec.decodeBatch(chunk.map(_._2).filter(_ != null))
+            .iterator
+          chunk.iterator.map {
+            case (id, null) => (id, None, None, codec.nullChannels)
+            case (id, _) =>
+              val (w, h, c) = decoded.next()
+              (id, Some(w), Some(h), Some(c))
           }
         }
         // close the codec when the partition iterator is exhausted
-        new Iterator[(Long, Int, Int, Int)] {
-          def hasNext: Boolean = {
-            val n = batched.hasNext
-            if (!n) codec.close()
-            n
-          }
-          def next(): (Long, Int, Int, Int) = batched.next()
+        new Iterator[(Long, Option[Int], Option[Int], Option[Int])] {
+          def hasNext: Boolean = batched.hasNext || { codec.close(); false }
+          def next() = batched.next()
         }
       }
       .toDF(idCol, "width", "height", "channels")
@@ -344,7 +352,8 @@ object Multimodal {
     // unparseable rows only shift log2(n) negligibly.
     val p = if (planes > 0) planes
       else graft.operators.Similarity.planesFor(math.max(1L, df.count()))
-    val embedded = embedPartitioned(df, idCol, binCol, grid).localCheckpoint()
+    val embedded = graft.operators.Checkpoints.pin(
+      embedPartitioned(df, idCol, binCol, grid))
     val blocked = embedded.withColumn("block",
       graft.functions.VectorFunctions.signatureBucket(
         graft.functions.VectorFunctions.hyperplaneSignature(

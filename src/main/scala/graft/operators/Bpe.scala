@@ -66,16 +66,15 @@ object Bpe {
     * is noise, not structure).
     *
     * Driver-side loop of O(nMerges) rounds over the word table, with the
-    * lineage cut each round (localCheckpoint) so round n doesn't replay
-    * rounds 1..n-1 — the [[Clusters]] loop discipline.
+    * lineage cut each round ([[Checkpoints.advance]]) so round n doesn't
+    * replay rounds 1..n-1 — the [[Clusters]] loop discipline.
     */
   def train(docs: DataFrame, textCol: String, nMerges: Int,
       minFreq: Long = 2L): Seq[(String, String, Long)] = {
     require(nMerges > 0, s"nMerges must be positive: $nMerges")
-    var words = wordFrequencies(docs, textCol)
+    var words = Checkpoints.pin(wordFrequencies(docs, textCol)
       .withColumn("syms", charSymbols(col("word")))
-      .select(col("syms"), col("freq"))
-      .localCheckpoint(true)
+      .select(col("syms"), col("freq")))
     val merges = Seq.newBuilder[(String, String, Long)]
     var done = false
     var round = 0
@@ -88,10 +87,8 @@ object Bpe {
         val (a, b, c) = (best(0).getString(0), best(0).getString(1),
           best(0).getLong(2))
         merges += ((a, b, c))
-        val old = words
-        words = words.withColumn("syms", applyMerge(col("syms"), a, b))
-          .localCheckpoint(true)
-        Checkpoints.free(old)
+        words = Checkpoints.advance(words)(
+          words.withColumn("syms", applyMerge(col("syms"), a, b)))
       }
       round += 1
     } finally Checkpoints.free(words)

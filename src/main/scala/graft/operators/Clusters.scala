@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   *    labels are corpus-sized, so a broadcast is categorically wrong at
   *    cluster scale (and the label-broadcast plan Spark picks from
   *    checkpoint statistics OOMed the local driver at 80x).
-  *  - `localCheckpoint` after each round truncates lineage, so round k
+  *  - a [[Checkpoints.pin]] after each round truncates lineage, so round k
   *    doesn't replay rounds 1..k-1 (iterative-DataFrame trap).
   *  - convergence is detected from the live set ALONE: an empty
   *    relabelLive means every edge already joins same-labeled nodes, so
@@ -83,19 +83,15 @@ object Clusters {
       col(dstCol).cast("long").as("d"))
     // canonicalize (least, greatest) BEFORE distinct: the dedup shuffle
     // moves |E| rows instead of the 2|E| a symmetrize-then-distinct
-    // pays. Materialize ONCE — the vertex set and every round derive
-    // from this table, and each derivation scans it twice (self-union):
-    // without the checkpoint the UPSTREAM candidate DAG (often a full
-    // minhash/LSH pass over the corpus) re-executes four times
-    // (measured +150 s at the 80x smoke).
+    // pays. Pinned: the vertex set and every round scan it twice, and the
+    // upstream candidate DAG re-ran four times unpinned (+150 s at 80x).
     val canon = if (edgesDeduped) raw
       else raw.select(least(col("s"), col("d")).as("s"),
         greatest(col("s"), col("d")).as("d")).distinct()
-    var e = canon.localCheckpoint()
-    var labels = e.select(col("s").as("id"))
+    var e = Checkpoints.pin(canon)
+    var labels = Checkpoints.pin(e.select(col("s").as("id"))
       .union(e.select(col("d").as("id"))).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint()
+      .withColumn("label", col("id")))
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
@@ -108,11 +104,9 @@ object Clusters {
       // two consumers read materialized blocks instead of racing to
       // compute the double join twice.
       if (round == 0) {
-        val jumped = neighborMinRound(labels, e).localCheckpoint()
-        Checkpoints.free(labels)
-        labels = jumped
+        labels = Checkpoints.advance(labels)(neighborMinRound(labels, e))
       } else {
-        val lv = relabelLive(e, labels).localCheckpoint()
+        val lv = Checkpoints.pin(relabelLive(e, labels))
         if (lv.isEmpty) {
           // CONVERGED-EARLY EXIT: zero live edges means the contracted
           // graph is label-consistent — no further PROPAGATION can change
@@ -132,12 +126,10 @@ object Clusters {
           var sum = checksum(labels)
           var flat = false
           while (!flat) {
-            val jumped = pointerJump(labels).localCheckpoint()
-            val ns = checksum(jumped)
+            labels = Checkpoints.advance(labels)(pointerJump(labels))
+            val ns = checksum(labels)
             flat = ns == sum
             sum = ns
-            Checkpoints.free(labels)
-            labels = jumped
           }
           converged = true
         } else {
@@ -164,17 +156,15 @@ object Clusters {
           import scala.concurrent.{Await, Future}
           import scala.concurrent.ExecutionContext.Implicits.global
           import scala.concurrent.duration.Duration
-          val fJump = Future(liveRound(labels, lv).localCheckpoint())
-          val fContract = Future(contractLive(lv).localCheckpoint())
+          val fJump = Future(Checkpoints.pin(liveRound(labels, lv)))
+          val fContract = Future(Checkpoints.pin(contractLive(lv)))
           val jumped = Await.result(fJump, Duration.Inf)
           val eNew = Await.result(fContract, Duration.Inf)
           Checkpoints.free(e)
           e = eNew
           Checkpoints.free(lv)
-          // the superseded round's checkpoint blocks are dead the moment
-          // `jumped` materializes — free them now instead of waiting for
-          // the ContextCleaner's GC-driven cleanup (25 stale |V|-row
-          // snapshots is real eviction pressure at corpus scale)
+          // free the superseded labels now, not at GC: 25 stale |V|-row
+          // snapshots are real eviction pressure at corpus scale
           Checkpoints.free(labels)
           labels = jumped
         }

@@ -119,7 +119,7 @@ object Cooccurrence {
     * qln(n_b)` is integer arithmetic over those units — the engine-
     * replayable form of the LM family's vocab-level quantization.
     *
-    * Scale shape: the pair matrix materializes ONCE (localCheckpoint —
+    * Scale shape: the pair matrix materializes ONCE (a pin —
     * it feeds the total, the marginal aggregate, and the output join;
     * re-deriving it would re-scan the corpus three times). Marginals
     * are vocabulary-sized and join back on the uniform center/context
@@ -127,8 +127,7 @@ object Cooccurrence {
     */
   def pmiPairs(df: DataFrame, textCol: String, window: Int = 4,
       minCount: Long = 1L): DataFrame = {
-    val pairs = skipgramPairs(df, textCol, window, minCount)
-      .localCheckpoint()
+    val pairs = Checkpoints.pin(skipgramPairs(df, textCol, window, minCount))
     val total = pairs.agg(sum(col("n_pairs")).as("t"))
     val marg = pairs.groupBy(col("center").as("w"))
       .agg(sum(col("n_pairs")).as("n_w"))

@@ -254,10 +254,10 @@ object Dedup {
     *
     * EAGER at construction: calling this (or the [[minhashNearDups]] /
     * [[minhashNearDupsFast]] wrappers) runs a Spark job THERE AND THEN
-    * to materialize `cand` via `localCheckpoint` (rationale in the body
-    * comment) — callers that only want to inspect the plan should know
-    * the candidate DAG has already executed. The checkpoint's blocks are
-    * freed when the returned frame is GC'd and the ContextCleaner runs;
+    * to materialize `cand` via [[Checkpoints.pin]] — callers that only
+    * want to inspect the plan should know the candidate DAG has already
+    * executed. The checkpoint's blocks are freed when the returned frame
+    * is GC'd and the ContextCleaner runs;
     * long-lived sessions can release them deterministically with
     * [[Checkpoints.free]] after consuming the result.
     */
@@ -265,23 +265,9 @@ object Dedup {
       textCol: String, n: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // cand feeds TWO consumers (the id-prune broadcast and the pair join
-    // itself); without materialization the whole candidate DAG — banding,
-    // bucket aggregation, pair explosion — executes twice (measured 63 s
-    // vs 40 s at the 20x scale smoke). EAGER localCheckpoint, NOT
-    // persist() and NOT a lazy checkpoint:
-    //  - persist registers the plan in the session CacheManager, which
-    //    leaks blocks in a long-lived session and canonically matches
-    //    the same query built later — benchmark reruns silently read
-    //    warm-cache results;
-    //  - a LAZY checkpoint lets the broadcast-exchange thread and the
-    //    main join thread race to materialize it concurrently (two full
-    //    candidate-DAG executions fighting for cores — measured 189 s vs
-    //    68 s on the 20x smoke).
-    // Eager = one coordinated job here; blocks are invisible to plan
-    // matching and free via the ContextCleaner on GC. This makes
-    // pairJaccard eager at call time, like the CC loop.
-    val candM = cand.localCheckpoint()
+    // two consumers (the id-prune broadcast and the pair join): unpinned,
+    // the candidate DAG ran twice (63 s vs 40 s at the 20x scale smoke)
+    val candM = Checkpoints.pin(cand)
     val candIds = candM.select(col("id_a").as(idCol))
       .union(candM.select(col("id_b").as(idCol))).distinct()
     // only candidate docs are ever shingled (semi-join pruning); shingles
@@ -395,8 +381,8 @@ object Dedup {
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleN: Int = 3, k: Int = 0, bands: Int = 0): DataFrame = {
     val (k0, b0) = resolveBanding(df, threshold, k, bands)
-    // Candidate materialization (one localCheckpoint, two consumers)
-    // happens inside pairJaccard — see the comment there.
+    // Candidate materialization (one pin, two consumers) happens inside
+    // pairJaccard — see the comment there.
     pairJaccard(minhashCandidates(df, idCol, textCol, shingleN, k0, b0),
         df, idCol, textCol, shingleN)
       .filter(col("jaccard") >= threshold)

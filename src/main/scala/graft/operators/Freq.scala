@@ -243,7 +243,7 @@ object Freq {
     // exceeds the subtrahend) and hitter readers filter items anyway.
     // Pin the merge ONCE and probe emptiness on the pinned frame:
     // isEmpty on the raw plan would execute the whole merge a second
-    // time ahead of the localCheckpoint.
+    // time ahead of the pin.
     import spark.implicits._
     replaceStore(merged.withColumn("n_total", lit(total)), storePath) {
       pinned =>
@@ -432,14 +432,11 @@ object Freq {
     * than silently disappearing.
     *
     * CONSTRUCTION runs the pass-1 corpus scan immediately: the shared
-    * summary is pinned with an eager localCheckpoint so the candidate
-    * and certificate branches of the RETURNED plan read one bounded
-    * table instead of re-scanning (lazy persist cannot promise that —
-    * branch-specialized column pruning defeats exchange reuse, a
-    * measured extra corpus scan — and CacheManager entries are never
-    * auto-freed). The pinned blocks (≤ (capacity+1)·|partitions| summary
-    * rows) are reclaimed by the ContextCleaner once the returned plan
-    * is unreachable, so build the plan when you intend to run it and
+    * summary is pinned so the candidate and certificate branches of the
+    * RETURNED plan read one bounded table instead of re-scanning. The
+    * pinned blocks (≤ (capacity+1)·|partitions| summary rows) are
+    * reclaimed by the ContextCleaner once the returned plan is
+    * unreachable, so build the plan when you intend to run it and
     * drop the reference after; a loop that constructs many of these and
     * holds them all accumulates executor storage until they go out of
     * scope.
@@ -459,9 +456,8 @@ object Freq {
     // one aggregate over candidates AND the per-group (group, null)
     // marker rows, pinned eagerly so both branches read one bounded
     // table and the pass-1 scan runs once (see exactTopK)
-    val agged = summary.groupBy(col("group"), col("item"))
-      .agg(sum(col("est")).as("est"), sum(col("dec")).as("dec"))
-      .localCheckpoint(true)
+    val agged = Checkpoints.pin(summary.groupBy(col("group"), col("item"))
+      .agg(sum(col("est")).as("est"), sum(col("dec")).as("dec")))
     val cand = agged.filter(col("item").isNotNull)
       .select(col("group").as("__mg_g"), col("item").as("__mg_i"))
     val stats = agged.filter(col("item").isNull)
@@ -543,9 +539,8 @@ object Freq {
     * over the k retained rows (bounded, the Packing.scala:14
     * convention).
     *
-    * CONSTRUCTION runs the pass-1 corpus scan immediately (eager
-    * localCheckpoint of the shared summary — see [[exactTopKPerGroup]]
-    * for why lazy persist cannot replace it); the pinned blocks are
+    * CONSTRUCTION runs the pass-1 corpus scan immediately (the shared
+    * summary is pinned, as in [[exactTopKPerGroup]]); the pinned blocks are
     * freed by the ContextCleaner once the returned plan is unreachable,
     * so don't construct-and-hold these in bulk.
     */
@@ -568,9 +563,8 @@ object Freq {
     // as a third full corpus scan in the executed plan. The pinned frame
     // is ≤ (capacity+1)·|partitions| summary rows — the
     // blendByRankBySketch construction-job discipline.
-    val agged = summary.groupBy(col("item"))
-      .agg(sum(col("est")).as("est"), sum(col("dec")).as("dec"))
-      .localCheckpoint(true)
+    val agged = Checkpoints.pin(summary.groupBy(col("item"))
+      .agg(sum(col("est")).as("est"), sum(col("dec")).as("dec")))
     // candidate column renamed + DataFrame-qualified probe so an input
     // column named "item" can't make the join condition ambiguous
     val cand = agged.filter(col("item").isNotNull)

@@ -54,12 +54,10 @@ object Graphs {
     val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
     val e = if (edgesDistinct) e0 else e0.distinct()
     // one edge artifact with out-degree attached (the posting-norm trick)
-    val ew = e.join(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-        .hint("shuffle_hash"), Seq("src"))
-      .localCheckpoint(true)
-    val nodes = ew.select(col("src").as("id"))
-      .union(ew.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(true)
+    val ew = Checkpoints.pin(e.join(e.groupBy(col("src"))
+      .agg(count(lit(1)).as("outdeg")).hint("shuffle_hash"), Seq("src")))
+    val nodes = Checkpoints.pin(ew.select(col("src").as("id"))
+      .union(ew.select(col("dst").as("id"))).distinct())
     val n = nodes.count() // the one driver scalar (planning metadata)
     require(n > 0, "empty graph")
     val baseTerm = (scale * (100 - dampPct) / 100) / n
@@ -76,8 +74,7 @@ object Graphs {
           lit(baseTerm) + expr(s"($dampPct * coalesce(s, 0L)) div 100"))
         .select(col("id"), col("rank"))
       if (i % checkpointEvery == checkpointEvery - 1 && i != iters - 1) {
-        rank = rank.localCheckpoint(true)
-        if (lastCp != null) Checkpoints.free(lastCp)
+        rank = Checkpoints.advance(lastCp)(rank)
         lastCp = rank
       }
       i += 1
@@ -115,20 +112,15 @@ object Graphs {
     val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
     // edgesDistinct: the pageRank contract — skip the full-|E| dedup
     // shuffle when the edge build already ends in a distinct
-    val e = (if (edgesDistinct) e0 else e0.distinct()).localCheckpoint(true)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(true)
-    // Pin discipline: each half-step EAGERLY materializes one |V|-row
-    // frame; the loop is strictly sequential, so any pin older than the
-    // newest TWO has been fully consumed by later materializations and
-    // is released on the spot — without this, cached frames accumulate
-    // ~2 per iteration. The final two pins back the returned frame (as
-    // does `nodes`; `e` is freed before returning) and stay live until
-    // the caller is done — [[Checkpoints.free]] applies afterwards, the
-    // pageRank contract.
+    val e = Checkpoints.pin(if (edgesDistinct) e0 else e0.distinct())
+    val nodes = Checkpoints.pin(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct())
+    // Each half-step pins one |V|-row frame. The loop is sequential, so a
+    // pin older than the newest two is fully consumed and freed on the
+    // spot. The last two (and `nodes`) back the result: the caller's to
+    // free, the pageRank contract.
     val pinned = scala.collection.mutable.Queue.empty[DataFrame]
-    def pin(df: DataFrame): Unit = {
+    def keepNewestTwo(df: DataFrame): Unit = {
       pinned += df
       while (pinned.size > 2) Checkpoints.free(pinned.dequeue())
     }
@@ -136,7 +128,7 @@ object Graphs {
         aggSide: String, outCol: String): DataFrame = {
       val (raw, out) = hitsHalfStep(e, nodes, scores, scoreCol, joinSide,
         aggSide, outCol, scale)
-      pin(raw)
+      keepNewestTwo(raw)
       out
     }
     var hub = nodes.withColumn("h", lit(scale))
@@ -146,10 +138,10 @@ object Graphs {
       auth = halfStep(hub, "h", "src", "dst", "a")
       hub = halfStep(auth, "a", "dst", "src", "h")
       if (i % checkpointEvery == checkpointEvery - 1 && i != iters - 1) {
-        auth = auth.localCheckpoint(true)
-        pin(auth)
-        hub = hub.localCheckpoint(true)
-        pin(hub)
+        auth = Checkpoints.pin(auth)
+        keepNewestTwo(auth)
+        hub = Checkpoints.pin(hub)
+        keepNewestTwo(hub)
       }
       i += 1
     }
@@ -212,11 +204,10 @@ object Graphs {
     // ~10 with the cut), so the |V|-row materialization
     // is mandatory plan hygiene, not an optimization (wall-clock
     // neutral at sf0.1)
-    val raw = scores.withColumnRenamed("id", joinSide)
+    val raw = Checkpoints.pin(scores.withColumnRenamed("id", joinSide)
       .join(e.hint("shuffle_hash"), Seq(joinSide))
       .groupBy(col(aggSide).as("id"))
-      .agg(sum(col(scoreCol)).as("raw"))
-      .localCheckpoint(true)
+      .agg(sum(col(scoreCol)).as("raw")))
     val m = raw.agg(max(col("raw")).as("m"))
     val out = nodes.join(raw.hint("shuffle_hash"), Seq("id"), "left")
       .crossJoin(broadcast(m))

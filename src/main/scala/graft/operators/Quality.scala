@@ -147,7 +147,7 @@ object Quality {
 
   /** The pre-checkpoint scoring plan of [[selectByTokenBudget]] —
     * factored out so its shape can be plan-gated directly: the
-    * localCheckpoint in the caller collapses all of this to a LogicalRDD
+    * checkpoint in the caller collapses all of this to a LogicalRDD
     * leaf, making it invisible to any gate over the FINAL plan.
     */
   private[graft] def scoredBands(df: DataFrame, idCol: String,
@@ -167,7 +167,7 @@ object Quality {
     * running token total at its rank is <= budget.
     *
     * EAGER at construction: the per-doc score table materializes via
-    * `localCheckpoint` when this is CALLED (it feeds three consumers —
+    * [[Checkpoints.pin]] when this is CALLED (it feeds three consumers —
     * rationale at the definition); release its blocks with
     * [[Checkpoints.free]] in long-lived sessions.
     *
@@ -185,14 +185,10 @@ object Quality {
       budget: Long, bandScale: Int = 1000,
       bucketWidth: Long = 1L << 16): DataFrame = {
     require(budget >= 0, s"budget must be non-negative: $budget")
-    // EAGER localCheckpoint: the scored table feeds THREE consumers
-    // (band totals, whole-band keep filter, boundary-band prefix sum),
-    // and each would otherwise re-run the two corpus tokenization passes
-    // inside unigramLogprob — measured 174 s vs ~60 s at the 80x scale
-    // smoke. One row per doc (id, tokens, score, band), far smaller than
-    // the corpus; same eager-not-persist rationale as Dedup.pairJaccard,
-    // released deterministically via [[Checkpoints.free]] if needed.
-    val scored = scoredBands(df, idCol, textCol, bandScale).localCheckpoint()
+    // THREE consumers (band totals, whole-band keep filter, boundary-band
+    // prefix sum) would each re-run unigramLogprob's two tokenization
+    // passes: measured 174 s vs ~60 s at the 80x scale smoke
+    val scored = Checkpoints.pin(scoredBands(df, idCol, textCol, bandScale))
     val bands = scored.groupBy(col("band"))
       .agg(sum(col("n_tokens")).as("__bt"))
     val wB = Window.orderBy(col("band").desc)

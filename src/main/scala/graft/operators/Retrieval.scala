@@ -47,7 +47,7 @@ object Retrieval {
     * thousands of splits), it is respread first so the tokenize/explode
     * CPU parallelizes; and postings — which feed THREE consumers (the
     * search join, the df aggregate, the stored write) — are eagerly
-    * localCheckpoint'ed so the corpus tokenize pass runs exactly once,
+    * pinned so the corpus tokenize pass runs exactly once,
     * not once per consumer.
     */
   def buildIndex(docs: DataFrame, idCol: String, textCol: String): TextIndex = {
@@ -56,9 +56,9 @@ object Retrieval {
     val t = tokens(col(textCol))
     val exploded = src.select(col(idCol).as("doc_id"), size(t).as("len"),
       explode(t).as("term"))
-    val postings = exploded.groupBy(col("term"), col("doc_id"), col("len"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+    val postings = Checkpoints.pin(exploded
+      .groupBy(col("term"), col("doc_id"), col("len"))
+      .agg(count(lit(1)).as("tf")))
     val terms = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
     // corpus stats straight off the docs scan — map-side aggregate, no
     // shuffle (postings would need a second doc_id-keyed aggregation)

@@ -417,7 +417,7 @@ object Selection {
     *      on the SKETCH rows only:
     *      `pct = (minRankInBucket − 1)·1e6 div (n − 1)` — the exact
     *      form's rank→micro-unit law applied to the bucket's first rank.
-    *      The percentile table localCheckpoints (bounded, sketch-sized —
+    *      The percentile table is pinned (bounded, sketch-sized —
     *      the Retrieval.buildIndex discipline) and BROADCASTS back onto
     *      the corpus as two map-side hash joins; rows join by their own
     *      bucket index, so percentile assignment is row-local. (A
@@ -473,7 +473,7 @@ object Selection {
     // BOTH signals' histograms in ONE corpus pass: explode each row to
     // (signal, bucket) and let the map-side combine cap the shuffle at
     // |parts|·(nHistA + nHistB) rows, then the min-rank percentile law
-    // over sketch rows only. The pct table localCheckpoints — BOUNDED
+    // over sketch rows only. The pct table is pinned — BOUNDED
     // materialization (sketch-sized, the Retrieval.buildIndex
     // discipline) — so the threshold job below and the returned plan
     // both read the KB-scale checkpoint instead of re-scanning the
@@ -482,7 +482,7 @@ object Selection {
     val wCum = Window.partitionBy(col(partCol), col("__s"))
       .orderBy(col("__k")).rowsBetween(Window.unboundedPreceding, 0)
     val wCnt = Window.partitionBy(col(partCol), col("__s"))
-    val pct = base.select(col(partCol),
+    val pct = Checkpoints.pin(base.select(col(partCol),
         explode(map(lit("a"), col("__ba"), lit("b"), col("__bb")))
           .as(Seq("__s", "__k")))
       .groupBy(col(partCol), col("__s"), col("__k"))
@@ -492,8 +492,7 @@ object Selection {
       .select(col(partCol), col("__s"), col("__k"),
         when(col("__n") === 1L, lit(1000000L))
           .otherwise(longFloorDiv((col("__cum") - col("__c")) * 1000000L,
-            col("__n") - 1L)).as("__pct"))
-      .localCheckpoint()
+            col("__n") - 1L)).as("__pct")))
     val pa = pct.filter(col("__s") === "a")
       .select(col(partCol), col("__k").as("__ba"), col("__pct").as("pct_a"))
     val pb = pct.filter(col("__s") === "b")

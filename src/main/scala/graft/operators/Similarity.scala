@@ -539,8 +539,8 @@ object Similarity {
       roundScale: Int = 4): DataFrame = {
     GraftFunctions.register(spark)
     val cent = spark.read.parquet(s"$path/centroids")
-    val probes = ivfProbes(queries, cent, idCol, vecCol, nProbe, roundScale)
-      .localCheckpoint() // two consumers: cid collect + the score join
+    val probes = Checkpoints.pin(ivfProbes(queries, cent, idCol, vecCol,
+      nProbe, roundScale)) // two consumers: cid collect + the score join
     // type-agnostic: cid is Long from the in-memory build but partition-
     // directory inference may read it back as Int
     val probedCids = probes.select("cid").distinct()
@@ -781,9 +781,8 @@ object Similarity {
     val cents = Array.ofDim[Array[Long]](m, ksub)
     cbRows.foreach { case (mi, j, sub) => cents(mi)(j) = sub.toArray }
     val cb = PqCodebook(m, ksub, cents(0)(0).length, cents)
-    val probes = ivfProbes(queries, cent, idCol, vecCol, nProbe, roundScale)
-      .select(col("cid"), col("qid"))
-      .localCheckpoint() // two consumers: cid collect + the score join
+    val probes = Checkpoints.pin(ivfProbes(queries, cent, idCol, vecCol,
+      nProbe, roundScale).select(col("cid"), col("qid"))) // two consumers
     val probedCids = probes.select("cid").distinct()
       .collect().map(_.get(0)).toSeq
     val codes = spark.read.parquet(s"$path/codes")

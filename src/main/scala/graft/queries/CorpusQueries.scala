@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions._
-import graft.operators.{Clusters, Decontam, Dedup}
+import graft.operators.{Checkpoints, Clusters, Decontam, Dedup}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -263,7 +263,7 @@ object CorpusQueries extends QueryModule {
       // back the copy exact dedup dropped and change the per-lang counts
       // (the oracle gate would catch it). It is not checked at run time:
       // a check costs a Spark job on every run of the query.
-      val survivorIds = d2.select($"doc_id").localCheckpoint(true)
+      val survivorIds = Checkpoints.pin(d2.select($"doc_id"))
       val d2r = docs.join(survivorIds, Seq("doc_id"), "left_semi")
       val heavy = Dedup.dupSpanCoverage(d2r, "doc_id", "text", n = 5)
         .filter($"covered_frac" > 0.5).select($"doc_id")

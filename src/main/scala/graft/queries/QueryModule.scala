@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.operators.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,7 +23,8 @@ trait QueryModule {
   * per-doc exact-integer sums), and three identical rebuilds dominated
   * the family's bench cost (q141 additionally consumed the chain twice —
   * threshold construction + scored plan). The scored frame is
-  * `localCheckpoint`ed so every consumer reads materialized partitions.
+  * pinned ([[Checkpoints.pin]]) so every consumer reads materialized
+  * partitions.
   * Keyed by session ([[SharedFrames]]), so a stopped session's dead
   * checkpoint blocks are never reused.
   */
@@ -55,17 +57,14 @@ object SharedDsir {
 }
 
 /** Bounded per-session materialization cache behind the Shared* frame
-  * families (LM scoring, span dedup). The old per-family unbounded
-  * ConcurrentHashMaps pinned one localCheckpoint per (app, dir) touched,
-  * forever — fine for the one-dir verify driver, a slow leak for any
-  * long-lived session sweeping many dirs. Access-ordered LRU capped at
-  * [[maxEntries]]: eviction drops the reference ONLY — it must NOT call
-  * release()/unpersist, because another thread may still be mid-query
-  * over the evicted localCheckpoint'd frame, and localCheckpoint
-  * truncates lineage, so removing its blocks fails that query
-  * unrecoverably. Dropping the reference is enough: the ContextCleaner
-  * frees the checkpoint blocks once the RDD is unreachable (i.e. after
-  * every in-flight consumer finishes). A later request simply recomputes.
+  * families (LM scoring, span dedup): an access-ordered LRU capped at
+  * [[maxEntries]], so a long-lived session sweeping many dirs does not
+  * pin one frame per dir forever. Eviction drops the reference ONLY and
+  * must NOT call release()/[[Checkpoints.free]]: another thread may still
+  * be mid-query over the evicted pin, whose lineage is truncated, so
+  * removing its blocks fails that query unrecoverably. The ContextCleaner
+  * frees the blocks once every in-flight consumer is done; a later
+  * request simply recomputes.
   */
 object SharedFrames {
   // sized for the round-19 table-plan memo (graft.Tables: 10 lazy plans
@@ -112,10 +111,10 @@ object SharedFrames {
     }
   }
 
-  /** localCheckpoint'd-DataFrame convenience form of [[cached]]. */
+  /** Pinned-DataFrame convenience form of [[cached]]. */
   def get(s: SparkSession, tag: String, dir: String)(
       mk: => DataFrame): DataFrame =
-    cached(s, tag, dir)(mk.localCheckpoint())(graft.operators.Checkpoints.free)
+    cached(s, tag, dir)(Checkpoints.pin(mk))(Checkpoints.free)
 }
 
 /** One corpus-wide exact-substring span dedup per (session, sf dir) —

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions.tokens
-import graft.operators.{Boilerplate, Classifier, Sampling, Selection}
+import graft.operators.{Boilerplate, Checkpoints, Classifier, Sampling, Selection}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -128,18 +128,16 @@ object SelectionQueries extends QueryModule {
       import s.implicits._
       // the dedup + filter + label chain is consumed by BOTH the
       // gradient construction job and the returned scoring plan —
-      // materialize it ONCE (the Retrieval.buildIndex localCheckpoint
-      // discipline; running the chain per consumer measured 17 s vs
-      // ~3 s at sf0.1). n_removed rides through the filter, so no
+      // materialize it ONCE (running the chain per consumer measured
+      // 17 s vs ~3 s at sf0.1). n_removed rides through the filter, so no
       // second dedup pass is needed for the output column. The dedup
       // itself is the session-shared q142 frame (SharedSpanDedup).
       val deduped = SharedSpanDedup.deduped(s, dir)
-      val labeled = graft.operators.Repetition.filterByRepetition(
-          deduped, "doc_id", "text")
-        .join(Tables.documents(s, dir).select($"doc_id", $"lang"),
-          Seq("doc_id"))
-        .withColumn("is_ref", $"lang" === "en")
-        .localCheckpoint()
+      val labeled = Checkpoints.pin(
+        graft.operators.Repetition.filterByRepetition(deduped, "doc_id", "text")
+          .join(Tables.documents(s, dir).select($"doc_id", $"lang"),
+            Seq("doc_id"))
+          .withColumn("is_ref", $"lang" === "en"))
       val w = Array.fill(64)(0L)
       Classifier.gradientAtZero(labeled, "text", "is_ref", buckets = 64)
         .select($"bucket".cast("int"), $"grad2")

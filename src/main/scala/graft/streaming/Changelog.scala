@@ -135,7 +135,8 @@ object Changelog {
       val stepped = step(current)
       val (feedback, emitted) = continueCond(stepped)
       out = Some(out.map(_.union(emitted)).getOrElse(emitted))
-      current = feedback.localCheckpoint() // truncate the growing lineage
+      // truncate the growing lineage; never freed, `out` reads every pin
+      current = graft.operators.Checkpoints.pin(feedback)
       i += 1
     }
     out.getOrElse(ds.sparkSession.emptyDataset(ds.encoder))

@@ -19,8 +19,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * records one sample per Janino compile, i.e. per cache miss.
   */
 class CodegenReuseSpec extends SparkSpec {
-  /** The fixture tables beside the repository. */
-  private val dir = new File("../testdata/sf0.01").getCanonicalPath
+  private val dir = "/root/testdata/sf0.01"
 
   private val textKernels: Seq[String] = {
     val all = SparkEntry.queries.keys.toSeq

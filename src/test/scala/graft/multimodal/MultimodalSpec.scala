@@ -11,6 +11,9 @@ class MultimodalSpec extends SparkSpec {
   private val wav = "RIFF1234WAVE".getBytes("UTF-8")
   private val junk = "hello world bytes".getBytes("UTF-8")
 
+  /** (id, width, height, channels) as `decodePartitioned` returns them. */
+  private type Dims = (Long, Option[Int], Option[Int], Option[Int])
+
   private def payloads = Seq((1L, jpeg), (2L, png), (3L, wav), (4L, junk))
     .toDF("id", "payload")
 
@@ -79,6 +82,28 @@ class MultimodalSpec extends SparkSpec {
     val again = Multimodal.decodePartitioned(df, "doc_id", "payload",
       () => new Multimodal.StubCodec, 64).collect()
     assert(rows.map(_.toSeq).toSet == again.map(_.toSeq).toSet)
+  }
+
+  test("partition-batched decode: a null payload skips the codec and has NULL dims") {
+    import graft.multimodal.Multimodal
+    // q59's shape: binary payloads cast from text, one row with null text
+    val df = Seq((1L, Some("alpha")), (2L, None), (3L, Some("gamma")))
+      .toDF("doc_id", "text").withColumn("payload", $"text".cast("binary"))
+    def decode(codec: () => Multimodal.BatchCodec): Map[Long, Dims] =
+      Multimodal.decodePartitioned(df.coalesce(1), "doc_id", "payload", codec, 2)
+        .as[Dims].collect().map(r => r._1 -> r).toMap
+    // Md5Codec agrees with its Column twin, the law q59's oracle replays:
+    // md5 of NULL is NULL, and channels is the literal 3
+    val want = df.select($"doc_id",
+        Multimodal.decodeStubMd5($"payload").as("d"))
+      .select($"doc_id", $"d.width", $"d.height", $"d.channels")
+      .as[Dims].collect().map(r => r._1 -> r).toMap
+    val md5 = decode(() => new Multimodal.Md5Codec)
+    assert(md5 == want)
+    assert(md5(2L) == ((2L, None, None, Some(3))))
+    assert(md5(1L)._2.isDefined && md5(3L)._3.isDefined)
+    assert(decode(() => new Multimodal.StubCodec)(2L) == ((2L, None, None, Some(3))))
+    assert(decode(() => new HeaderCodec)(2L) == ((2L, None, None, None)))
   }
 
   test("near-dup pipeline: identical payloads -> cosine 1.0 pair") {

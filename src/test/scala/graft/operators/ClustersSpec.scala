@@ -37,6 +37,21 @@ class ClustersSpec extends SparkSpec {
     assert(got.values.toSet == Set(1L))
   }
 
+  test("connectedComponents leaves one pin: the labels its result reads") {
+    // the 40-node path runs round 0, live rounds and jump-only rounds
+    val edges = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    var result: DataFrame = null
+    val left = pinnedBy { result = Clusters.connectedComponents(edges) }
+    val read = result.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+    assert(left.size == 1 && left == read,
+      s"pins left: $left; pins the result reads: $read")
+    assert(result.as[(Long, Long)].collect().forall(_._2 == 1L))
+    Checkpoints.free(result)
+    assert((spark.sparkContext.getPersistentRDDs.keySet.toSet & left).isEmpty)
+  }
+
   test("connectedComponents separates components and ignores direction/dup edges") {
     val edges = Seq((5L, 3L), (3L, 5L), (3L, 9L), // comp {3,5,9}
       (20L, 21L), // comp {20,21}

@@ -108,7 +108,7 @@ class RepetitionSpec extends SparkSpec {
     * and non-BMP text.
     */
   private lazy val paritySet: DataFrame = {
-    val fixtures = new File("../testdata/sf0.001/documents.parquet")
+    val fixtures = new File("/root/testdata/sf0.001/documents.parquet")
     assert(fixtures.exists, s"fixtures not found at ${fixtures.getCanonicalPath}")
     val emoji = "\uD83D\uDE00"
     spark.read.parquet(fixtures.getCanonicalPath)
@@ -204,7 +204,7 @@ class RepetitionSpec extends SparkSpec {
     // cost this pins out. q131 plans none at all; q135's only ones are
     // the URL canonicalizer's query-parameter filter(), which reads the
     // url, not the text.
-    val dir = new File("../testdata/sf0.001").getCanonicalPath
+    val dir = "/root/testdata/sf0.001"
     def hofs(q: String): Seq[HigherOrderFunction] =
       SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
         .collectWithSubqueries { case p => p }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.PlanWalk
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
@@ -19,9 +20,10 @@ import scala.util.control.NonFatal
   * A first argument that names no query is an output directory: each
   * query's job lines and its formatted plan go to `<dir>/<query>.txt`,
   * the plan evidence the optimization rounds commit under plans/rNN/.
-  * The plan is read after the last run, from the same
-  * `queryExecution.executedPlan` PlanGateSpec gates, so it reflects any
-  * jobs the query ran while it was built.
+  * The timed `.count()` runs a separate aggregate plan, as Bench's does,
+  * so after the last run `PlanWalk.finalPlan` runs the query's own plan
+  * once, untimed: the written plan is AQE's final plan
+  * (`isFinalPlan=true`), the one PlanGateSpec gates.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... sbt 'runMain graft.ProfJobs [outDir] q85_semantic_dedup ...'
   */
@@ -82,8 +84,10 @@ object ProfJobs {
           f" rows=$rows"
         println(line)
         report ++= line + "\n"
-        if (i == runs)
+        if (i == runs) {
+          PlanWalk.finalPlan(df)
           report ++= "\n" + df.queryExecution.explainString(FormattedMode)
+        }
       } catch { case NonFatal(e) =>
         val line = s"PROFJOBS $name FAILED: ${e.getClass.getName}: ${e.getMessage}"
         println(line)

@@ -1,19 +1,40 @@
 package graft.plans
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** Shared executed-plan traversal for scale-shape assertions (used by
-  * the plan-gating specs — one copy, so the checks can't drift). `walk` crosses AQE boundaries (AdaptiveSparkPlanExec, query
-  * stages, reused exchanges and subqueries), which plain `children`
-  * recursion does not: a materialized shuffle stage is a LEAF whose real
-  * subtree hangs off `plan`, and a reused exchange is a LEAF over the
-  * exchange it reuses.
+/** Shared executed-plan reading for scale-shape assertions (used by the
+  * plan-gating specs and `graft.ProfJobs`: one copy, so the checks can't
+  * drift). [[finalPlan]] is the one reader of a frame's plan. `walk`
+  * crosses AQE boundaries (AdaptiveSparkPlanExec, query stages, reused
+  * exchanges and subqueries), which plain `children` recursion does not:
+  * a materialized shuffle stage is a LEAF whose real subtree hangs off
+  * `plan`, and a reused exchange is a LEAF over the exchange it reuses.
   */
 object PlanWalk {
+
+  /** The plan `df` ran: runs `df`'s own plan to completion
+    * (`queryExecution.toRdd.count()`) and returns its executed plan,
+    * under AQE the final one (`isFinalPlan=true`, without the adaptive
+    * wrapper and its initial plan). `df.count()` would run a separate
+    * aggregate plan and leave `df`'s adaptive plan as planned before
+    * run-time re-optimization, so its exchanges and join strategies are
+    * not the ones that ran.
+    */
+  def finalPlan(df: DataFrame): SparkPlan = {
+    df.queryExecution.toRdd.count()
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec =>
+        if (!a.isFinalPlan) throw new IllegalStateException(s"not AQE's final plan:\n$a")
+        a.executedPlan
+      case p => p
+    }
+  }
+
   def walk(p: SparkPlan): Seq[SparkPlan] = {
     val extra = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        Seq(a.executedPlan)
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
       case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
         Seq(q.plan)
       case r: org.apache.spark.sql.execution.ReusedSubqueryExec => Seq(r.child)

@@ -34,14 +34,9 @@ object StreamJoins {
     */
   def windowJoin(left: DataFrame, right: DataFrame,
       leftTs: String, rightTs: String, leftKey: String, rightKey: String,
-      size: String, wmDelay: String): DataFrame = {
-    val l = left.withWatermark(leftTs, wmDelay)
-      .withColumn("__wl", window(col(leftTs), size)).drop(leftTs)
-    val r = right.withWatermark(rightTs, wmDelay)
-      .withColumn("__wr", window(col(rightTs), size)).drop(rightTs)
-    l.join(r, col(leftKey) === col(rightKey) && col("__wl") === col("__wr"))
-      .withColumnRenamed("__wl", "window").drop("__wr")
-  }
+      size: String, wmDelay: String): DataFrame =
+    sameWindowJoin(left, right, leftTs, rightTs, leftKey, rightKey, size,
+      wmDelay, "inner").withColumnRenamed("__wl", "window").drop("__wr")
 
   /** Inner equi-key interval join: right.ts in [left.ts + lower,
     * left.ts + upper), upper exclusive (the reference demo's
@@ -65,15 +60,9 @@ object StreamJoins {
     */
   def windowLeftJoin(left: DataFrame, right: DataFrame,
       leftTs: String, rightTs: String, leftKey: String, rightKey: String,
-      size: String, wmDelay: String): DataFrame = {
-    val l = left.withWatermark(leftTs, wmDelay)
-      .withColumn("__wl", window(col(leftTs), size)).drop(leftTs)
-    val r = right.withWatermark(rightTs, wmDelay)
-      .withColumn("__wr", window(col(rightTs), size)).drop(rightTs)
-    l.join(r, col(leftKey) === col(rightKey) && col("__wl") === col("__wr"),
-        "left_outer")
-      .withColumnRenamed("__wl", "window").drop("__wr")
-  }
+      size: String, wmDelay: String): DataFrame =
+    sameWindowJoin(left, right, leftTs, rightTs, leftKey, rightKey, size,
+      wmDelay, "left_outer").withColumnRenamed("__wl", "window").drop("__wr")
 
   /** Full-outer equi-key join within the same tumbling window — the
     * streaming transaction-match shape (reference
@@ -84,14 +73,23 @@ object StreamJoins {
     */
   def windowFullJoin(left: DataFrame, right: DataFrame,
       leftTs: String, rightTs: String, leftKey: String, rightKey: String,
-      size: String, wmDelay: String): DataFrame = {
+      size: String, wmDelay: String): DataFrame =
+    sameWindowJoin(left, right, leftTs, rightTs, leftKey, rightKey, size,
+        wmDelay, "full_outer")
+      .withColumn("window", coalesce(col("__wl"), col("__wr")))
+      .drop("__wl", "__wr")
+
+  /** The three window joins' shared body: each side's ts replaced by its
+    * window (`__wl`, `__wr`), joined on key and window with `joinType`.
+    */
+  private def sameWindowJoin(left: DataFrame, right: DataFrame,
+      leftTs: String, rightTs: String, leftKey: String, rightKey: String,
+      size: String, wmDelay: String, joinType: String): DataFrame = {
     val l = left.withWatermark(leftTs, wmDelay)
       .withColumn("__wl", window(col(leftTs), size)).drop(leftTs)
     val r = right.withWatermark(rightTs, wmDelay)
       .withColumn("__wr", window(col(rightTs), size)).drop(rightTs)
     l.join(r, col(leftKey) === col(rightKey) && col("__wl") === col("__wr"),
-        "full_outer")
-      .withColumn("window", coalesce(col("__wl"), col("__wr")))
-      .drop("__wl", "__wr")
+      joinType)
   }
 }

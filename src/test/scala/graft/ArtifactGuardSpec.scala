@@ -19,7 +19,7 @@ class ArtifactGuardSpec extends AnyFunSuite {
     """\.\s*(addArtifacts?|addJar|addFile|addArchive|addClassDir)\b|\bADD\s+(JARS?|FILES?|ARCHIVES?)\b""".r
 
   test("no source under src/main adds a Spark artifact") {
-    val hits = MainSources.codeLines()
+    val hits = SourceLines.codeLines("src/main")
       .filter(l => artifactCall.findFirstIn(l.text).isDefined)
     assert(hits.isEmpty,
       "graft sessions run with spark.sql.artifact.isolation.enabled=false, so an " +

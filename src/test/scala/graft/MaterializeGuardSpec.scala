@@ -14,7 +14,7 @@ class MaterializeGuardSpec extends AnyFunSuite {
   private val direct = Seq("localCheckpoint(", ".checkpoint(")
 
   test("no source under src/main materializes a frame outside Checkpoints") {
-    val hits = MainSources.codeLines().filter(l =>
+    val hits = SourceLines.codeLines("src/main").filter(l =>
       l.path != home && direct.exists(l.text.contains))
     assert(hits.isEmpty,
       "materialize with graft.operators.Checkpoints.pin (or advance in a " +

@@ -4,13 +4,13 @@ import java.io.File
 
 import scala.io.Source
 
-/** The non-comment lines of every Scala/Java source under `src/main`, for
-  * the specs that guard a rule over the whole codebase.
+/** The non-comment lines of every Scala/Java source under a source root
+  * (`src/main` or `src/test`), for the specs that guard a rule over the
+  * whole codebase.
   */
-object MainSources {
-  val root = new File("src/main")
+object SourceLines {
 
-  /** One source line: path relative to `src/main`, 1-based line number. */
+  /** One source line: path relative to its root, 1-based line number. */
   final case class Line(path: String, number: Int, text: String) {
     override def toString: String = s"$path:$number: ${text.trim}"
   }
@@ -26,15 +26,16 @@ object MainSources {
     t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")
   }
 
-  /** Non-comment lines; fails if there are no sources to read. */
-  def codeLines(): Seq[Line] = {
-    val files = sources(root)
-    assert(files.nonEmpty, s"no sources found under ${root.getCanonicalPath}")
+  /** Non-comment lines under `root`; fails if there are no sources to read. */
+  def codeLines(root: String): Seq[Line] = {
+    val dir = new File(root)
+    val files = sources(dir)
+    assert(files.nonEmpty, s"no sources found under ${dir.getCanonicalPath}")
     for {
       f <- files
       src = Source.fromFile(f, "UTF-8")
       (text, i) <- try src.getLines().toVector.zipWithIndex finally src.close()
       if !isComment(text)
-    } yield Line(root.toPath.relativize(f.toPath).toString, i + 1, text)
+    } yield Line(dir.toPath.relativize(f.toPath).toString, i + 1, text)
   }
 }

@@ -25,7 +25,7 @@ class TokenRuleGuardSpec extends AnyFunSuite {
       """|  CAST(sum(size(split(trim(text), '\\s+'))) AS BIGINT)"""))
 
   test("no source under src/main restates the token rule outside TextFunctions") {
-    val lines = MainSources.codeLines()
+    val lines = SourceLines.codeLines("src/main")
     val hits = lines.filter(l => l.path != home &&
       restated.exists(l.text.contains) && !allowed((l.path, l.text.trim)))
     assert(hits.isEmpty,

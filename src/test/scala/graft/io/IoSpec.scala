@@ -1,6 +1,7 @@
 package graft.io
 
 import graft.{SparkSpec, Tables}
+import graft.plans.PlanWalk
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -59,7 +60,7 @@ class IoSpec extends SparkSpec {
     assert(back.count() == batch.count())
     // pushdown parity with parquet: the predicate reaches the ORC scan
     val filtered = back.filter($"o_orderkey" < 100)
-    val scanStr = filtered.queryExecution.executedPlan.toString
+    val scanStr = PlanWalk.finalPlan(filtered).toString
     assert(scanStr.contains("PushedFilters: [IsNotNull(o_orderkey), LessThan(o_orderkey,100)"),
       s"filter not pushed to ORC scan:\n$scanStr")
 

@@ -1,6 +1,7 @@
 package graft.io
 
 import graft.{SparkSpec, Tables}
+import graft.plans.PlanWalk
 import org.apache.spark.sql.functions._
 
 /** Physical-layout plan gates: bucketing removes the join exchanges,
@@ -35,9 +36,7 @@ class LayoutSpec extends SparkSpec {
     // disable broadcast so the test observes the shuffle-vs-bucket choice
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      joined.collect()
-      val p = joined.queryExecution.executedPlan.toString()
-        .split("== Initial Plan ==")(0)
+      val p = PlanWalk.finalPlan(joined).toString()
       assert(!p.contains("Exchange"),
         s"bucketed join still shuffles:\n$p")
       // result parity with the plain join
@@ -55,8 +54,7 @@ class LayoutSpec extends SparkSpec {
 
     val read = spark.read.parquet(s"$out/orders")
       .filter($"order_month" === "1996-03")
-    read.collect()
-    val p = read.queryExecution.executedPlan.toString()
+    val p = PlanWalk.finalPlan(read).toString()
     assert(p.contains("PartitionFilters") && p.contains("order_month"),
       s"no partition pruning in:\n$p")
     // correctness: pruned read equals the row-filtered full read

@@ -44,10 +44,14 @@ class CheckpointsSpec extends SparkSpec {
     assert(intercept[RuntimeException](Checkpoints.advance(old)(throw boom)) eq boom)
     // a next whose pin job fails, not its construction
     val failing = udf { (_: Long) => throw new IllegalStateException("task failed"); 0L }
-    val thrown = intercept[Exception](
-      Checkpoints.advance(old)(old.select(failing($"x").as("x"))))
+    var thrown: Exception = null
+    val leaked = pinnedBy {
+      thrown = intercept[Exception](
+        Checkpoints.advance(old)(old.select(failing($"x").as("x"))))
+    }
     assert(Iterator.iterate[Throwable](thrown)(_.getCause).takeWhile(_ != null)
       .exists(_.getMessage.contains("task failed")), thrown)
+    assert(leaked.isEmpty, s"the failed pin left RDDs pinned: $leaked")
     assert(oldIds.subsetOf(persisted), "old was freed")
     assert(old.agg(sum($"x")).as[Long].head() == 4950L)
     Checkpoints.free(old)

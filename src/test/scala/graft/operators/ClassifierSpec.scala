@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.plans.PlanWalk
 import org.apache.spark.sql.functions._
 
 class ClassifierSpec extends SparkSpec {
@@ -279,8 +280,7 @@ class ClassifierSpec extends SparkSpec {
 
   test("score plan is map-only (no shuffle)") {
     val m = Classifier.LogRegModel(Array.fill(16)(0.1), 0.0)
-    val plan = Classifier.score(corpus, "doc_id", "text", m)
-      .queryExecution.executedPlan.toString
+    val plan = PlanWalk.finalPlan(Classifier.score(corpus, "doc_id", "text", m)).toString
     assert(!plan.contains("Exchange"), s"unexpected shuffle:\n$plan")
   }
 }

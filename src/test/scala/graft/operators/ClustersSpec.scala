@@ -3,7 +3,6 @@ package graft.operators
 import graft.SparkSpec
 import graft.plans.PlanWalk
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 class ClustersSpec extends SparkSpec {
@@ -95,16 +94,15 @@ class ClustersSpec extends SparkSpec {
   test("CC loop rounds: each round's executed plan passes the scale gate at its exchange budget") {
     // connectedComponents checkpoints every round, so the q80/q85/q144
     // gates in PlanGateSpec see only the final checkpoint scan. Replay
-    // one round of each kind here, every input checkpointed as the loop
-    // does, so each step's shuffle count is its own per-round cost.
+    // one round of each kind here, every input pinned as the loop pins
+    // it, so each step's shuffle count is its own per-round cost.
     val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = { pinned += df.localCheckpoint(); pinned.last }
-    /** Gate one step's executed plan; the exchange count is the measured
+    def pin(df: DataFrame): DataFrame = { pinned += Checkpoints.pin(df); pinned.last }
+    /** Gate one step's final plan; the exchange count is the measured
       * one at local[4], so one more (or one fewer) fails.
       */
     def gated(op: String, df: DataFrame, exchanges: Int): DataFrame = {
-      df.count()
-      val plan = df.queryExecution.executedPlan
+      val plan = PlanWalk.finalPlan(df)
       PlanWalk.assertShapes(op, plan, allowBroadcastNlj = false)
       assert(PlanWalk.shuffleExchangeCount(plan) == exchanges,
         s"$op: ${PlanWalk.shuffleExchangeCount(plan)} shuffle exchanges, " +
@@ -119,8 +117,9 @@ class ClustersSpec extends SparkSpec {
         .distinct().withColumn("label", $"id"))
       // neighbor-min aggregate + the labels side of its join
       val r0 = gated("cc_round0", Clusters.neighborMinRound(labels0, e), 2)
-      // two shuffle_hash joins, both sides exchanged: |V| never broadcasts
-      val live = gated("cc_relabel", Clusters.relabelLive(e, r0), 4)
+      // two shuffle_hash joins, both sides exchanged: |V| never broadcasts;
+      // both joins read r0's labels through one exchange (AQE reuses it)
+      val live = gated("cc_relabel", Clusters.relabelLive(e, r0), 3)
       assert(live.count() > 0, "round 0 settled every edge: no later round to gate")
       // min-label aggregate + its join + the pointer-jump self-join
       val r1 = gated("cc_round1", Clusters.liveRound(r0, live), 4)
@@ -160,11 +159,7 @@ class ClustersSpec extends SparkSpec {
     val bench = docs.filter($"doc_id" % 20 === 0)
     val train = docs.filter($"doc_id" % 20 =!= 0)
     val rep = Decontam.contaminationReport(train, bench, "doc_id", "text", 3)
-    rep.collect()
-    val plan = rep.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
+    val plan = PlanWalk.finalPlan(rep)
     val nodes = PlanWalk.walk(plan)
     assert(nodes.exists(_.isInstanceOf[
       org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]),
@@ -189,10 +184,7 @@ class ClustersSpec extends SparkSpec {
       .select($"doc_id", $"n_shared", $"n_shingles")
       .as[(Long, Long, Long)].collect().toSet
     assert(got == want, "shuffle path diverged from the broadcast form")
-    val plan = rep.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
+    val plan = PlanWalk.finalPlan(rep)
     val nodes = PlanWalk.walk(plan)
     assert(nodes.exists(_.isInstanceOf[
       org.apache.spark.sql.execution.joins.ShuffledHashJoinExec]),

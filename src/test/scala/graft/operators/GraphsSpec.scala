@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.plans.PlanWalk
 import org.apache.spark.sql.functions._
 
 class GraphsSpec extends SparkSpec {
@@ -63,10 +64,8 @@ class GraphsSpec extends SparkSpec {
 
   test("iteration round plan shape: hash joins + keyed agg, no cartesian/BNLJ") {
     val edges = (1L to 200L).map(i => (i, (i * 7) % 200 + 1)).toDF("src", "dst")
-    val out = Graphs.pageRank(edges, iters = 2)
-    out.count()
-    graft.plans.PlanWalk.assertShapes("pagerank_final",
-      out.queryExecution.executedPlan, allowBroadcastNlj = false)
+    PlanWalk.assertShapes("pagerank_final",
+      PlanWalk.finalPlan(Graphs.pageRank(edges, iters = 2)), allowBroadcastNlj = false)
   }
 
   /** Single-node integer HITS with max-normalization — the semantics
@@ -123,22 +122,22 @@ class GraphsSpec extends SparkSpec {
     // the production path checkpoints its output (so intermediates can
     // be freed), which makes the FINAL plan a checkpoint scan — the
     // interior shapes must be gated on a half-step directly (the
-    // Clusters cc-round pattern)
-    val edges = (1L to 200L).map(i => (i, (i * 7) % 200 + 1))
-      .toDF("src", "dst").localCheckpoint()
-    val nodes = edges.select($"src".as("id"))
-      .union(edges.select($"dst".as("id"))).distinct().localCheckpoint()
+    // Clusters cc-round pattern), its inputs pinned as hits pins them
+    val edges = Checkpoints.pin((1L to 200L).map(i => (i, (i * 7) % 200 + 1))
+      .toDF("src", "dst"))
+    val nodes = Checkpoints.pin(edges.select($"src".as("id"))
+      .union(edges.select($"dst".as("id"))).distinct())
     val scores = nodes.withColumn("h", lit(1000000L))
-    val (_, out) = Graphs.hitsHalfStep(edges, nodes, scores, "h",
+    val (raw, out) = Graphs.hitsHalfStep(edges, nodes, scores, "h",
       "src", "dst", "a", 1000000L)
-    out.count()
-    // the only BNLJ is the designed 1-row max-normalizer broadcast
-    graft.plans.PlanWalk.assertShapes("hits_half_step",
-      out.queryExecution.executedPlan, allowBroadcastNlj = true)
-    val nlj = graft.plans.PlanWalk.walk(out.queryExecution.executedPlan)
-      .count(_.isInstanceOf[
+    try {
+      val plan = PlanWalk.finalPlan(out)
+      // the only BNLJ is the designed 1-row max-normalizer broadcast
+      PlanWalk.assertShapes("hits_half_step", plan, allowBroadcastNlj = true)
+      val nlj = PlanWalk.walk(plan).count(_.isInstanceOf[
         org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec])
-    assert(nlj <= 1, s"more than the 1-row max broadcast: $nlj BNLJs")
+      assert(nlj <= 1, s"more than the 1-row max broadcast: $nlj BNLJs")
+    } finally Seq(raw, nodes, edges).foreach(Checkpoints.free)
   }
 
   test("cooccurrenceEdges: symmetric, self-loop free, per-key cap binds") {

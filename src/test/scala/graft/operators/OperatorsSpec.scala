@@ -3,6 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import graft.functions.TextFunctions
 import graft.functions.VectorFunctions
+import graft.plans.PlanWalk
 import org.apache.spark.sql.functions._
 
 case class VecRow(vec_id: Long, embedding: Array[Float])
@@ -203,10 +204,9 @@ class OperatorsSpec extends SparkSpec {
       assert(rows((3L, j.toLong)) == signs(j)(0) * 0.0001,
         s"tie at j=$j: ${rows((3L, j.toLong))} vs sign ${signs(j)(0)}")
     }
-    // scale gate: map-only pass — the executed plan must contain no
+    // scale gate: map-only pass — the final plan must contain no
     // exchange of any kind
-    out.collect()
-    val p = out.queryExecution.executedPlan.toString()
+    val p = PlanWalk.finalPlan(out).toString()
     assert(!p.contains("Exchange"), s"randomProject plan shuffles:\n$p")
   }
 
@@ -322,12 +322,10 @@ class OperatorsSpec extends SparkSpec {
     // the probed-cid filter must land in the scan's PartitionFilters and
     // the file listing under those filters must shrink (inputFiles can't
     // show this — it lists the whole relation, ignoring filters)
-    def scanOf(df: org.apache.spark.sql.DataFrame) = {
-      df.count()
-      df.queryExecution.executedPlan.collectLeaves().collectFirst {
+    def scanOf(df: org.apache.spark.sql.DataFrame) =
+      PlanWalk.walk(PlanWalk.finalPlan(df)).collectFirst {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }.get
-    }
     def filesUnderFilters(f: org.apache.spark.sql.execution.FileSourceScanExec) =
       f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
         .map(_.files.size).sum
@@ -349,8 +347,7 @@ class OperatorsSpec extends SparkSpec {
     val q2 = e.filter($"vec_id" < 2) // 2 queries × nProbe 2 ≤ 4 of 8 cells
     val res = Similarity.ivfSearchStored(spark, path, q2,
       "vec_id", "embedding", k = 3, nProbe = 2)
-    res.count()
-    val cellScans = graft.plans.PlanWalk.walk(res.queryExecution.executedPlan)
+    val cellScans = PlanWalk.walk(PlanWalk.finalPlan(res))
       .collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
             if f.relation.location.rootPaths.exists(_.toString.contains("cells")) => f
@@ -566,8 +563,7 @@ class OperatorsSpec extends SparkSpec {
     // partition filter and read <= nProbe of nlist cells' files
     val one = Similarity.ivfPqSearchStored(spark, path,
       e.filter($"vec_id" === 0), "vec_id", "embedding", k = 5, nProbe = 4)
-    one.count()
-    val scan = graft.plans.PlanWalk.walk(one.queryExecution.executedPlan)
+    val scan = PlanWalk.walk(PlanWalk.finalPlan(one))
       .collectFirst {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
             if f.relation.location.rootPaths.exists(_.toString.contains("codes")) => f

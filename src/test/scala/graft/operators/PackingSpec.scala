@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.plans.PlanWalk
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -107,16 +108,15 @@ class PackingSpec extends SparkSpec {
     // bucket-totals aggregate behind the shuffle stage is still seen
     val df = (0L until 1000L).map(i => (i, i % 7)).toDF("id", "v")
     val out = Packing.prefixSum(df, "id", "v", "cs", 64L)
-    out.collect()
-    val root = out.queryExecution.executedPlan
-    val windows = graft.plans.PlanWalk.walk(root).collect {
+    val root = PlanWalk.finalPlan(out)
+    val windows = PlanWalk.walk(root).collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }
     assert(windows.nonEmpty, "expected window nodes in the prefix-sum plan")
     // the within-bucket scan (over the full table) must be partitioned;
     // the only unpartitioned window runs over the REDUCED bucket-totals
     // table (above an aggregate) — PlanWalk encodes exactly that rule
-    assert(graft.plans.PlanWalk.badPartitionlessWindows(root).isEmpty,
+    assert(PlanWalk.badPartitionlessWindows(root).isEmpty,
       s"unpartitioned window over non-aggregated input:\n$root")
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.plans.PlanWalk
 import org.apache.spark.sql.functions._
 
 class QualitySpec extends SparkSpec {
@@ -91,10 +92,9 @@ class QualitySpec extends SparkSpec {
     // LogicalRDD leaf — PlanGateSpec's q99 gate sees only the plan ABOVE
     // it. Gate the hidden plan here via the factored scoredBands.
     val scored = Quality.scoredBands(docs, "doc_id", "text", 1000)
-    scored.count()
     // the vocab builder cross-joins ONE broadcast 1-row stats frame
-    graft.plans.PlanWalk.assertShapes("scoredBands",
-      scored.queryExecution.executedPlan, allowBroadcastNlj = true)
+    PlanWalk.assertShapes("scoredBands", PlanWalk.finalPlan(scored),
+      allowBroadcastNlj = true)
   }
 
   test("filterByLogprobBand trims both tails by the supplied cutoffs") {

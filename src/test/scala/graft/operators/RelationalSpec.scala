@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.plans.PlanWalk
 import org.apache.spark.sql.functions._
 
 class RelationalSpec extends SparkSpec {
@@ -66,14 +67,13 @@ class RelationalSpec extends SparkSpec {
       .toDF("rid", "lo", "hi")
     val out = Relational.rangeJoin(left, right, "t", "lo", "hi",
       bucketWidth = 20)
-    out.collect() // materialize for the AQE-final plan
     val got = out.select($"lid", $"r.rid").as[(Long, Long)].collect().toSet
     val naive = left.crossJoin(right)
       .filter($"t" >= $"lo" && $"t" <= $"hi")
       .select($"lid", $"rid").as[(Long, Long)].collect().toSet
     assert(got == naive, s"rangeJoin mismatch: ${got.size} vs ${naive.size}")
     assert(naive.nonEmpty)
-    val p = out.queryExecution.executedPlan.toString()
+    val p = PlanWalk.finalPlan(out).toString()
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
       s"range join planned a pair explosion:\n$p")
   }
@@ -350,8 +350,8 @@ class RelationalSpec extends SparkSpec {
   test("bloomPrefilteredJoin probe is plan-native (subquery, no UDF)") {
     val fact = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
     val dim = Seq((2L, "d")).toDF("k", "d")
-    val plan = Relational.bloomPrefilteredJoin(fact, dim, Seq("k"),
-      expectedKeys = 10L).queryExecution.executedPlan.toString
+    val plan = PlanWalk.finalPlan(Relational.bloomPrefilteredJoin(fact, dim, Seq("k"),
+      expectedKeys = 10L)).toString
     assert(plan.contains("might_contain"), s"no bloom probe in:\n$plan")
     assert(plan.contains("Subquery") || plan.contains("subquery"),
       s"bloom not a subquery in:\n$plan")

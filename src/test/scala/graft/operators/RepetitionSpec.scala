@@ -3,6 +3,7 @@ package graft.operators
 import java.io.File
 
 import graft.{SparkEntry, SparkSpec}
+import graft.plans.PlanWalk
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
 import org.apache.spark.sql.expressions.Window
@@ -190,11 +191,10 @@ class RepetitionSpec extends SparkSpec {
 
   test("ngramStats plan is shuffle-free (map-only projection)") {
     val df = Seq((1L, "a b c a b")).toDF("doc_id", "text")
-    val plan = Repetition.ngramStats(df, "doc_id", "text")
-      .queryExecution.executedPlan.toString
+    val plan = PlanWalk.finalPlan(Repetition.ngramStats(df, "doc_id", "text")).toString
     assert(!plan.contains("Exchange"), s"unexpected shuffle:\n$plan")
-    val plan2 = Repetition.dedupLinesWithinDoc(df, "doc_id", "text")
-      .queryExecution.executedPlan.toString
+    val plan2 = PlanWalk.finalPlan(
+      Repetition.dedupLinesWithinDoc(df, "doc_id", "text")).toString
     assert(!plan2.contains("Exchange"), s"unexpected shuffle:\n$plan2")
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.plans.PlanWalk
 import org.apache.spark.sql.functions._
 
 class RetrievalSpec extends SparkSpec {
@@ -143,8 +144,7 @@ class RetrievalSpec extends SparkSpec {
     // plan gate: the postings scan must carry a tb partition filter and
     // list fewer files than the full index — remove searchBm25Stored's
     // isin filter and this fails with a full-postings scan
-    stored.count()
-    val scans = graft.plans.PlanWalk.walk(stored.queryExecution.executedPlan)
+    val scans = PlanWalk.walk(PlanWalk.finalPlan(stored))
       .collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
             if f.relation.location.rootPaths.exists(_.toString.contains("postings")) => f
@@ -156,9 +156,8 @@ class RetrievalSpec extends SparkSpec {
     def files(f: org.apache.spark.sql.execution.FileSourceScanExec) =
       f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
         .map(_.files.size).sum
-    val full = spark.read.parquet(s"$path/postings")
-    full.count()
-    val fullScan = full.queryExecution.executedPlan.collectLeaves().collectFirst {
+    val fullScan = PlanWalk.walk(PlanWalk.finalPlan(
+        spark.read.parquet(s"$path/postings"))).collectFirst {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }.get
     assert(files(scan) < files(fullScan),

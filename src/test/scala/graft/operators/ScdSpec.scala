@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.plans.PlanWalk
 import org.apache.spark.sql.functions._
 
 import scala.util.Random
@@ -468,7 +469,7 @@ class ScdSpec extends SparkSpec {
       .select(Scd.bucketOf(Seq("key"), nBuckets)).as[Long].collect().toSeq
     val slice = spark.read.parquet(store)
       .filter(col(Scd.BucketCol).isin(affected.map(Long.box): _*))
-    val scans = slice.queryExecution.executedPlan.collect {
+    val scans = PlanWalk.walk(PlanWalk.finalPlan(slice)).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
     assert(scans.size == 1, s"want one file scan, got ${scans.size}")

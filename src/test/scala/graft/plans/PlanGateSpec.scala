@@ -3,8 +3,6 @@ package graft.plans
 import graft.{SparkEntry, SparkSpec, Tables}
 import graft.operators.{Dedup, Pca, Quality, Scd, Selection, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 /** The 100 TB plan-shape gate over EVERY gate query, plus the operator
@@ -561,23 +559,6 @@ class PlanGateSpec extends SparkSpec {
       }))
   }
 
-  /** Runs `df`'s own plan to completion and returns its executed plan,
-    * which is then AQE's final plan (`isFinalPlan=true`). `df.count()`
-    * would run a separate aggregate plan and leave `df`'s adaptive plan
-    * as planned before run-time re-optimization.
-    */
-  private def finalPlan(df: DataFrame): SparkPlan = {
-    df.queryExecution.toRdd.count()
-    val plan = df.queryExecution.executedPlan
-    plan match {
-      case a: AdaptiveSparkPlanExec =>
-        val head = a.toString.linesIterator.next()
-        assert(head.contains("isFinalPlan=true"), s"not AQE's final plan: $head")
-      case _ =>
-    }
-    plan
-  }
-
   test("README gate count matches the declared query surface") {
     // counts in prose drift (the round-15 README lagged by one); pin
     // the gate count to the code so a hand-bump can't go stale
@@ -608,7 +589,7 @@ class PlanGateSpec extends SparkSpec {
     // the gate's reason to exist: prove it would catch one
     val (name, fn) = ("q01_pricing_summary",
       SparkEntry.queries("q01_pricing_summary"))
-    val n = PlanWalk.shuffleExchangeCount(finalPlan(fn(spark, dir).repartition(7)))
+    val n = PlanWalk.shuffleExchangeCount(PlanWalk.finalPlan(fn(spark, dir).repartition(7)))
     assert(n > exchangeBudget(name),
       s"injected repartition invisible: counted $n <= budget ${exchangeBudget(name)}")
   }
@@ -617,7 +598,7 @@ class PlanGateSpec extends SparkSpec {
     test(s"operator $name executed plan passes the scale-shape gate") {
       val tmp = java.nio.file.Files.createTempDirectory(s"gate_$name").toFile
       try {
-        PlanWalk.assertShapes(name, finalPlan(build(spark, s"${tmp.getPath}/out")),
+        PlanWalk.assertShapes(name, PlanWalk.finalPlan(build(spark, s"${tmp.getPath}/out")),
           allowBroadcastNlj = bnlj)
       } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
     }
@@ -625,7 +606,7 @@ class PlanGateSpec extends SparkSpec {
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name executed plan passes the scale-shape gate") {
-      val plan = finalPlan(fn(spark, dir))
+      val plan = PlanWalk.finalPlan(fn(spark, dir))
       PlanWalk.assertShapes(name, plan, allowBroadcastNlj = allowBnlj(name))
       val n = PlanWalk.shuffleExchangeCount(plan)
       info(s""""$name" -> $n,""")

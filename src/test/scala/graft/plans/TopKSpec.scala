@@ -24,8 +24,7 @@ class TopKSpec extends SparkSpec {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     val df = TopK.topKPerGroup(li, Seq("l_returnflag", "l_linestatus"),
       "l_extendedprice", k = 2)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString()
+    val plan = PlanWalk.finalPlan(df).toString()
     assert(plan.contains("TopKPerGroup"), plan)
     assert(plan.contains("hashpartitioning(l_returnflag"), plan)
     // 3 flags x 2 statuses at most, k=2

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{SparkEntry, SparkSpec}
+import graft.plans.PlanWalk
 
 /** Physical-plan assertions: the scale-relevant plan properties the
   * Scaladoc promises (pushdown, broadcast, partial aggregation,
@@ -9,11 +10,9 @@ import graft.{SparkEntry, SparkSpec}
 class PlanSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, dir)
-    df.collect() // materialize so AQE finalizes (codegen spans appear)
-    df.queryExecution.executedPlan.toString()
-  }
+  /** The query's final plan as text (codegen spans appear once it ran). */
+  private def plan(name: String): String =
+    PlanWalk.finalPlan(SparkEntry.queries(name)(spark, dir)).toString()
 
   test("q02: filters and projection reach the parquet scan") {
     val p = plan("q02_filter_pushdown")
@@ -81,7 +80,7 @@ class PlanSpec extends SparkSpec {
     // at sf0.001 the stop set is empty and AQE's empty-relation propagation
     // elides the join entirely — both shapes are shuffle-free, which is
     // what matters at scale
-    val p = plan("q23_ngram_jaccard").split("== Initial Plan ==")(0)
+    val p = plan("q23_ngram_jaccard")
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
       s"stop-shingle prune shuffle-joined the shingle table:\n$p")
     p.linesIterator.filter(_.contains("LeftAnti")).foreach { l =>
@@ -91,7 +90,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q58: deep join mixes broadcast dims with shuffled fact joins") {
-    val p = plan("q58_deep_join").split("== Initial Plan ==")(0)
+    val p = plan("q58_deep_join")
     assert(p.contains("BroadcastHashJoin"), "dim chain not broadcast")
     assert(p.contains("PushedFilters"), "scan filters not pushed")
     // the orderdate range must reach the orders scan, not sit post-join
@@ -100,7 +99,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q01: global sort plans a range-partitioned exchange") {
-    val p = plan("q01_pricing_summary").split("== Initial Plan ==")(0)
+    val p = plan("q01_pricing_summary")
     assert(p.contains("rangepartitioning"),
       s"orderBy did not produce a range exchange:\n$p")
   }
@@ -113,8 +112,7 @@ class PlanSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val df = SparkEntry.queries("q60_ivf_ann")(spark, dir)
-      df.collect()
-      val nodes = graft.plans.PlanWalk.walk(df.queryExecution.executedPlan)
+      val nodes = PlanWalk.walk(PlanWalk.finalPlan(df))
       val windows = nodes.collect {
         case w: org.apache.spark.sql.execution.window.WindowExec => w
       }
@@ -128,15 +126,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q95: random projection is map-only (no exchange anywhere)") {
-    val p = plan("q95_random_projection").split("== Initial Plan ==")(0)
+    val p = plan("q95_random_projection")
     assert(!p.contains("Exchange"),
       s"embedding compression must not shuffle:\n$p")
   }
 
   test("q52: CEP shuffles once on the key (single grouping exchange)") {
-    // AQE's string rendering appends an "Initial Plan" section that would
-    // double-count operators — assert on the final plan only.
-    val p = plan("q52_order_timeout_cep").split("== Initial Plan ==")(0)
+    val p = plan("q52_order_timeout_cep")
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
     assert(exchanges == 1,
       s"expected exactly one keyed exchange for the NFA, got $exchanges:\n$p")

@@ -24,22 +24,24 @@ object Tables {
 
   /** One DataSource resolution per (session, dir, table) — a LAZY plan
     * memo, not a result cache: nothing is materialized, every action
-    * still scans the parquet. `spark.read.parquet` eagerly reads the
-    * footer and lists the path on EVERY call (measured 77 ms per load
-    * at sf0.1 — with 1-3 table loads per query over a 207-query bench
-    * run this was the single largest slice of the per-query floor), and
-    * at corpus scale re-listing a many-thousand-file table per query is
-    * exactly the repeated-listing cost guide §6 warns about (Spark's
-    * own catalog tables persist their FileIndex for the same reason).
-    * Keyed by session via [[graft.queries.SharedFrames]] (the Shared*
-    * discipline): a sibling session from `newSession()` resolves its own
-    * plan under its own conf. The static test tables never change under a
-    * running app, and store-read gates build/read their own per-call
-    * tmp paths directly, never through this.
+    * still scans the parquet. A resolution reads the table's parquet
+    * footer on the driver ([[graft.io.FooterSchema]]) and lists the path;
+    * it runs no Spark job. (`spark.read.parquet` inferred the schema with
+    * a one-task Spark job per table, about 0.1 s each in a warm session,
+    * so resolving the ten tables cost about 1 s of every stream's and
+    * every bench's set-up.) The memo still saves the footer read and the
+    * listing per query: at corpus scale, re-listing a many-thousand-file
+    * table per query is the cost Spark's own catalog tables avoid by
+    * persisting their FileIndex. Keyed by session via
+    * [[graft.queries.SharedFrames]] (the Shared* discipline): a sibling
+    * session from `newSession()` resolves its own plan under its own
+    * conf. A failed resolution caches nothing. The static test tables
+    * never change under a running app, and store-read gates build/read
+    * their own per-call tmp paths directly, never through this.
     */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     graft.queries.SharedFrames.cached(spark, s"table:$name", dir)(
-      normalizeTs(spark.read.parquet(s"$dir/$name.parquet")))(_ => ())
+      normalizeTs(graft.io.FooterSchema.read(spark, s"$dir/$name.parquet")))(_ => ())
 
   /** Normalize a `ts` column (either stored encoding — see class doc) to
     * TimestampType. Public so streaming readers over the same parquet

@@ -99,11 +99,14 @@ object Checkpoints {
       case _ => ()
     } catch { case NonFatal(_) => () }
 
-  /** The parquet store at `path`, or `None` before its first write. */
+  /** The parquet store at `path`, or `None` before its first write. Its
+    * schema is read from a footer on the driver ([[graft.io.FooterSchema]]),
+    * so a merge on an existing store runs no schema-inference job.
+    */
   def readStore(spark: SparkSession, path: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(path)
     if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Some(spark.read.parquet(path))
+      Some(graft.io.FooterSchema.read(spark, path))
     else None
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions.tokens
+import graft.io.FooterSchema
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -261,10 +262,10 @@ object Retrieval {
       .select(explode(array_distinct(tokens(col("qtext")))).as("term"))
       .select(pmod(xxhash64(col("term")), lit(nBuckets.toLong)).as("tb"))
       .distinct().collect().map(_.getLong(0)).toIndexedSeq
-    val postings = spark.read.parquet(s"$path/postings")
+    val postings = FooterSchema.read(spark, s"$path/postings")
       .filter(col("tb").isin(buckets: _*))
-    val terms = spark.read.parquet(s"$path/terms")
-    val stats = spark.read.parquet(s"$path/stats")
+    val terms = FooterSchema.read(spark, s"$path/terms")
+    val stats = FooterSchema.read(spark, s"$path/stats")
     searchBm25(TextIndex(postings, terms, stats), queries, k, k1, b)
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.io.FooterSchema
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -155,7 +156,7 @@ object Scd {
     */
   def readScdStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String): DataFrame = {
-    val df = spark.read.parquet(storePath)
+    val df = FooterSchema.read(spark, storePath)
     if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
   }
 
@@ -279,7 +280,7 @@ object Scd {
       // key below c AND inconsistent with 2c and 3c) occur with
       // probability ≤ 5^-K.
       if (!fs.exists(nBucketsPath(p))) {
-        val checks = spark.read.parquet(storePath).agg(
+        val checks = FooterSchema.read(spark, storePath).agg(
           count(lit(1)).as("n"),
           coalesce(sum(when(bucketOf(keyCols, nBuckets) =!=
             col(BucketCol).cast("long"), 1L).otherwise(0L)), lit(0L))
@@ -348,7 +349,7 @@ object Scd {
         .select(bucketOf(keyCols, nBuckets).as(BucketCol)).distinct()
         .collect().map(_.getLong(0)) // bounded: ≤ min(|batch keys|, nBuckets)
       if (buckets.nonEmpty) {
-        val slice = spark.read.parquet(storePath)
+        val slice = FooterSchema.read(spark, storePath)
           .filter(col(BucketCol).isin(buckets.map(Long.box): _*))
           .drop(BucketCol)
         val merged = applyBatch(slice, clean, keyCols, tsCol, tieCol)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions._
+import graft.io.FooterSchema
 import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -538,14 +539,14 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, nProbe: Int,
       roundScale: Int = 4): DataFrame = {
     GraftFunctions.register(spark)
-    val cent = spark.read.parquet(s"$path/centroids")
+    val cent = FooterSchema.read(spark, s"$path/centroids")
     val probes = Checkpoints.pin(ivfProbes(queries, cent, idCol, vecCol,
       nProbe, roundScale)) // two consumers: cid collect + the score join
     // type-agnostic: cid is Long from the in-memory build but partition-
     // directory inference may read it back as Int
     val probedCids = probes.select("cid").distinct()
       .collect().map(_.get(0)).toSeq
-    val cells = spark.read.parquet(s"$path/cells")
+    val cells = FooterSchema.read(spark, s"$path/cells")
       .filter(col("cid").isin(probedCids: _*))
     val scored = cells.join(broadcast(probes), Seq("cid"))
       .filter(col("vid") =!= col("qid"))
@@ -773,8 +774,8 @@ object Similarity {
       nProbe: Int, roundScale: Int = 4): DataFrame = {
     GraftFunctions.register(spark)
     import spark.implicits._
-    val cent = spark.read.parquet(s"$path/centroids")
-    val cbRows = spark.read.parquet(s"$path/codebook")
+    val cent = FooterSchema.read(spark, s"$path/centroids")
+    val cbRows = FooterSchema.read(spark, s"$path/codebook")
       .select($"m", $"j", $"sub").as[(Int, Int, Seq[Long])].collect()
     val m = cbRows.map(_._1).max + 1
     val ksub = cbRows.map(_._2).max + 1
@@ -785,7 +786,7 @@ object Similarity {
       nProbe, roundScale).select(col("cid"), col("qid"))) // two consumers
     val probedCids = probes.select("cid").distinct()
       .collect().map(_.get(0)).toSeq
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = FooterSchema.read(spark, s"$path/codes")
       .filter(col("cid").isin(probedCids: _*))
     val qside = probes.join(adcTables(queries, idCol, vecCol, cb), Seq("qid"))
     ivfPqScore(codes, qside, cb, k)

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions.tokens
+import graft.io.FooterSchema
 import graft.operators.{Drift, Freq, Relational, Scd, Sketches}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -422,7 +423,7 @@ object ScaleQueries extends QueryModule {
         Sketches.mergeHistogramsIntoStore(docs.filter(trickle), "source",
           "n_chars", grid, p)
       }
-      val stored = s.read.parquet(store)
+      val stored = FooterSchema.read(s, store)
       val content = stored.select($"source", $"n",
           posexplode($"counts").as(Seq("bucket", "cnt")))
         .filter($"cnt" > 0)
@@ -466,7 +467,7 @@ object ScaleQueries extends QueryModule {
         Freq.mergeBatchIntoGroupHitterStore(toks.filter(trickle), "lang",
           "tok", cap, p)
       }
-      val stored = s.read.parquet(store)
+      val stored = FooterSchema.read(s, store)
       // exactness precondition, asserted so a regenerated corpus whose
       // vocabulary outgrows the capacity fails with a READABLE message
       // instead of an opaque oracle row diff (round-17 ADVICE): the

@@ -113,7 +113,7 @@ object Changelog {
           .filter(_.matches("v\\d+")).map(_.drop(1).toLong)
           .filter(_ < id).sorted
       else Array.empty[Long]
-    step(versions.lastOption.map(v => spark.read.parquet(s"$stateDir/v$v")))
+    step(versions.lastOption.map(v => graft.io.FooterSchema.read(spark, s"$stateDir/v$v")))
       .write.mode("overwrite").parquet(s"$stateDir/v$id")
     versions.dropRight(1).foreach(v =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v$v"), true))

@@ -498,6 +498,18 @@ class FreqSpec extends SparkSpec {
     assert(s2 == Seq((Some("c"), 5L, 15L)))
   }
 
+  test("a merge into an existing hitter store infers no schema with a Spark job") {
+    val store = s"${java.nio.file.Files.createTempDirectory("mg_jobs")}/store"
+    val batch = spark.createDataset(skewed(83, 2000)).toDF("item").repartition(4)
+    Freq.mergeBatchIntoHitterStore(batch, "item", 16, store)
+    assert(jobsRunBy(Checkpoints.readStore(spark, store)) == 0)
+    val second = jobsRunBy(Freq.mergeBatchIntoHitterStore(batch, "item", 16, store))
+    // 13 jobs while readStore inferred the store's schema with
+    // spark.read.parquet, one of them that inference
+    info(s"second merge: $second Spark jobs (13 with a schema-inference read)")
+    assert(second <= 12)
+  }
+
   test("exactTopK on real data matches the vocabulary-shuffle form") {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     val got = Freq.exactTopK(li, "l_partkey", k = 10, capacity = 4096)

@@ -1,14 +1,15 @@
 package graft.functions
 
 /** JVM twin of `Classifier.tokenBucket` + the frozen-weight multi-class
-  * scorer (`Classifier.scoreSoftmaxMicro`'s row kernel).
+  * scorer (`Classifier.scoreSoftmaxMicro`'s row kernel) + DSIR's feature
+  * counter and scorer (`Selection.dsirTable` / `scoreWith`).
   *
   * Why typed: the columnar K-class integer fold would be referenced once
   * per output column (pred, best score), and CollapseProject inlines the
-  * whole md5-hashing fold into every consumer (the scoreWith lesson) —
-  * a binary scorer can dodge that by deriving its second column
-  * arithmetically (q143), a K-class argmax cannot. One pass per row
-  * here computes every class sum, the argmax, and the token count.
+  * whole md5-hashing fold into every consumer — a binary scorer can
+  * dodge that by deriving its second column arithmetically (q143), a
+  * K-class argmax cannot. One pass per row here computes every class
+  * sum, the argmax, and the token count.
   *
   * Bucket parity is EXACT with the column path
   * (`pmod(conv(substring(md5(tok), 1, 15), 16, 10) cast long, buckets)`):
@@ -47,12 +48,47 @@ object ClassifierImpl {
     * contributes its [""] token like the column `split` does.
     */
   def bucketCounts(text: String, buckets: Int): Array[(Int, Int)] = {
-    if (text == null) return Array.empty
     val toks = TextFunctions.tokens(text)
+    tally(toks.length, toks(_), buckets)
+  }
+
+  /** DSIR's per-document feature counts: [[bucketCounts]] over every
+    * unigram and every adjacent bigram (`tok_i + " " + tok_{i+1}`) —
+    * the row kernel behind `Selection.dsirTable`'s one aggregate. Null
+    * text contributes nothing.
+    */
+  def featureCounts(text: String, buckets: Int): Array[(Int, Int)] = {
+    val toks = TextFunctions.tokens(text)
+    tally(featureTotal(toks.length), feature(toks, _), buckets)
+  }
+
+  /** (n_feats, lw_micro): the exact integer sum of `lam` over a
+    * document's [[featureCounts]] features, one `lam` entry per bucket —
+    * `Selection.scoreWith`'s row kernel. Null text has no features
+    * (0, 0); the caller decides how a null row reads.
+    */
+  def featureScore(text: String, lam: Array[Long]): (Long, Long) = {
+    val toks = TextFunctions.tokens(text)
+    val n = featureTotal(toks.length)
+    var s = 0L
+    var i = 0
+    while (i < n) { s += lam(tokenBucket(feature(toks, i), lam.length)); i += 1 }
+    (n.toLong, s)
+  }
+
+  /** Unigrams then bigrams: n tokens give n + (n − 1) features. */
+  private def featureTotal(nToks: Int): Int = if (nToks == 0) 0 else 2 * nToks - 1
+
+  private def feature(toks: Array[String], i: Int): String =
+    if (i < toks.length) toks(i)
+    else toks(i - toks.length) + " " + toks(i - toks.length + 1)
+
+  /** (bucket, count) over the `n` items `item(0 until n)`. */
+  private def tally(n: Int, item: Int => String, buckets: Int): Array[(Int, Int)] =
     if (buckets <= (1 << 16)) {
       val cnt = new Array[Int](buckets)
       var t = 0
-      while (t < toks.length) { cnt(tokenBucket(toks(t), buckets)) += 1; t += 1 }
+      while (t < n) { cnt(tokenBucket(item(t), buckets)) += 1; t += 1 }
       val out = Array.newBuilder[(Int, Int)]
       var b = 0
       while (b < buckets) { if (cnt(b) > 0) out += ((b, cnt(b))); b += 1 }
@@ -60,13 +96,12 @@ object ClassifierImpl {
     } else {
       val m = scala.collection.mutable.LongMap.empty[Int]
       var t = 0
-      while (t < toks.length) {
-        val b = tokenBucket(toks(t), buckets)
+      while (t < n) {
+        val b = tokenBucket(item(t), buckets)
         m(b) = m.getOrElse(b, 0) + 1; t += 1
       }
       m.iterator.map { case (b, c) => (b.toInt, c) }.toArray
     }
-  }
 
   /** (nToks, scoreMicro): exact integer weight sum over the token
     * buckets — `Classifier.scoreMicro`'s row kernel (same rationale as

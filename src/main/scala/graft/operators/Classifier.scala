@@ -146,13 +146,16 @@ object Classifier {
     * = n_b − K·n_{b,c}` — exact BIGINT (at the zero matrix every class
     * probability is exactly 1/K). ONE corpus aggregation keyed by
     * (bucket, class) — map-side partials cap task output at buckets·K
-    * rows; the class list and per-bucket totals derive from that
-    * sketch-sized result, never from a second corpus pass. Emits the
-    * FULL bucket × class grid (a class absent from a bucket still has
-    * gradient n_b ≠ 0): (bucket, cls, n_bc, gradk).
+    * rows — collected once; the class list, K and the per-bucket totals
+    * derive from those rows on the driver, never from a second pass.
+    * Returns the FULL occupied-bucket × class grid (a class absent from
+    * a bucket still has gradient n_b ≠ 0) as (bucket, cls, n_bc, gradk),
+    * ordered by bucket then class. The oracle's NULL-label rule holds:
+    * a null class counts toward n_b, is not one of the K, and has
+    * n_bc = 0 (its join key matches nothing).
     */
-  def softmaxGradientAtZero(df: DataFrame, textCol: String, labelCol: String,
-      buckets: Int): DataFrame = {
+  def softmaxGradientGrid(df: DataFrame, textCol: String, labelCol: String,
+      buckets: Int): Seq[(Long, String, Long, Long)] = {
     val spark = df.sparkSession
     import spark.implicits._
     // typed per-doc kernel — the gradientAtZero rationale: native md5
@@ -166,17 +169,27 @@ object Classifier {
           .map { case (b, c) => (b.toLong, cls, c.toLong) }
       }.toDF("bucket", "cls", "c")
       .groupBy(col("bucket"), col("cls"))
-      .agg(sum(col("c")).as("n_bc"))
-    val nb = cnt.groupBy(col("bucket")).agg(sum(col("n_bc")).as("nb"))
-    val classes = cnt.select(col("cls")).distinct()
-    val k = cnt.agg(countDistinct(col("cls")).as("k"))
-    // all frames after cnt are sketch-sized; the k 1-row frame broadcasts
-    nb.crossJoin(broadcast(classes))
-      .join(cnt, Seq("bucket", "cls"), "left")
-      .na.fill(0L, Seq("n_bc"))
-      .crossJoin(broadcast(k))
-      .select(col("bucket"), col("cls"), col("n_bc").cast("long").as("n_bc"),
-        (col("nb") - col("k") * col("n_bc")).cast("long").as("gradk"))
+      .agg(sum(col("c")))
+      .as[(Long, String, Long)].collect()
+    val nb = cnt.groupMapReduce(_._1)(_._3)(_ + _)
+    val classes = cnt.map(_._2).distinct.sortBy(Option(_))
+    val k = classes.count(_ != null).toLong
+    val nbc = cnt.collect { case (b, c, n) if c != null => (b, c) -> n }.toMap
+    for (b <- nb.keys.toSeq.sorted; c <- classes.toSeq) yield {
+      val n = nbc.getOrElse((b, c), 0L)
+      (b, c, n, nb(b) - k * n)
+    }
+  }
+
+  /** [[softmaxGradientGrid]] as a frame (q145's gate): the grid rows
+    * are driver-side, so the frame is a local relation.
+    */
+  def softmaxGradientAtZero(df: DataFrame, textCol: String, labelCol: String,
+      buckets: Int): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    softmaxGradientGrid(df, textCol, labelCol, buckets)
+      .toDF("bucket", "cls", "n_bc", "gradk")
   }
 
   /** Trained multi-class model: `weights(c)(b)` + per-class bias;
@@ -286,7 +299,7 @@ object Classifier {
     * with ties to the LOWEST class index. Typed row kernel
     * ([[graft.functions.ClassifierImpl.scoreSoftmax]]) — a columnar
     * K-class fold would inline the md5-hashing array into BOTH output
-    * columns (pred, best score; the scoreWith CollapseProject lesson),
+    * columns (pred, best score) through CollapseProject,
     * and unlike the binary [[scoreMicro]] an argmax cannot be derived
     * arithmetically from a single referenced column. Output:
     * (idCol, n_toks, pred, best_micro) — fully oracle-replayable

@@ -631,7 +631,7 @@ object Dedup {
     * per doc, the rebuild's wall-clock at the 80x all-duplicate worst
     * case. covered ⊆ [1, L] by construction, so n_removed = |covered|;
     * keptToks is referenced exactly ONCE (CollapseProject would inline
-    * the whole rebuild into every consumer — the scoreWith lesson).
+    * the whole rebuild into every consumer).
     */
   private def rebuildExcised(df: DataFrame, idCol: String, textCol: String,
       losers: DataFrame, n: Int): DataFrame = {

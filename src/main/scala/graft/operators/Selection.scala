@@ -1,9 +1,10 @@
 package graft.operators
 
-import graft.functions.TextFunctions.{tokenCount, tokens}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.ClassifierImpl
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Data selection for LM training sets — the "which raw documents deserve
   * training compute" half of a curation pipeline, complementing the hard
@@ -20,44 +21,37 @@ import org.apache.spark.sql.functions._
   *    al. 2019) — per-language quantile buckets of an LM fluency score,
   *    here the bigram-LM avg logprob from `Quality.bigramLogprob`.
   *
-  * At 100 TB: both feature distributions are ONE aggregation each whose
+  * At 100 TB: both feature distributions are ONE aggregation whose
   * output is ≤ `buckets` rows (map-side partial — tasks emit at most
-  * `buckets` rows regardless of input size); the λ table is collected to
-  * the driver (bounded metadata, the Classifier-weights/codebook
-  * discipline) and scoring is a pure MAP pass over a broadcast literal
-  * array — the corpus is never re-keyed, joined, or collected.
+  * `buckets` rows regardless of input size); those rows are collected
+  * and λ is finished on the driver into a dense [[DsirTable]] (bounded
+  * metadata, the Classifier-weights/codebook discipline), and scoring
+  * is a pure MAP pass whose typed kernel closes over the λ array — the
+  * corpus is never re-keyed, joined, or collected.
   * Determinism: each ln is taken once per bucket on exact integer counts
   * and quantized to 1e-6 units (the q87/q134 vocabulary-level ln-replay
   * discipline); per-document sums are exact BIGINT.
   */
 object Selection {
 
-  /** Hashed feature occurrences of a document: every unigram and every
-    * adjacent bigram, each mapped to a md5-prefix bucket (the house
-    * cross-engine hash — see `Classifier.tokenBucket`). Map-only.
+  /** The DSIR importance table, dense over the `buckets` feature
+    * buckets: raw and target occurrence counts and the quantized
+    * log-ratio
+    * `lwMicro(b) = Q(ln((n_target+1)/(T+B))) − Q(ln((n_raw+1)/(R+B)))`
+    * (Laplace-smoothed over the B-dim hashed space; T, R the totals;
+    * Q = 1e-6 floor-round quantization per bucket). A bucket no feature
+    * hit holds zero counts and the same formula's unseen weight — not
+    * 0: scoring a held-out corpus hits buckets the table never saw, and
+    * a 0 would bias them toward "neutral" instead of the paper's
+    * smoothing.
     */
-  def featureArr(text: Column, buckets: Int): Column = {
-    val toks = tokens(text)
-    val bigrams = when(size(toks) >= 2,
-      transform(sequence(lit(0), size(toks) - 2),
-        i => concat_ws(" ", element_at(toks, i + 1), element_at(toks, i + 2))))
-      .otherwise(array().cast("array<string>"))
-    transform(concat(toks, bigrams), t => Classifier.tokenBucket(t, buckets))
-  }
+  final case class DsirTable(nRaw: Array[Long], nTarget: Array[Long],
+      lwMicro: Array[Long])
 
   /** [[Respread]]: the feature passes here are where ALL of DSIR's cost
     * lives; on one split they run as one task.
     */
   private def respread(df: DataFrame): DataFrame = Respread(df)
-
-  /** Per-bucket occurrence counts over a corpus — ONE aggregation whose
-    * result is ≤ `buckets` rows (map-side combine caps task output).
-    */
-  def featureDist(df: DataFrame, textCol: String, buckets: Int): DataFrame =
-    respread(df)
-      .select(explode(featureArr(col(textCol), buckets)).as("bucket"))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("cnt"))
 
   /** ln(x) in integer micro-units, `floor(ln(x)·1e6 + 0.5)` as BIGINT,
     * for a DOUBLE `x` — graft's one quantized log: every ln that feeds an
@@ -67,97 +61,81 @@ object Selection {
   private[operators] def qln(x: Column): Column =
     floor(log(x) * 1e6 + 0.5).cast("long")
 
-  /** [[qln]] of `num / den` on the driver. */
-  private def qlnD(num: Long, den: Long): Long =
-    math.floor(math.log(num.toDouble / den.toDouble) * 1e6 + 0.5).toLong
-
-  /** `(bucket, n_raw, n_target, lw_micro)` from per-bucket counts —
-    * the shared tail of [[dsirTable]] / [[dsirTableLabeled]].
+  /** [[qln]] of `num / den` on the driver. `StrictMath.log`, because
+    * that is what Spark's `log` evaluates; `math.log` may differ from it
+    * in the last ulp.
     */
-  private def lwTable(j: DataFrame, buckets: Int): DataFrame = {
-    val b = lit(buckets.toLong)
-    val tot = j.agg(sum(col("n_raw")).as("rt"), sum(col("n_target")).as("tt"))
-    j.crossJoin(broadcast(tot))
-      .select(col("bucket"), col("n_raw"), col("n_target"),
-        (qln((col("n_target") + 1L).cast("double") / (col("tt") + b).cast("double")) -
-          qln((col("n_raw") + 1L).cast("double") / (col("rt") + b).cast("double")))
-          .as("lw_micro"))
+  private[operators] def qlnD(num: Long, den: Long): Long =
+    math.floor(StrictMath.log(num.toDouble / den.toDouble) * 1e6 + 0.5).toLong
+
+  /** The table over `(raw, target, text)` rows, each flag 0 or 1: ONE
+    * bucket-keyed aggregation over the typed per-doc kernel
+    * ([[ClassifierImpl.featureCounts]] — native md5, per-doc
+    * pre-aggregation), its ≤ `buckets` rows collected and λ finished on
+    * the driver.
+    */
+  private def countTable(flagged: DataFrame, buckets: Int): DsirTable = {
+    val spark = flagged.sparkSession
+    import spark.implicits._
+    val nRaw = new Array[Long](buckets)
+    val nTarget = new Array[Long](buckets)
+    respread(flagged).as[(Long, Long, String)]
+      .flatMap { case (r, t, text) =>
+        ClassifierImpl.featureCounts(text, buckets).iterator
+          .map { case (b, c) => (b, r * c, t * c) }
+      }.toDF("bucket", "r", "t")
+      .groupBy(col("bucket"))
+      .agg(sum(col("r")), sum(col("t")))
+      .as[(Int, Long, Long)].collect()
+      .foreach { case (b, r, t) => nRaw(b) = r; nTarget(b) = t }
+    val rt = nRaw.sum + buckets
+    val tt = nTarget.sum + buckets
+    DsirTable(nRaw, nTarget, Array.tabulate(buckets)(b =>
+      qlnD(nTarget(b) + 1, tt) - qlnD(nRaw(b) + 1, rt)))
   }
 
-  /** The DSIR importance table: per feature bucket, raw/target counts and
-    * the quantized log-ratio
-    * `lw_micro = Q(ln((n_target+1)/(T+B))) − Q(ln((n_raw+1)/(R+B)))`
-    * (Laplace-smoothed over the B-dim hashed space; Q = 1e-6 floor-round
-    * quantization per DISTINCT bucket). `raw` is the corpus to be scored,
-    * `target` the distribution to move toward (e.g. curated reference
-    * text). Two bounded aggregations + a `buckets`-sized join — no
-    * corpus-sized shuffle anywhere.
+  /** The DSIR importance table of `raw` (the corpus to be scored)
+    * toward `target` (the distribution to move toward, e.g. curated
+    * reference text): both feature distributions in one aggregation
+    * over the union of the two frames — no corpus-sized shuffle.
     */
   def dsirTable(raw: DataFrame, target: DataFrame, textCol: String,
-      buckets: Int): DataFrame = {
-    val b = lit(buckets.toLong)
-    val rd = featureDist(raw, textCol, buckets).withColumnRenamed("cnt", "n_raw")
-    val td = featureDist(target, textCol, buckets).withColumnRenamed("cnt", "n_target")
-    val j = rd.join(td, Seq("bucket"), "full_outer")
-      .na.fill(0L, Seq("n_raw", "n_target"))
-    lwTable(j, buckets)
+      buckets: Int): DsirTable = {
+    def side(df: DataFrame, r: Long, t: Long) =
+      df.select(lit(r), lit(t), col(textCol).cast("string"))
+    countTable(side(raw, 1L, 0L).union(side(target, 0L, 1L)), buckets)
   }
 
   /** Same-corpus importance table: target = rows where `targetCol` holds,
-    * raw = every row. Fuses both feature distributions into ONE scan
-    * (conditional count), halving the hash work of the two-frame
-    * [[dsirTable]] for the labeled-subset case — identical output by
-    * construction (target ⊆ raw, so the full-outer join degenerates).
+    * raw = every row — one scan, equal to [[dsirTable]] over
+    * `(df, df.filter(targetCol))`.
     */
   def dsirTableLabeled(df: DataFrame, textCol: String, targetCol: String,
-      buckets: Int): DataFrame = {
-    val j = respread(df).select(col(targetCol).as("__t"),
-        explode(featureArr(col(textCol), buckets)).as("bucket"))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_raw"),
-        count_if(col("__t")).as("n_target"))
-    lwTable(j, buckets)
-  }
+      buckets: Int): DsirTable =
+    countTable(df.select(lit(1L), when(col(targetCol), 1L).otherwise(0L),
+      col(textCol).cast("string")), buckets)
 
-  /** Score a corpus against a precomputed importance table: collects the
-    * `buckets`-bounded λ column to a plan literal and scores in ONE
-    * map-only pass (`aggregate` over the feature array). Output:
-    * (id, n_feats, lw_micro, avg_lw) with lw_micro an exact BIGINT sum.
-    *
-    * The hashed feature array is referenced EXACTLY once (inside the
-    * aggregate): n_feats is derived arithmetically from the token count
-    * — |unigrams| + |bigrams| = 2·|toks| − 1 (split never returns an
-    * empty array) — because CollapseProject inlines a multiply-
-    * referenced array expression into every consumer, and the md5
-    * hashing pass is the whole cost of this operator (a duplicate
-    * reference measurably doubled the scoring wall time).
+  /** Score a corpus against an importance table in ONE map-only pass:
+    * the typed kernel [[ClassifierImpl.featureScore]] hashes each
+    * document's features once and sums their λ. Output:
+    * (id, n_feats, lw_micro, avg_lw) with lw_micro an exact BIGINT sum;
+    * null text gives (id, NULL, NULL, NULL). The map is an optimizer
+    * barrier, so a filter on its columns (q139's `n_feats > 0`) reads
+    * the computed values instead of re-running the kernel.
     */
   def scoreWith(df: DataFrame, idCol: String, textCol: String,
-      table: DataFrame, buckets: Int): DataFrame = {
-    val rows = table.select(col("bucket").cast("int"),
-        col("lw_micro").cast("long"), col("n_raw").cast("long"),
-        col("n_target").cast("long"))
-      .collect()
-    // Buckets ABSENT from the table default to the Laplace-smoothed
-    // unseen-bucket weight qln(1, tt+B) − qln(1, rt+B) — exactly what
-    // lwTable would emit for a (0, 0) count row — not 0: scoring a
-    // held-out corpus hits buckets the table never saw, and a 0 default
-    // would bias them toward "neutral" instead of the paper's smoothing.
-    // Same-corpus scoring (dsirScores) never hits the default (every
-    // scored bucket occurs in raw by construction). rt/tt are recovered
-    // exactly from the table itself: absent buckets hold zero counts.
-    val rt = rows.map(_.getLong(2)).sum
-    val tt = rows.map(_.getLong(3)).sum
-    val b = buckets.toLong
-    val unseen = qlnD(1L, tt + b) - qlnD(1L, rt + b)
-    val lam = Array.fill(buckets)(unseen)
-    rows.foreach(r => lam(r.getInt(0)) = r.getLong(1))
-    val lamLit = typedLit(lam.toSeq)
-    val nf = (tokenCount(col(textCol)) * 2 - 1).cast("long")
-    respread(df)
-      .select(col(idCol), nf.as("n_feats"),
-        aggregate(featureArr(col(textCol), buckets), lit(0L),
-          (acc, fb) => acc + element_at(lamLit, fb.cast("int") + 1)).as("lw_micro"))
+      table: DsirTable): DataFrame = {
+    val lam = table.lwMicro
+    val out = StructType(Seq(df.schema(idCol),
+      StructField("n_feats", LongType), StructField("lw_micro", LongType)))
+    respread(df).select(col(idCol), col(textCol).cast("string"))
+      .map { r =>
+        if (r.isNullAt(1)) Row(r.get(0), null, null)
+        else {
+          val (n, lw) = ClassifierImpl.featureScore(r.getString(1), lam)
+          Row(r.get(0), n, lw)
+        }
+      }(Encoders.row(out))
       .withColumn("avg_lw",
         when(col("n_feats") > 0,
           col("lw_micro").cast("double") / col("n_feats").cast("double") / 1e6))
@@ -165,14 +143,14 @@ object Selection {
 
   /** DSIR end to end over one corpus: target = rows where `targetCol`
     * (boolean) holds, raw = the whole frame. The corpus is scanned twice
-    * (one fused distribution agg + the scoring map) on purpose — the
+    * (the table's aggregation + the scoring map) on purpose — the
     * alternative, persisting an exploded feature table, materializes
     * a larger-than-corpus intermediate (the `unigramLogprob` trade-off).
     */
   def dsirScores(df: DataFrame, idCol: String, textCol: String,
       targetCol: String, buckets: Int): DataFrame =
     scoreWith(df, idCol, textCol,
-      dsirTableLabeled(df, textCol, targetCol, buckets), buckets)
+      dsirTableLabeled(df, textCol, targetCol, buckets))
 
   /** CCNet head/middle/tail: split each language's documents into
     * `nBuckets` equal-count fluency tiers (1 = most fluent). `scored`

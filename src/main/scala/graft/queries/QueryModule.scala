@@ -43,21 +43,24 @@ object SharedLm {
   * both gates compose the SAME labeled-table construction (the fused
   * feature-distribution aggregate over the whole corpus), and each
   * rebuilding it from scratch doubled the family's construction cost.
-  * The table is ≤ `buckets` rows, so the checkpoint is bounded
-  * planning metadata.
+  * The table is ≤ `buckets` counts and weights held on the driver
+  * ([[graft.operators.Selection.DsirTable]]), so nothing is pinned:
+  * building it runs the one aggregate, and q136/q139 construction runs
+  * no Spark job.
   */
 object SharedDsir {
   val buckets = 64
-  def table(s: SparkSession, dir: String): DataFrame =
-    SharedFrames.get(s, "dsir", dir)(
+  def table(s: SparkSession, dir: String): graft.operators.Selection.DsirTable =
+    SharedFrames.cached(s, "dsir", dir)(
       graft.operators.Selection.dsirTableLabeled(
         graft.Tables.documents(s, dir)
           .withColumn("is_tgt", col("lang") === "en"),
-        "text", "is_tgt", buckets))
+        "text", "is_tgt", buckets))(_ => ())
 }
 
-/** Bounded per-session materialization cache behind the Shared* frame
-  * families (LM scoring, span dedup): an access-ordered LRU capped at
+/** Bounded per-session cache behind the Shared* families (pinned LM
+  * scoring and span dedup frames, the driver-held DSIR table, the
+  * table-plan memo): an access-ordered LRU capped at
   * [[maxEntries]], so a long-lived session sweeping many dirs does not
   * pin one frame per dir forever. Eviction drops the reference ONLY and
   * must NOT call release()/[[Checkpoints.free]]: another thread may still

@@ -20,16 +20,16 @@ object SelectionQueries extends QueryModule {
 
     // DSIR (Xie et al. 2023): importance log-weights toward the English
     // subset over a 64-bucket hashed unigram+bigram feature space. The
-    // corpus-scale parts — two bounded feature-distribution aggs and the
+    // corpus-scale parts — the bounded feature-distribution agg and the
     // exact integer per-doc weight sums — are what this gates; the λ
-    // table rides to the scoring pass as a broadcast literal (bounded
+    // array rides to the scoring kernel in its closure (bounded
     // metadata, Classifier-weights discipline).
     "q136_dsir" -> ((s, dir) => {
       import s.implicits._
-      // the λ table is the session-shared SharedDsir frame (q139
+      // the λ table is the session-shared SharedDsir table (q139
       // consumes the same construction — the SharedLm discipline)
       Selection.scoreWith(Tables.documents(s, dir), "doc_id", "text",
-        SharedDsir.table(s, dir), SharedDsir.buckets)
+        SharedDsir.table(s, dir))
         .select($"doc_id", $"n_feats", $"lw_micro")
         .orderBy($"doc_id")
     }),
@@ -76,7 +76,7 @@ object SelectionQueries extends QueryModule {
     "q139_dsir_select" -> ((s, dir) => {
       import s.implicits._
       val scored = Selection.scoreWith(Tables.documents(s, dir),
-        "doc_id", "text", SharedDsir.table(s, dir), SharedDsir.buckets)
+        "doc_id", "text", SharedDsir.table(s, dir))
         .filter($"n_feats" > 0)
       Sampling.weightedSampleByLogWeight(scored, "doc_id", "avg_lw",
         k = 100, seed = 7)

@@ -114,14 +114,12 @@ object SignalQueries extends QueryModule {
     "q147_softmax_score" -> ((s, dir) => {
       import s.implicits._
       val docs = Tables.documents(s, dir)
-      val grid = Classifier.softmaxGradientAtZero(docs, "text", "lang",
-          buckets = 64)
-        .select($"cls", $"bucket".cast("int"), $"gradk")
-        .as[(String, Int, Long)].collect()
-      val classes = grid.map(_._1).distinct.sorted
+      val grid = Classifier.softmaxGradientGrid(docs, "text", "lang",
+        buckets = 64)
+      val classes = grid.map(_._2).distinct.sorted.toArray
       val idx = classes.zipWithIndex.toMap
       val w = Array.fill(classes.length, 64)(0L)
-      grid.foreach { case (c, b, g) => w(idx(c))(b) = -g }
+      grid.foreach { case (b, c, _, g) => w(idx(c))(b.toInt) = -g }
       Classifier.scoreSoftmaxMicro(docs, "doc_id", "text", w, classes)
         .orderBy($"doc_id")
     }),

@@ -95,6 +95,24 @@ class ClassifierSpec extends SparkSpec {
     }
   }
 
+  test("softmaxGradientAtZero keeps the oracle's null-label rule") {
+    // a null class counts toward n_b but is not one of the K classes,
+    // and its join key matches no count row: n_bc = 0, gradk = n_b
+    val B = 8
+    val df = triCorpus.union(Seq((7L, "alpha rot", null: String)).toDF("doc_id", "text", "lang"))
+    val g = Classifier.softmaxGradientAtZero(df, "text", "lang", B)
+      .as[(Long, String, Long, Long)].collect()
+    val occ = df.select($"lang", explode(Classifier.bucketArr($"text", B)).as("b"))
+      .as[(String, Long)].collect()
+    val nb = occ.groupBy(_._2).view.mapValues(_.length.toLong).toMap
+    val nbc = occ.filter(_._1 != null).groupBy(identity).view.mapValues(_.length.toLong).toMap
+    assert(g.length == nb.size * 4)
+    g.foreach { case (b, c, cnt, gr) =>
+      val expect = if (c == null) 0L else nbc.getOrElse((c, b), 0L)
+      assert(cnt == expect && gr == nb(b) - 3 * expect, s"bucket $b cls $c")
+    }
+  }
+
   test("typed gradientAtZero/scoreMicro equal the column-HOF reference on real fixture text") {
     // round-18: the exact-integer classifier passes moved to typed row
     // kernels (ClassifierImpl) for the interpreted-HOF tax; pin them

@@ -1,10 +1,15 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.functions.ClassifierImpl
+import graft.functions.TextFunctions.{tokenCount, tokens}
+import graft.functions.TextFunctionsSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class SelectionSpec extends SparkSpec {
   import spark.implicits._
+  import SelectionSpec.replayFeatures
 
   private val B = 32
 
@@ -16,22 +21,142 @@ class SelectionSpec extends SparkSpec {
     (5L, "zz qq", false)
   ).toDF("doc_id", "text", "is_tgt")
 
-  test("featureDist counts unigrams + adjacent bigrams, bounded by buckets") {
-    val d = Selection.featureDist(corpus, "text", B)
+  /** The sf0.01 documents (target = English) plus the token-rule edge
+    * rows (ids from 1000001, target = even id), null text among them
+    * (id 1000006).
+    */
+  private lazy val paritySet: DataFrame = {
+    val fixtures = new java.io.File("/root/testdata/sf0.01/documents.parquet")
+    assert(fixtures.exists, s"fixtures not found at ${fixtures.getCanonicalPath}")
+    spark.read.parquet(fixtures.getCanonicalPath)
+      .select($"doc_id", $"text", ($"lang" === "en").as("is_tgt"))
+      .union(TextFunctionsSpec.edgeRows.toDF("id", "text")
+        .select(($"id" + 1000000L).as("doc_id"), $"text", ($"id" % 2 === 0).as("is_tgt")))
+  }
+
+  /** The DSIR feature array as a column — the form the operator had
+    * before its typed kernel, kept as the second reference.
+    */
+  private def columnFeatures(text: Column, buckets: Int): Column = {
+    val toks = tokens(text)
+    val bigrams = when(size(toks) >= 2,
+      transform(sequence(lit(0), size(toks) - 2),
+        i => concat_ws(" ", element_at(toks, i + 1), element_at(toks, i + 2))))
+      .otherwise(array().cast("array<string>"))
+    transform(concat(toks, bigrams), t => Classifier.tokenBucket(t, buckets))
+  }
+
+  /** The column form of the labeled table: explode, count per bucket,
+    * then the totals' cross join and the [[Selection.qln]] tail. Only
+    * buckets some feature hit have a row.
+    */
+  private def columnTable(df: DataFrame, buckets: Int): Map[Int, (Long, Long, Long)] = {
+    val j = df.select($"is_tgt".as("__t"),
+        explode(columnFeatures($"text", buckets)).as("bucket"))
+      .groupBy($"bucket")
+      .agg(count(lit(1)).as("n_raw"), count_if($"__t").as("n_target"))
+    val b = lit(buckets.toLong)
+    j.crossJoin(j.agg(sum($"n_raw").as("rt"), sum($"n_target").as("tt")))
+      .select($"bucket".cast("int"), $"n_raw", $"n_target",
+        Selection.qln(($"n_target" + 1L).cast("double") / ($"tt" + b).cast("double")) -
+          Selection.qln(($"n_raw" + 1L).cast("double") / ($"rt" + b).cast("double")))
+      .as[(Int, Long, Long, Long)].collect()
+      .map { case (k, r, t, lw) => k -> ((r, t, lw)) }.toMap
+  }
+
+  /** The column form of scoring: an `aggregate` fold over the feature
+    * array against the λ literal, n_feats from the token count.
+    */
+  private def columnScores(df: DataFrame, lam: Array[Long]): DataFrame = {
+    val lamLit = typedLit(lam.toSeq)
+    df.select($"doc_id", (tokenCount($"text") * 2 - 1).cast("long").as("n_feats"),
+        aggregate(columnFeatures($"text", lam.length), lit(0L),
+          (acc, fb) => acc + element_at(lamLit, fb.cast("int") + 1)).as("lw_micro"))
+      .withColumn("avg_lw", when($"n_feats" > 0,
+        $"lw_micro".cast("double") / $"n_feats".cast("double") / 1e6))
+  }
+
+  test("featureCounts and featureScore equal the plain-Scala replay on edge rows and sf0.01") {
+    val texts = paritySet.select($"text").as[String].collect()
+    assert(texts.length > 500 && texts.contains(null))
+    Seq(64, 1 << 17).foreach { buckets =>
+      val lam = Array.tabulate(buckets)(b => b * 2654435761L % 1000003L - 500001L)
+      texts.foreach { t =>
+        val feats = replayFeatures(t, buckets)
+        val counts = ClassifierImpl.featureCounts(t, buckets)
+        assert(counts.map(_._1).distinct.length == counts.length, s"text=$t")
+        assert(counts.toMap == feats.groupBy(identity).view.mapValues(_.length).toMap,
+          s"buckets=$buckets text=$t")
+        assert(ClassifierImpl.featureScore(t, lam) ==
+          ((feats.length.toLong, feats.map(lam(_)).sum)), s"buckets=$buckets text=$t")
+      }
+    }
+  }
+
+  test("dsirTableLabeled equals the column form, and its driver λ Spark's qln, on every bucket") {
+    Seq(64, 1024).foreach { buckets =>
+      val table = Selection.dsirTableLabeled(paritySet, "text", "is_tgt", buckets)
+      val column = columnTable(paritySet, buckets)
+      assert(table.lwMicro.length == buckets && column.size > buckets / 2)
+      (0 until buckets).foreach { b =>
+        column.get(b) match {
+          case Some((r, t, lw)) =>
+            assert((table.nRaw(b), table.nTarget(b), table.lwMicro(b)) == ((r, t, lw)),
+              s"buckets=$buckets bucket=$b")
+          case None =>
+            assert(table.nRaw(b) == 0L && table.nTarget(b) == 0L, s"bucket=$b")
+        }
+      }
+      // every bucket, hit or not: the driver's StrictMath λ against the
+      // qln column over the same counts
+      val rt = table.nRaw.sum + buckets
+      val tt = table.nTarget.sum + buckets
+      val qlnColumn = (0 until buckets).map(b => (b, table.nRaw(b), table.nTarget(b)))
+        .toDF("bucket", "n_raw", "n_target")
+        .select($"bucket",
+          Selection.qln(($"n_target" + 1L).cast("double") / lit(tt.toDouble)) -
+            Selection.qln(($"n_raw" + 1L).cast("double") / lit(rt.toDouble)))
+        .as[(Int, Long)].collect().toMap
+      assert(qlnColumn.size == buckets)
+      (0 until buckets).foreach(b =>
+        assert(table.lwMicro(b) == qlnColumn(b), s"buckets=$buckets bucket=$b"))
+    }
+  }
+
+  test("scoreWith equals the column form, the null-text row included") {
+    val table = Selection.dsirTableLabeled(paritySet, "text", "is_tgt", 64)
+    val got = Selection.scoreWith(paritySet, "doc_id", "text", table)
+    val want = columnScores(paritySet, table.lwMicro)
+    assert(got.schema.map(f => (f.name, f.dataType)) ==
+      want.schema.map(f => (f.name, f.dataType)))
+    val g = got.orderBy($"doc_id").collect().toSeq
+    assert(g == want.orderBy($"doc_id").collect().toSeq)
+    assert(g.length > 500)
+    assert(g.filter(_.getLong(0) == 1000006L).map(_.toSeq) ==
+      Seq(Seq(1000006L, null, null, null)))
+  }
+
+  test("featureCounts counts unigrams + adjacent bigrams, bounded by buckets") {
+    val t = Selection.dsirTableLabeled(corpus, "text", "is_tgt", B)
     // total features = sum over docs of (n + max(n-1, 0))
     val expected = Seq(3, 3, 4, 3, 2).map(n => n + (n - 1)).sum
-    assert(d.agg(sum($"cnt")).as[Long].head() == expected)
-    assert(d.count() <= B)
+    assert(t.nRaw.sum == expected)
+    assert(t.lwMicro.length == B && t.nRaw.length == B && t.nTarget.length == B)
+    corpus.select($"text").as[String].collect().foreach { text =>
+      val n = text.split(" ").length
+      val counts = ClassifierImpl.featureCounts(text, B)
+      assert(counts.map(_._2).sum == n + (n - 1) && counts.length <= B)
+    }
   }
 
   test("dsirTable weights target-only features above raw-only features") {
     val raw = corpus
     val tgt = corpus.filter($"is_tgt")
     val t = Selection.dsirTable(raw, tgt, "text", B)
-    // every bucket present in the full outer join has the exact smoothed
-    // quantized log-ratio; target-heavy buckets must outrank target-absent
-    val rows = t.select($"n_raw", $"n_target", $"lw_micro")
-      .as[(Long, Long, Long)].collect()
+    // every bucket some feature hit has the exact smoothed quantized
+    // log-ratio; target-heavy buckets must outrank target-absent
+    val rows = (0 until B).map(b => (t.nRaw(b), t.nTarget(b), t.lwMicro(b)))
+      .filter { case (r, tc, _) => r + tc > 0 }
     val inTgt = rows.filter(_._2 > 0).map(_._3)
     val notTgt = rows.filter(_._2 == 0).map(_._3)
     assert(inTgt.nonEmpty && notTgt.nonEmpty)
@@ -41,8 +166,9 @@ class SelectionSpec extends SparkSpec {
   test("dsirTableLabeled (fused single scan) equals the two-frame dsirTable") {
     val two = Selection.dsirTable(corpus, corpus.filter($"is_tgt"), "text", B)
     val fused = Selection.dsirTableLabeled(corpus, "text", "is_tgt", B)
-    assert(two.orderBy($"bucket").collect().toSeq ==
-      fused.orderBy($"bucket").collect().toSeq)
+    assert(two.nRaw.toSeq == fused.nRaw.toSeq)
+    assert(two.nTarget.toSeq == fused.nTarget.toSeq)
+    assert(two.lwMicro.toSeq == fused.lwMicro.toSeq)
   }
 
   test("dsirScores ranks target-like docs above off-distribution docs") {
@@ -57,16 +183,15 @@ class SelectionSpec extends SparkSpec {
   test("scoreWith is an exact integer sum of per-bucket weights") {
     val tgt = corpus.filter($"is_tgt")
     val table = Selection.dsirTable(corpus, tgt, "text", B)
-    val lam = table.select($"bucket".cast("int"), $"lw_micro")
-      .as[(Int, Long)].collect().toMap
-    val scored = Selection.scoreWith(corpus, "doc_id", "text", table, B)
+    val scored = Selection.scoreWith(corpus, "doc_id", "text", table)
       .select($"doc_id", $"n_feats", $"lw_micro").as[(Long, Long, Long)]
       .collect().toMap2
-    // recompute doc 5's weight by hand: features of "zz qq"
-    val feats = corpus.filter($"doc_id" === 5L)
-      .select(explode(Selection.featureArr($"text", B)).as("b"))
-      .as[Long].collect()
-    assert(scored(5L) == ((feats.length.toLong, feats.map(b => lam(b.toInt)).sum)))
+    // recompute every doc's weight by hand from its replayed features
+    corpus.select($"doc_id", $"text").as[(Long, String)].collect().foreach {
+      case (id, text) =>
+        val feats = replayFeatures(text, B)
+        assert(scored(id) == ((feats.length.toLong, feats.map(table.lwMicro(_)).sum)))
+    }
   }
 
   private implicit class Map2[A, B, C](rows: Array[(A, B, C)]) {
@@ -76,21 +201,18 @@ class SelectionSpec extends SparkSpec {
   test("scoreWith gives held-out unseen buckets the Laplace-smoothed weight, not 0") {
     val tgt = corpus.filter($"is_tgt")
     val table = Selection.dsirTable(corpus, tgt, "text", B)
-    val seen = table.select($"bucket").as[Long].collect().toSet
+    val seen = (0 until B).filter(b => table.nRaw(b) + table.nTarget(b) > 0).toSet
     // find a single token whose feature bucket the table never saw
     val novel = (0 until 200).map(i => s"novel$i").find { t =>
-      val b = Seq(t).toDF("text")
-        .select(Classifier.tokenBucket($"text", B)).as[Long].head()
-      !seen.contains(b)
+      !seen.contains(replayFeatures(t, B).head)
     }.getOrElse(fail(s"all $B buckets occupied — enlarge B for this test"))
-    // expected: lwTable's own smoothing at (n_raw, n_target) = (0, 0)
-    val (rt, tt) = table.agg(sum($"n_raw"), sum($"n_target"))
-      .as[(Long, Long)].head()
+    // expected: the table's own smoothing at (n_raw, n_target) = (0, 0)
+    val (rt, tt) = (table.nRaw.sum, table.nTarget.sum)
     def qln(n: Long, d: Long): Long =
       math.floor(math.log(n.toDouble / d.toDouble) * 1e6 + 0.5).toLong
     val unseen = qln(1, tt + B) - qln(1, rt + B)
     val held = Seq((9L, novel)).toDF("doc_id", "text") // 1 token → 1 feature
-    val got = Selection.scoreWith(held, "doc_id", "text", table, B)
+    val got = Selection.scoreWith(held, "doc_id", "text", table)
       .select($"lw_micro").as[Long].head()
     assert(got == unseen, s"unseen-bucket weight: got $got, want $unseen")
   }
@@ -338,5 +460,30 @@ class SelectionSpec extends SparkSpec {
     assert(sk.size == exact.size)
     val overlap = (sk intersect exact).size.toDouble / exact.size
     assert(overlap >= 0.9, s"sketch/exact top-k overlap $overlap < 0.9")
+  }
+}
+
+object SelectionSpec {
+
+  /** DSIR's feature buckets in plain Scala, written apart from graft's
+    * kernels as the oracle states them: SQL `trim` (spaces only), a
+    * `\s+` split keeping empty fields, every token and then every
+    * adjacent pair joined by one space, each bucketed as
+    * `CAST('0x' || substr(md5(f), 1, 15) AS BIGINT) % buckets`. Null text
+    * has no features.
+    */
+  def replayFeatures(text: String, buckets: Int): Seq[Int] =
+    if (text == null) Nil
+    else {
+      val toks = text.replaceAll("^ +| +\\z", "").split("\\s+", -1).toSeq
+      (toks ++ toks.zip(toks.drop(1)).map { case (a, b) => s"$a $b" })
+        .map(bucket(_, buckets))
+    }
+
+  private def bucket(feature: String, buckets: Int): Int = {
+    val hex = java.security.MessageDigest.getInstance("MD5")
+      .digest(feature.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    java.lang.Math.floorMod(java.lang.Long.parseLong(hex.take(15), 16),
+      buckets.toLong).toInt
   }
 }

@@ -40,7 +40,6 @@ class PlanGateSpec extends SparkSpec {
     "q134_bigram_lm",      // 1-row vocabulary-size frame broadcast (q87 shape)
     "q137_ccnet_buckets",  // composes q134's bigram LM (same 1-row vocab frame)
     "q141_ccnet_buckets_sketch", // same LM chain, sketch-threshold tier map
-    "q145_langid_softmax_grad", // |K|-row class list + 1-row K frame broadcast
     "q92_curation_pipeline", // composes unigram scoring above
     "q94_quality_band",    // per-band totals (bounded) broadcast
     "q96_tfidf_terms",     // 1-row doc-count stats broadcast
@@ -143,8 +142,9 @@ class PlanGateSpec extends SparkSpec {
     // stats themselves are shuffle-free (RepetitionSpec pins that)
     "q135_host_signals" -> 4,
     // the respread repartition (single-split fixture; no-op on a real
-    // corpus) + the output sort; the feature-dist agg collapses to a
-    // ≤64-row frame before the broadcast-literal scoring map
+    // corpus) + the output sort; the feature-dist agg runs at
+    // CONSTRUCTION into the driver-held SharedDsir table, and the
+    // scoring map closes over its λ array
     "q136_dsir" -> 2,
     // q134's pinned LM frame + the per-language NTILE window + output sort
     "q137_ccnet_buckets" -> 2,
@@ -177,10 +177,10 @@ class PlanGateSpec extends SparkSpec {
     // CONSTRUCTION; the returned labels frame is loop-final (q85
     // precedent: budget 0)
     "q144_sq8_semantic_dedup" -> 0,
-    // one (bucket, cls)-keyed corpus agg; everything downstream is
-    // sketch-sized (per-bucket totals, distinct classes, K 1-row frame,
-    // full-grid join) + output sort
-    "q145_langid_softmax_grad" -> 6,
+    // the (bucket, cls)-keyed corpus agg runs at CONSTRUCTION (bounded
+    // collect) and the grid is finished on the driver; the returned plan
+    // is the local grid + output sort
+    "q145_langid_softmax_grad" -> 1,
     // composed chain: the dedup + filter + label frame materializes
     // ONCE at construction (localCheckpoint, Retrieval.buildIndex
     // discipline) and the gradient agg runs there too (q143); the
@@ -519,7 +519,7 @@ class PlanGateSpec extends SparkSpec {
         Dedup.dedupSpansKeepFirst(docs(s), "doc_id", "text", n = 8)),
       ("bigram_lm", true, (s, _) =>
         Quality.bigramLogprob(docs(s), "doc_id", "text")),
-      ("dsir_scores", true, (s, _) =>
+      ("dsir_scores", false, (s, _) =>
         Selection.dsirScores(docs(s).withColumn("is_tgt", col("lang") === "en"),
           "doc_id", "text", "is_tgt", buckets = 1024)),
       ("ann_lsh", true, (s, _) =>

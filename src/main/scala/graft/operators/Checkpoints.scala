@@ -26,9 +26,11 @@ import scala.util.control.NonFatal
   *    and queries q92 and q146;
   *  - the session caches (`graft.queries.SharedFrames.get`) [[pin]] each
   *    build and [[free]] the loser of a build race;
-  *  - the parquet-store rewrites ([[Sketches]], [[Freq]], [[Scd]],
-  *    [[Anomaly]], [[Experiment]]) go through [[readStore]] and
-  *    [[replaceStore]].
+  *  - the parquet-store rewrites ([[Sketches]], [[Scd]], [[Anomaly]],
+  *    [[Experiment]]) go through [[readStore]] and [[replaceStore]];
+  *    [[Freq]]'s hitter stores go through [[readStore]] only: their
+  *    merge runs on the driver and writes a local frame, which reads
+  *    nothing from the path it replaces.
   * Pins the returned plan still reads ([[Dedup.pairJaccard]]'s candidate
   * set, the last round of a loop) are the caller's to [[free]] after
   * consuming the result, or the ContextCleaner's.

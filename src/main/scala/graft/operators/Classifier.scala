@@ -124,14 +124,19 @@ object Classifier {
 
   /** Map-only scoring: idCol, `score` = σ(mean-normalized w·x + b). */
   def score(df: DataFrame, idCol: String, textCol: String,
-      model: LogRegModel): DataFrame = {
+      model: LogRegModel): DataFrame =
+    df.select(col(idCol), scoreCol(col(textCol), model).as("score"))
+
+  /** σ(mean-normalized w·x + b) of `text`'s hashed buckets: the column
+    * behind [[score]] and [[filterByModel]].
+    */
+  private def scoreCol(text: Column, model: LogRegModel): Column = {
     val wLit = array(model.weights.map(lit): _*)
-    val bk = bucketArr(col(textCol), model.buckets)
+    val bk = bucketArr(text, model.buckets)
     val inv = when(size(bk) > 0, lit(1.0) / size(bk)).otherwise(lit(0.0))
     val margin = aggregate(bk, lit(0.0),
       (acc, bkt) => acc + element_at(wLit, bkt.cast("int") + 1)) * inv + model.bias
-    df.select(col(idCol),
-      (lit(1.0) / (lit(1.0) + exp(-margin))).as("score"))
+    lit(1.0) / (lit(1.0) + exp(-margin))
   }
 
   // --------------------------------------------------- multi-class
@@ -353,12 +358,6 @@ object Classifier {
     * at or above `minScore`. Map-only.
     */
   def filterByModel(df: DataFrame, idCol: String, textCol: String,
-      model: LogRegModel, minScore: Double): DataFrame = {
-    val wLit = array(model.weights.map(lit): _*)
-    val bk = bucketArr(col(textCol), model.buckets)
-    val inv = when(size(bk) > 0, lit(1.0) / size(bk)).otherwise(lit(0.0))
-    val margin = aggregate(bk, lit(0.0),
-      (acc, bkt) => acc + element_at(wLit, bkt.cast("int") + 1)) * inv + model.bias
-    df.filter(lit(1.0) / (lit(1.0) + exp(-margin)) >= minScore)
-  }
+      model: LogRegModel, minScore: Double): DataFrame =
+    df.filter(scoreCol(col(textCol), model) >= minScore)
 }

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import Checkpoints.{readStore, replaceStore}
+import Checkpoints.readStore
 
 /** Mergeable heavy-hitter (frequent-item) summaries — Misra-Gries — and
   * the two-pass EXACT top-k they make affordable at corpus scale.
@@ -25,6 +25,16 @@ import Checkpoints.{readStore, replaceStore}
   * N/(cap+1)), so the union of partition summaries is a correct global
   * candidate set — the shuffle carries at most capacity·|partitions|
   * rows, independent of the data's distinct cardinality.
+  *
+  * Every stage is written ONCE, for grouped input, with the guarantees
+  * holding per group (N above is the group's own row count): the
+  * per-partition loop ([[mgPartitionByGroupCounted]]), the candidate
+  * summary, the summary merge ([[mergeMg]]), the parquet hitter store
+  * and its certified read. Each ungrouped form is that code over one
+  * constant group; the ungrouped store drops the group column on write
+  * and reads it back as that constant. Only `exactTopK`'s pass 2 keeps
+  * its own ungrouped plan: a one-group rank window and stats join would
+  * add exchanges the global limit and 1-row stats join do not need.
   *
   * `exactTopK` is then the standard two-pass discipline: pass 1 finds the
   * candidate superset (guaranteed to contain every possible top-k member
@@ -65,32 +75,6 @@ object Freq {
     }
   }
 
-  /** [[mgPartition]] plus the certificate inputs: emits the partition's
-    * counters as (item, est, 0) rows and ONE (null, n_rows, dec_rounds)
-    * marker row — null is unambiguous because callers filter null items
-    * before summarizing. Downstream sums give exactly the two facts the
-    * exactness certificate needs: N (total rows summarized) and whether
-    * ANY decrement round ran anywhere.
-    */
-  private[operators] def mgPartitionCounted(capacity: Int)(
-      it: Iterator[String]): Iterator[(String, Long, Long)] = {
-    val m = new java.util.HashMap[String, Long](capacity * 2)
-    var n = 0L; var dec = 0L
-    while (it.hasNext) {
-      n += 1L
-      if (mgStep(m, it.next(), capacity)) dec += 1L
-    }
-    val out = Vector.newBuilder[(String, Long, Long)]
-    out += ((null, n, dec))
-    m.forEach((k, v) => out += ((k, v, 0L)))
-    out.result().iterator
-  }
-
-  private[operators] def mgPartition(capacity: Int)(
-      it: Iterator[String]): Iterator[(String, Long)] =
-    mgPartitionCounted(capacity)(it)
-      .filter(_._1 != null).map { case (k, v, _) => (k, v) }
-
   /** Per-(partition, group) Misra-Gries with certificate markers: one
     * `capacity`-slot counter map per group seen in the partition — task
     * memory is |groups-in-partition|·capacity, so this tier is for
@@ -99,8 +83,13 @@ object Freq {
     * groupBy(group, item) shuffle is the thing to avoid. That regime
     * restriction is ENFORCED task-side: past `maxGroups` distinct groups
     * in one partition the task fails fast with a readable error instead
-    * of degrading into an executor-OOM-sized map at scale. Emits one
-    * (group, null, n_rows_g, dec_rounds_g) marker per group seen.
+    * of degrading into an executor-OOM-sized map at scale. Emits the
+    * counters as (group, item, est, 0) rows and one (group, null,
+    * n_rows_g, dec_rounds_g) marker per group seen — null is
+    * unambiguous because callers filter null items first. Downstream
+    * sums give exactly the two facts the exactness certificate and the
+    * store need per group: N (rows summarized) and whether ANY decrement
+    * round ran anywhere.
     */
   private[operators] def mgPartitionByGroupCounted(capacity: Int,
       maxGroups: Int)(
@@ -135,11 +124,6 @@ object Freq {
     out.result().iterator
   }
 
-  private[operators] def mgPartitionByGroup(capacity: Int, maxGroups: Int)(
-      it: Iterator[(String, String)]): Iterator[(String, String, Long)] =
-    mgPartitionByGroupCounted(capacity, maxGroups)(it)
-      .filter(_._2 != null).map { case (g, k, v, _) => (g, k, v) }
-
   /** Default task-side cap on distinct groups per partition for the
     * grouped MG tier — a partition with more distinct groups than this
     * is plainly in the wrong tier (the map alone would be
@@ -147,129 +131,180 @@ object Freq {
     */
   val DefaultMaxGroupsPerPartition = 4096
 
-  /** Global candidate summary: (item, est) with est <= true count <=
-    * est + N/(capacity+1), containing every item whose true count
-    * exceeds N/(capacity+1). NULL items are ignored (they are not a
-    * frequency question). Plan: one scan, zero-shuffle partition
-    * summaries, then a groupBy over <= capacity·|partitions| summary
-    * rows — metadata-scale at any corpus size.
+  /** The group every ungrouped form runs under. */
+  private val OneGroup: Column = lit("")
+
+  /** [[mgPartitionByGroupCounted]] over every partition of `df`, keyed
+    * by `group` (a column of `df`, or [[OneGroup]]). NULL groups and
+    * items are ignored (they are not a frequency question).
     */
-  def mgCandidates(df: DataFrame, itemCol: String, capacity: Int): DataFrame = {
+  private def partitionSummaries(df: DataFrame, group: Column,
+      itemCol: String, capacity: Int,
+      maxGroups: Int): Dataset[(String, String, Long, Long)] = {
     require(capacity >= 1, s"capacity must be positive: $capacity")
     val spark = df.sparkSession
     import spark.implicits._
-    val items: Dataset[String] =
-      df.filter(col(itemCol).isNotNull).select(col(itemCol).cast("string"))
-        .as[String]
-    items.mapPartitions(mgPartition(capacity))
-      .toDF("item", "est")
-      .groupBy(col("item")).agg(sum(col("est")).as("est"))
+    df.filter(group.isNotNull && col(itemCol).isNotNull)
+      .select(group.cast("string"), col(itemCol).cast("string"))
+      .as[(String, String)]
+      .mapPartitions(mgPartitionByGroupCounted(capacity, maxGroups))
   }
 
-  /** Merge two Misra-Gries summaries back to `capacity` counters
-    * (Agarwal et al. §3): sum matching counters, then subtract the
-    * (capacity+1)-th largest summed value from every counter and drop
-    * the non-positive ones. The subtraction is what re-bounds the state;
-    * it adds at most (n_a+n_b)/(capacity+1) CUMULATIVE undercount, so a
-    * chain of store+batch merges keeps the global guarantee. All inputs
-    * here are summary tables (<= capacity rows each) — the unpartitioned
-    * window below ranks a bounded table, the Packing.scala:14 convention.
+  /** The partition summaries summed per (group, item): (group, item,
+    * est, dec), where each group's null-item row carries its row count
+    * in `est` and its decrement rounds in `dec`. The groupBy runs over
+    * ≤ |groups|·(capacity+1)·|partitions| summary rows — metadata-scale
+    * at any corpus size.
     */
-  def mergeMg(a: DataFrame, b: DataFrame, capacity: Int): DataFrame = {
-    require(capacity >= 1, s"capacity must be positive: $capacity")
-    val summed = a.select(col("item"), col("est"))
-      .unionByName(b.select(col("item"), col("est")))
-      .groupBy(col("item")).agg(sum(col("est")).as("est"))
-    val w = Window.orderBy(col("est").desc, col("item"))
-    val ranked = summed.withColumn("__r", row_number().over(w))
-    val sub = ranked.filter(col("__r") === capacity + 1)
-      .agg(coalesce(max(col("est")), lit(0L)).as("__sub"))
-    ranked.crossJoin(broadcast(sub))
-      .filter(col("est") > col("__sub"))
-      .select(col("item"), (col("est") - col("__sub")).as("est"))
-  }
+  private def summary(df: DataFrame, group: Column, itemCol: String,
+      capacity: Int, maxGroups: Int): DataFrame =
+    partitionSummaries(df, group, itemCol, capacity, maxGroups)
+      .toDF("group", "item", "est", "dec")
+      .groupBy(col("group"), col("item"))
+      .agg(sum(col("est")).as("est"), sum(col("dec")).as("dec"))
 
-  /** [[mergeMg]] per group: counters sum within (group, item), and each
-    * GROUP re-bounds independently by its own (capacity+1)-th largest
-    * counter. Windows run over summary rows partitioned by group —
-    * sketch-sized, never data-sized.
+  /** Global candidate summary: (item, est) with est <= true count <=
+    * est + N/(capacity+1), containing every item whose true count
+    * exceeds N/(capacity+1). NULL items are ignored. Plan: one scan,
+    * zero-shuffle partition summaries, then a groupBy over
+    * <= capacity·|partitions| summary rows.
     */
-  def mergeMgByGroup(a: DataFrame, b: DataFrame, capacity: Int): DataFrame = {
+  def mgCandidates(df: DataFrame, itemCol: String, capacity: Int): DataFrame =
+    summary(df, OneGroup, itemCol, capacity, DefaultMaxGroupsPerPartition)
+      .filter(col("item").isNotNull).select(col("item"), col("est"))
+
+  /** Grouped candidate summary: (group, item, est) with the
+    * [[mgCandidates]] guarantees holding PER GROUP (each group's
+    * summaries see only its own rows, so est <= true and
+    * true - est <= N_group/(capacity+1)). NULL groups and items are
+    * ignored. Shuffle: <= |groups|·(capacity+1)·|partitions| summary
+    * rows.
+    */
+  def mgCandidatesByGroup(df: DataFrame, groupCol: String, itemCol: String,
+      capacity: Int,
+      maxGroupsPerPartition: Int = DefaultMaxGroupsPerPartition): DataFrame =
+    summary(df, col(groupCol), itemCol, capacity, maxGroupsPerPartition)
+      .filter(col("item").isNotNull)
+      .select(col("group"), col("item"), col("est"))
+
+  /** Merge two Misra-Gries summaries (group → item → est) back to
+    * `capacity` counters per group (Agarwal et al. §3): within a group,
+    * sum matching counters, then subtract the group's (capacity+1)-th
+    * largest summed value from every counter and drop the non-positive
+    * ones. The subtraction is what re-bounds the state; it adds at most
+    * (n_a+n_b)/(capacity+1) CUMULATIVE undercount to that group, so a
+    * chain of store+batch merges keeps each group's guarantee, and a
+    * small group is never re-bounded by a big group's counters. Runs on
+    * the driver: both inputs are summaries (≤ capacity·|partitions|
+    * counters per group at most).
+    */
+  def mergeMg(a: Map[String, Map[String, Long]],
+      b: Map[String, Map[String, Long]],
+      capacity: Int): Map[String, Map[String, Long]] = {
     require(capacity >= 1, s"capacity must be positive: $capacity")
-    val cols = Seq(col("group"), col("item"), col("est"))
-    val summed = a.select(cols: _*).unionByName(b.select(cols: _*))
-      .groupBy(col("group"), col("item")).agg(sum(col("est")).as("est"))
-    val w = Window.partitionBy(col("group"))
-      .orderBy(col("est").desc, col("item"))
-    val ranked = summed.withColumn("__r", row_number().over(w))
-    val subs = ranked.filter(col("__r") === capacity + 1)
-      .select(col("group"), col("est").as("__sub"))
-    ranked.join(broadcast(subs), Seq("group"), "left_outer")
-      .withColumn("__sub", coalesce(col("__sub"), lit(0L)))
-      .filter(col("est") > col("__sub"))
-      .select(col("group"), col("item"), (col("est") - col("__sub")).as("est"))
+    (a.keySet ++ b.keySet).iterator.map { g =>
+      val summed = b.getOrElse(g, Map.empty[String, Long])
+        .foldLeft(a.getOrElse(g, Map.empty[String, Long])) {
+          case (m, (item, est)) => m.updated(item, m.getOrElse(item, 0L) + est)
+        }
+      val sub =
+        if (summed.size <= capacity) 0L
+        else summed.values.toArray.sorted.apply(summed.size - capacity - 1)
+      g -> summed.collect { case (item, est) if est > sub => item -> (est - sub) }
+    }.toMap
   }
 
   /** One micro-batch of heavy-hitter store maintenance: summarize the
-    * batch ([[mgCandidates]]) and [[mergeMg]] it into the parquet store
-    * — the mergeable-summaries law live, so the store stays ≤ capacity
-    * rows with cumulative error ≤ n_total/(capacity+1) whatever the
-    * stream length. The store carries (item, est) plus a constant
-    * `n_total` column (total rows summarized) so any reader can state
-    * the bound — and prune to GUARANTEED hitters (est > n_total/(cap+1)
-    * − est is the undercount certificate) without consulting anything
-    * else. Tracking n_total costs one extra COUNT pass over the batch
-    * (batch-sized, never store-sized). The store is rewritten through
-    * [[Checkpoints.replaceStore]]; exposed separately from
+    * batch and [[mergeMg]] it into the parquet store — the
+    * mergeable-summaries law live, so the store stays ≤ capacity rows
+    * with cumulative error ≤ n_total/(capacity+1) whatever the stream
+    * length. The store carries (item, est) plus a constant `n_total`
+    * column (total rows summarized, counted by the summary's own scan)
+    * so any reader can state the bound — and prune to GUARANTEED
+    * hitters (est > n_total/(cap+1) − est is the undercount certificate)
+    * without consulting anything else. Exposed separately from
     * [[maintainTopHitters]] so restart/replay semantics are directly
     * testable.
     */
   def mergeBatchIntoHitterStore(batch: DataFrame, itemCol: String,
-      capacity: Int, storePath: String): Unit = {
+      capacity: Int, storePath: String): Unit =
+    mergeIntoStore(batch, None, itemCol, capacity, storePath,
+      DefaultMaxGroupsPerPartition)
+
+  /** Heavy-hitter store with PER-GROUP totals: (group, item, est,
+    * n_total), where `n_total` on each row is ITS GROUP's summarized row
+    * count, so [[guaranteedHittersByGroup]] certifies against each
+    * group's own bound (a global figure would dilute a small group's
+    * certificate under big-group traffic, exactly like a group-blind
+    * merge would dilute its counters).
+    */
+  def mergeBatchIntoGroupHitterStore(batch: DataFrame, groupCol: String,
+      itemCol: String, capacity: Int, storePath: String,
+      maxGroupsPerPartition: Int = DefaultMaxGroupsPerPartition): Unit =
+    mergeIntoStore(batch, Some(groupCol), itemCol, capacity, storePath,
+      maxGroupsPerPartition)
+
+  /** The store merge behind both hitter stores, on the driver: it
+    * collects the batch's partition summaries (≤ |partitions|·|groups|·
+    * (capacity+1) rows) and the store (≤ |groups|·capacity rows), sums
+    * each group's total, [[mergeMg]]s the counters and overwrites the
+    * store from the merged rows — a local frame, so the write reads
+    * nothing from the path it replaces. An adversarial batch can
+    * decrement a group's summary to ZERO counters (cap=1 over
+    * alternating items); n_total rides on rows, so such a group keeps
+    * one (null item, est 0) marker row instead of silently resetting
+    * its error bound. Hitter readers filter null items.
+    */
+  private def mergeIntoStore(batch: DataFrame, groupCol: Option[String],
+      itemCol: String, capacity: Int, storePath: String,
+      maxGroups: Int): Unit = {
     val spark = batch.sparkSession
-    val batchN = batch.filter(col(itemCol).isNotNull).count()
-    val newSk = mgCandidates(batch, itemCol, capacity)
-    val (merged, total) = readStore(spark, storePath) match {
-      case Some(stored) =>
-        val prevN = stored.agg(coalesce(max(col("n_total")), lit(0L)))
-          .head().getLong(0)
-        (mergeMg(stored, newSk, capacity), prevN + batchN)
-      case None => (newSk, batchN)
-    }
-    // An adversarial batch can decrement a summary to ZERO rows (cap=1
-    // over alternating items); n_total rides on rows, so an empty store
-    // would silently reset the error bound — carry a null-item marker
-    // row instead. mergeMg drops it on the next merge (est 0 never
-    // exceeds the subtrahend) and hitter readers filter items anyway.
-    // Pin the merge ONCE and probe emptiness on the pinned frame:
-    // isEmpty on the raw plan would execute the whole merge a second
-    // time ahead of the pin.
     import spark.implicits._
-    replaceStore(merged.withColumn("n_total", lit(total)), storePath) {
-      pinned =>
-        val out =
-          if (total > 0L && pinned.isEmpty)
-            Seq((Option.empty[String], 0L, total))
-              .toDF("item", "est", "n_total")
-          else pinned
-        out.write.mode("overwrite").parquet(storePath)
+    val fresh = partitionSummaries(batch, groupCol.fold(OneGroup)(col),
+      itemCol, capacity, maxGroups).collect().toSeq
+    val stored = readStore(spark, storePath).toSeq.flatMap(
+      _.select(groupCol.fold(OneGroup)(_ => col("group")), col("item"),
+          col("est"), col("n_total"))
+        .as[(String, String, Long, Long)].collect())
+    def counters(rows: Seq[(String, String, Long, Long)]) =
+      rows.filter(_._2 != null).groupBy(_._1).map { case (g, rs) =>
+        g -> rs.groupMapReduce(_._2)(_._3)(_ + _)
+      }
+    val merged = mergeMg(counters(stored), counters(fresh), capacity)
+    // every stored row carries its group's total; a batch marker counts
+    // the rows one partition saw
+    val totals = (stored.map(r => r._1 -> r._4).distinct ++
+      fresh.filter(_._2 == null).map(r => r._1 -> r._3))
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    val rows = totals.toSeq.flatMap { case (g, n) =>
+      val cs = merged.getOrElse(g, Map.empty[String, Long])
+      if (cs.isEmpty) Seq((g, null: String, 0L, n))
+      else cs.toSeq.map { case (item, est) => (g, item, est, n) }
     }
+    val out = rows.toDF("group", "item", "est", "n_total")
+    groupCol.fold(out.drop("group"))(_ => out)
+      .coalesce(1).write.mode("overwrite").parquet(storePath)
   }
 
-  /** The certified read of a hitter store ([[mergeBatchIntoHitterStore]]
-    * layout): items whose UNDERCOUNT-ONLY estimate already clears the
-    * store's error bound `n_total/(capacity+1)` — for these, true count
-    * > bound is a theorem, not an estimate (est <= true always). Items
-    * below the line may or may not be heavy (the summary can't say);
-    * re-count candidates exactly if the distinction matters (the
-    * [[exactTopK]] pass-2 discipline). Marker rows (null item) are
-    * excluded.
+  /** The certified read of a hitter store, grouped or not: items whose
+    * UNDERCOUNT-ONLY estimate already clears their group's error bound
+    * `n_total/(capacity+1)` — for these, true count > bound is a
+    * theorem, not an estimate (est <= true always). Items below the line
+    * may or may not be heavy (the summary can't say); re-count
+    * candidates exactly if the distinction matters (the [[exactTopK]]
+    * pass-2 discipline). Marker rows (null item) are excluded.
     */
   def guaranteedHitters(store: DataFrame, capacity: Int): DataFrame = {
     require(capacity >= 1, s"capacity must be positive: $capacity")
     store.filter(col("item").isNotNull &&
       col("est") * (capacity + 1).toLong > col("n_total"))
   }
+
+  /** [[guaranteedHitters]] on a [[mergeBatchIntoGroupHitterStore]]
+    * store: each item is certified against its own group's total.
+    */
+  def guaranteedHittersByGroup(store: DataFrame, capacity: Int): DataFrame =
+    guaranteedHitters(store, capacity)
 
   /** Streaming heavy-hitter maintenance — live "top tokens/URLs so far"
     * over an unbounded stream in ≤ capacity rows of state: every
@@ -286,54 +321,6 @@ object Freq {
     graft.io.Sinks.idempotentForeachBatch(stream, ledgerDir) { (b, _) =>
       mergeBatchIntoHitterStore(b, itemCol, capacity, storePath)
     }
-
-  /** Grouped twin of [[mergeBatchIntoHitterStore]] with PER-GROUP
-    * totals: `n_total` on each row is ITS GROUP's summarized row count,
-    * so [[guaranteedHittersByGroup]] certifies against each group's own
-    * bound (a global figure would dilute a small group's certificate
-    * under big-group traffic, exactly like a group-blind merge would
-    * dilute its counters). The summary right-joins the totals table, so
-    * a group whose summary was decremented empty keeps a natural
-    * (group, null-item, 0) marker row carrying its total — no separate
-    * marker machinery.
-    */
-  def mergeBatchIntoGroupHitterStore(batch: DataFrame, groupCol: String,
-      itemCol: String, capacity: Int, storePath: String,
-      maxGroupsPerPartition: Int = DefaultMaxGroupsPerPartition): Unit = {
-    val spark = batch.sparkSession
-    val batchTotals = batch
-      .filter(col(groupCol).isNotNull && col(itemCol).isNotNull)
-      .groupBy(col(groupCol).cast("string").as("group"))
-      .agg(count(lit(1)).as("n_total"))
-    val newSk = mgCandidatesByGroup(batch, groupCol, itemCol, capacity,
-      maxGroupsPerPartition)
-    val (merged, totals) = readStore(spark, storePath) match {
-      case Some(stored) =>
-        val prevTotals = stored.select(col("group"), col("n_total"))
-          .distinct()
-        val summed = prevTotals.unionByName(batchTotals)
-          .groupBy(col("group")).agg(sum(col("n_total")).as("n_total"))
-        (mergeMgByGroup(stored.filter(col("item").isNotNull), newSk,
-          capacity), summed)
-      case None => (newSk, batchTotals)
-    }
-    replaceStore(merged
-      .join(totals, Seq("group"), "right_outer")
-      .withColumn("est", coalesce(col("est"), lit(0L)))
-      .select(col("group"), col("item"), col("est"), col("n_total")),
-      storePath)()
-  }
-
-  /** Certified read of a grouped hitter store: items whose estimate
-    * clears THEIR OWN group's bound `n_total_group/(capacity+1)` —
-    * heaviness within the group is a theorem (see
-    * [[guaranteedHitters]]). Marker rows are excluded.
-    */
-  def guaranteedHittersByGroup(store: DataFrame, capacity: Int): DataFrame = {
-    require(capacity >= 1, s"capacity must be positive: $capacity")
-    store.filter(col("item").isNotNull &&
-      col("est") * (capacity + 1).toLong > col("n_total"))
-  }
 
   /** Loud EXACTNESS-REGIME precondition on a grouped hitter store
     * ([[mergeBatchIntoGroupHitterStore]] layout): per group,
@@ -391,26 +378,6 @@ object Freq {
         storePath, maxGroupsPerPartition)
     }
 
-  /** Grouped candidate summary: (group, item, est) with the
-    * [[mgCandidates]] guarantees holding PER GROUP (each group's
-    * summaries see only its own rows, so est <= true and
-    * true - est <= N_group/(capacity+1)). NULL groups and items are
-    * ignored. Shuffle: <= |groups|·capacity·|partitions| summary rows.
-    */
-  def mgCandidatesByGroup(df: DataFrame, groupCol: String, itemCol: String,
-      capacity: Int,
-      maxGroupsPerPartition: Int = DefaultMaxGroupsPerPartition): DataFrame = {
-    require(capacity >= 1, s"capacity must be positive: $capacity")
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.filter(col(groupCol).isNotNull && col(itemCol).isNotNull)
-      .select(col(groupCol).cast("string"), col(itemCol).cast("string"))
-      .as[(String, String)]
-      .mapPartitions(mgPartitionByGroup(capacity, maxGroupsPerPartition))
-      .toDF("group", "item", "est")
-      .groupBy(col("group"), col("item")).agg(sum(col("est")).as("est"))
-  }
-
   /** EXACT top-k per group (count desc, item asc tie-break) — the
     * sketch-assisted form of a per-group Top-N: candidates from the
     * grouped MG summaries, exact re-count of candidate (group, item)
@@ -445,19 +412,11 @@ object Freq {
       k: Int, capacity: Int,
       maxGroupsPerPartition: Int = DefaultMaxGroupsPerPartition): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
-    require(capacity >= 1, s"capacity must be positive: $capacity")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val summary = df.filter(col(groupCol).isNotNull && col(itemCol).isNotNull)
-      .select(col(groupCol).cast("string"), col(itemCol).cast("string"))
-      .as[(String, String)]
-      .mapPartitions(mgPartitionByGroupCounted(capacity, maxGroupsPerPartition))
-      .toDF("group", "item", "est", "dec")
     // one aggregate over candidates AND the per-group (group, null)
     // marker rows, pinned eagerly so both branches read one bounded
     // table and the pass-1 scan runs once (see exactTopK)
-    val agged = Checkpoints.pin(summary.groupBy(col("group"), col("item"))
-      .agg(sum(col("est")).as("est"), sum(col("dec")).as("dec")))
+    val agged = Checkpoints.pin(
+      summary(df, col(groupCol), itemCol, capacity, maxGroupsPerPartition))
     val cand = agged.filter(col("item").isNotNull)
       .select(col("group").as("__mg_g"), col("item").as("__mg_i"))
     val stats = agged.filter(col("item").isNull)
@@ -547,15 +506,8 @@ object Freq {
   def exactTopK(df: DataFrame, itemCol: String, k: Int,
       capacity: Int): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
-    require(capacity >= 1, s"capacity must be positive: $capacity")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val summary = df.filter(col(itemCol).isNotNull)
-      .select(col(itemCol).cast("string")).as[String]
-      .mapPartitions(mgPartitionCounted(capacity))
-      .toDF("item", "est", "dec")
     // ONE aggregate over candidates AND markers (the null-item marker
-    // rows group under the null key), PINNED eagerly so the candidate
+    // row of the one group), PINNED eagerly so the candidate
     // branch and the stats branch read the same bounded table and the
     // pass-1 corpus scan runs ONCE. Without the pin, column pruning
     // specializes each branch's aggregate (cand drops `dec`) into
@@ -563,8 +515,8 @@ object Freq {
     // as a third full corpus scan in the executed plan. The pinned frame
     // is ≤ (capacity+1)·|partitions| summary rows — the
     // blendByRankBySketch construction-job discipline.
-    val agged = Checkpoints.pin(summary.groupBy(col("item"))
-      .agg(sum(col("est")).as("est"), sum(col("dec")).as("dec")))
+    val agged = Checkpoints.pin(summary(df, OneGroup, itemCol, capacity,
+      DefaultMaxGroupsPerPartition).select(col("item"), col("est"), col("dec")))
     // candidate column renamed + DataFrame-qualified probe so an input
     // column named "item" can't make the join condition ambiguous
     val cand = agged.filter(col("item").isNotNull)

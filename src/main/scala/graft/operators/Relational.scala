@@ -35,38 +35,9 @@ object Relational {
     */
   def asOfJoin(left: DataFrame, right: DataFrame, keyCols: Seq[String],
       leftTs: String, rightTs: String,
-      tieBreak: Seq[String] = Nil): DataFrame = {
-    val rightPayload = struct(right.columns.map(col): _*)
-    val leftPayload = struct(left.columns.map(col): _*)
-    // tie-break columns ride along (must exist on both sides); keys are
-    // already projected. BOTH payloads travel through the union, so no
-    // join-back is needed afterwards — the whole operator is one shuffle
-    // (the window's partitioning) and zero joins.
-    val tb = tieBreak.filterNot(keyCols.contains)
-    // tag: right rows sort BEFORE left rows at the same timestamp so a
-    // same-instant right row is visible to the left row (<= semantics)
-    val r = right.select(
-      keyCols.map(col) ++ tb.map(col) ++
-        Seq(col(rightTs).as("__ts"), lit(0).as("__side"),
-          rightPayload.as("__payload"),
-          lit(null).cast(org.apache.spark.sql.types.StructType(left.schema.fields))
-            .as("__lrow")): _*)
-    val lTagged = left.select(
-      keyCols.map(col) ++ tb.map(col) ++
-        Seq(col(leftTs).as("__ts"), lit(1).as("__side"),
-          lit(null).cast(org.apache.spark.sql.types.StructType(right.schema.fields))
-            .as("__payload"),
-          leftPayload.as("__lrow")): _*)
-    val ordering: Seq[Column] =
-      col("__ts") +: col("__side") +: tieBreak.map(col)
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(ordering: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    r.unionByName(lTagged)
-      .withColumn("__asof", last(col("__payload"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-      .select(col("__lrow.*"), col("__asof").as("asof"))
-  }
+      tieBreak: Seq[String] = Nil): DataFrame =
+    asOf(left, right, keyCols, leftTs, rightTs, tieBreak,
+      col("__ts") +: col("__side") +: tieBreak.map(col))
 
   /** FORWARD as-of join: for each left row, the EARLIEST right row with
     * `rightTs >= leftTs` on the same key — the other temporal half of
@@ -80,10 +51,30 @@ object Relational {
     */
   def asOfJoinForward(left: DataFrame, right: DataFrame,
       keyCols: Seq[String], leftTs: String, rightTs: String,
-      tieBreak: Seq[String] = Nil): DataFrame = {
+      tieBreak: Seq[String] = Nil): DataFrame =
+    // DESC time, right-before-left within an instant, tie-break ASC so
+    // among equal-ts right rows the LAST in descending scan order (= the
+    // first in tieBreak order) wins — mirroring asOfJoin's "later row in
+    // tieBreak order" via the reversed traversal
+    asOf(left, right, keyCols, leftTs, rightTs, tieBreak,
+      col("__ts").desc +: col("__side") +: tieBreak.map(col(_).desc))
+
+  /** The union-and-window body of both as-of directions: each left row
+    * takes the last right payload before it in `ordering` (over the
+    * tagged `__ts`/`__side` columns and the tie-break) within its key.
+    */
+  private def asOf(left: DataFrame, right: DataFrame, keyCols: Seq[String],
+      leftTs: String, rightTs: String, tieBreak: Seq[String],
+      ordering: Seq[Column]): DataFrame = {
     val rightPayload = struct(right.columns.map(col): _*)
     val leftPayload = struct(left.columns.map(col): _*)
+    // tie-break columns ride along (must exist on both sides); keys are
+    // already projected. BOTH payloads travel through the union, so no
+    // join-back is needed afterwards — the whole operator is one shuffle
+    // (the window's partitioning) and zero joins.
     val tb = tieBreak.filterNot(keyCols.contains)
+    // tag: right rows sort BEFORE left rows at the same timestamp so a
+    // same-instant right row is visible to the left row
     val r = right.select(
       keyCols.map(col) ++ tb.map(col) ++
         Seq(col(rightTs).as("__ts"), lit(0).as("__side"),
@@ -96,12 +87,6 @@ object Relational {
           lit(null).cast(org.apache.spark.sql.types.StructType(right.schema.fields))
             .as("__payload"),
           leftPayload.as("__lrow")): _*)
-    // DESC time, right-before-left within an instant, tie-break ASC so
-    // among equal-ts right rows the LAST in descending scan order (= the
-    // first in tieBreak order) wins — mirroring asOfJoin's "later row in
-    // tieBreak order" via the reversed traversal
-    val ordering: Seq[Column] =
-      col("__ts").desc +: col("__side") +: tieBreak.map(col(_).desc)
     val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(ordering: _*)
       .rowsBetween(Window.unboundedPreceding, 0)

@@ -301,8 +301,17 @@ object Sketches {
       floor((v - lo) / width).cast("int")))
     // null/NaN values carry no position — dropped, not clamped (a null
     // bucket key would also break the dense-array rebuild)
-    df.filter(v.isNotNull && !isnan(v))
-      .groupBy(groupCols.map(col) :+ b.as("bucket"): _*)
+    histogramCounts(df.filter(v.isNotNull && !isnan(v)), groupCols, b,
+      nBuckets)
+  }
+
+  /** The two aggregates behind both bucketizations: per-(group, bucket)
+    * counts over the positioned rows `df`, then one row per group with
+    * its total `n` and the dense `counts` array over [0, nBuckets).
+    */
+  private def histogramCounts(df: DataFrame, groupCols: Seq[String],
+      bucket: org.apache.spark.sql.Column, nBuckets: Int): DataFrame =
+    df.groupBy(groupCols.map(col) :+ bucket.as("bucket"): _*)
       .agg(count(lit(1)).as("cnt"))
       .groupBy(groupCols.map(col): _*)
       .agg(sum(col("cnt")).as("n"),
@@ -311,7 +320,6 @@ object Sketches {
       .withColumn("counts", transform(sequence(lit(0), lit(nBuckets - 1)),
         i => coalesce(element_at(col("m"), i), lit(0L))))
       .drop("m")
-  }
 
   /** Equi-width integer bucket index over [lo, lo + nBuckets·width),
     * edge-clamped, in EXACT integer arithmetic: the remainder strip is
@@ -353,16 +361,8 @@ object Sketches {
       valueCol: String, lo: Long, width: Long, nBuckets: Int): DataFrame = {
     require(groupCols.nonEmpty, "at least one group column required")
     val b = bucketIdxInt(col(valueCol), lo, width, nBuckets).cast("int")
-    df.filter(col(valueCol).isNotNull)
-      .groupBy(groupCols.map(col) :+ b.as("bucket"): _*)
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(groupCols.map(col): _*)
-      .agg(sum(col("cnt")).as("n"),
-        map_from_entries(collect_list(struct(col("bucket"), col("cnt"))))
-          .as("m"))
-      .withColumn("counts", transform(sequence(lit(0), lit(nBuckets - 1)),
-        i => coalesce(element_at(col("m"), i), lit(0L))))
-      .drop("m")
+    histogramCounts(df.filter(col(valueCol).isNotNull), groupCols, b,
+      nBuckets)
   }
 
   /** Merge two histogram-sketch tables: counts add element-wise

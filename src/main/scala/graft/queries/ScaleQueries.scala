@@ -442,7 +442,7 @@ object ScaleQueries extends QueryModule {
     // EXACT cross-engine gate is sound: with capacity ≥ the per-group
     // vocabulary (31 tokens per lang in these fixtures, capacity 32)
     // Misra-Gries never decrements, per-partition summaries are exact
-    // partial counts, mergeMgByGroup's rank-(cap+1) subtrahend never
+    // partial counts, mergeMg's per-group rank-(cap+1) subtrahend never
     // exists, and the stored est IS the exact count — so the certified
     // read (est·(cap+1) > n_total_group, heaviness as a THEOREM) must
     // equal the oracle's exact heavy set, count for count. The

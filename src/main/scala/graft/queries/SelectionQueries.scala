@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.TextFunctions.tokens
 import graft.operators.{Boilerplate, Checkpoints, Classifier, Sampling, Selection}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,9 +11,6 @@ import org.apache.spark.sql.functions._
   * keep-first line dedup, and corpus-wide exact-substring span dedup.
   */
 object SelectionQueries extends QueryModule {
-
-  /** Tokens per synthesized line for q138 (q132's relining, corpus-wide). */
-  private val lineTokens = 2
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -57,13 +53,8 @@ object SelectionQueries extends QueryModule {
     // threshold strip: ALL occurrences go) and q132 (within-doc only).
     "q138_line_dedup_corpus" -> ((s, dir) => {
       import s.implicits._
-      val t = tokens($"text")
-      val lines = transform(
-        sequence(lit(0), floor((size(t) - 1) / lineTokens).cast("int")),
-        i => concat_ws(" ", slice(t, i * lineTokens + 1, lit(lineTokens))))
-      val relined = Tables.documents(s, dir)
-        .select($"doc_id", concat_ws("\n", lines).as("text"))
-      Boilerplate.dedupLinesKeepFirst(relined, "doc_id", "text")
+      Boilerplate.dedupLinesKeepFirst(SignalQueries.relined(s, dir), "doc_id",
+        "text")
         .select($"doc_id", $"text", $"n_segments", $"n_dropped")
         .orderBy($"doc_id")
     }),

@@ -19,6 +19,18 @@ object SignalQueries extends QueryModule {
     */
   private val lineTokens = 2
 
+  /** The documents as (doc_id, text) with each text re-lined at
+    * [[lineTokens]] tokens per `\n`-joined line — q132's synthesis, and
+    * q138's corpus-wide.
+    */
+  private[queries] def relined(s: SparkSession, dir: String): DataFrame = {
+    val t = tokens(col("text"))
+    val lines = transform(
+      sequence(lit(0), floor((size(t) - 1) / lineTokens).cast("int")),
+      i => concat_ws(" ", slice(t, i * lineTokens + 1, lit(lineTokens))))
+    Tables.documents(s, dir).select(col("doc_id"), concat_ws("\n", lines).as("text"))
+  }
+
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Per-document token entropy (the low-entropy repetitive-page
@@ -51,13 +63,7 @@ object SignalQueries extends QueryModule {
     // q115's job). Zero shuffles except the output sort.
     "q132_linededup" -> ((s, dir) => {
       import s.implicits._
-      val t = tokens($"text")
-      val lines = transform(
-        sequence(lit(0), floor((size(t) - 1) / lineTokens).cast("int")),
-        i => concat_ws(" ", slice(t, i * lineTokens + 1, lit(lineTokens))))
-      val relined = Tables.documents(s, dir)
-        .select($"doc_id", concat_ws("\n", lines).as("text"))
-      Repetition.dedupLinesWithinDoc(relined, "doc_id", "text")
+      Repetition.dedupLinesWithinDoc(relined(s, dir), "doc_id", "text")
         .select($"doc_id", $"text", $"n_lines", $"n_kept")
         .orderBy($"doc_id")
     }),

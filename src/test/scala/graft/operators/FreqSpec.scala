@@ -23,11 +23,12 @@ class FreqSpec extends SparkSpec {
   private def exactCounts(xs: Seq[String]): Map[String, Long] =
     xs.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
 
-  test("mgPartition: undercount-only, bounded error, heavy items survive") {
+  test("mgPartitionByGroupCounted over one group: MG laws hold") {
     for (seed <- 1 to 5) {
       val xs = skewed(seed, 4000)
       val cap = 32
-      val est = Freq.mgPartition(cap)(xs.iterator).toMap
+      val est = Freq.mgPartitionByGroupCounted(cap, 1)(xs.iterator.map(("", _)))
+        .collect { case (_, k, v, _) if k != null => k -> v }.toMap
       val exact = exactCounts(xs)
       val bound = xs.size.toLong / (cap + 1)
       assert(est.size <= cap)
@@ -83,10 +84,9 @@ class FreqSpec extends SparkSpec {
     val cap = 32
     val da = spark.createDataset(xs).toDF("item").repartition(4)
     val db = spark.createDataset(ys).toDF("item").repartition(4)
-    val merged = Freq.mergeMg(
-      Freq.mgCandidates(da, "item", cap),
-      Freq.mgCandidates(db, "item", cap), cap)
-      .as[(String, Long)].collect().toMap
+    def sk(df: org.apache.spark.sql.DataFrame) =
+      Map("" -> Freq.mgCandidates(df, "item", cap).as[(String, Long)].collect().toMap)
+    val merged = Freq.mergeMg(sk(da), sk(db), cap)("")
     val exact = exactCounts(xs ++ ys)
     val bound = (xs.size + ys.size).toLong / (cap + 1)
     assert(merged.size <= cap)
@@ -374,7 +374,7 @@ class FreqSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("mergeMgByGroup re-bounds each group by its OWN (cap+1)-th counter") {
+  test("mergeMg re-bounds each group by its OWN (cap+1)-th counter") {
     val xs = skewed(61, 4000).map(("A", _))
     val ys = skewed(62, 4000).map(("A", _))
     val small = Seq.fill(60)(("B", "hot")) ++ (1 to 50).map(i => ("B", s"b$i"))
@@ -382,11 +382,10 @@ class FreqSpec extends SparkSpec {
     def sk(rows: Seq[(String, String)]) = Freq.mgCandidatesByGroup(
       spark.createDataset(rows).toDF("g", "item").repartition(4),
       "g", "item", cap)
-      .select($"group", $"item", $"est")
-    val merged = Freq.mergeMgByGroup(sk(xs ++ small), sk(ys), cap)
       .as[(String, String, Long)].collect()
       .groupBy(_._1).map { case (g, rs) =>
         g -> rs.map(r => r._2 -> r._3).toMap }
+    val merged = Freq.mergeMg(sk(xs ++ small), sk(ys), cap)
     val exactA = exactCounts((xs ++ ys).map(_._2))
     val boundA = (xs.size + ys.size).toLong / (cap + 1)
     assert(merged("A").size <= cap)
@@ -505,9 +504,21 @@ class FreqSpec extends SparkSpec {
     assert(jobsRunBy(Checkpoints.readStore(spark, store)) == 0)
     val second = jobsRunBy(Freq.mergeBatchIntoHitterStore(batch, "item", 16, store))
     // 13 jobs while readStore inferred the store's schema with
-    // spark.read.parquet, one of them that inference
-    info(s"second merge: $second Spark jobs (13 with a schema-inference read)")
-    assert(second <= 12)
+    // spark.read.parquet, one of them that inference; 12 while the merge
+    // ran as a Spark plan
+    info(s"second merge: $second Spark jobs (12 with the merge as a Spark plan)")
+    assert(second <= 4)
+  }
+
+  test("a second merge into a group hitter store runs a bounded job count") {
+    val store = s"${java.nio.file.Files.createTempDirectory("mgg_jobs")}/store"
+    val rows = skewed(84, 2000).zipWithIndex.map { case (x, i) => (s"g${i % 3}", x) }
+    val batch = spark.createDataset(rows).toDF("g", "item").repartition(4)
+    Freq.mergeBatchIntoGroupHitterStore(batch, "g", "item", 16, store)
+    val second = jobsRunBy(
+      Freq.mergeBatchIntoGroupHitterStore(batch, "g", "item", 16, store))
+    info(s"second grouped merge: $second Spark jobs (12 with the merge as a Spark plan)")
+    assert(second <= 4)
   }
 
   test("exactTopK on real data matches the vocabulary-shuffle form") {
